@@ -7,8 +7,9 @@
 
 ``--ledgers-dir`` points at raw LedgerCloseMeta XDR files (one file per
 ledger — the reference's datastore layout, utils/main.go:981-984); the CLI
-runs the real bronze → silver decode and the same export pipelines the
-library exposes (plans/pipelines.py).  ``get_ledger_range_from_times``
+scans them, runs the real silver decode and the same export pipelines the
+library exposes (plans/pipelines.py), and prints the row count the write
+job observed.  ``get_ledger_range_from_times``
 takes ``--start-time/--end-time`` (RFC3339 or unix seconds) instead of a
 ledger range, mirroring cmd/get_ledger_range_from_times.go.
 
@@ -83,20 +84,28 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--cpus", type=int,
                     default=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
     args = ap.parse_args(argv)
+    if args.both and args.command == "export_ledger_entry_changes":
+        raise SystemExit(
+            "--both is not supported by export_ledger_entry_changes: JSONL "
+            "and parquet would share each <output>/<entity> directory"
+        )
 
     fmt = "both" if args.both else ("parquet" if args.parquet else "json")
     extra = _parse_extra_fields(args.extra_fields) or None
 
+    from pyspark.sql import functions as F
+
     from stellar_etl_spark.session import get_spark
-    from stellar_etl_spark.sources.bronze import (
-        decode_ledger_files,
-        read_ledger_files,
-    )
-    from stellar_etl_spark.sources import silver
+    from stellar_etl_spark.sources.bronze import read_ledger_files
 
     spark = get_spark("stellar-etl-cli", cpus=args.cpus)
     spark.sparkContext.setLogLevel("WARN")
-    bronze = decode_ledger_files(read_ledger_files(spark, args.ledgers_dir))
+    # silver parses the raw LedgerCloseMeta bytes itself (a superset of the
+    # bronze header parse, so corrupt files still fail the job): hand it the
+    # scan directly, with no Python decode in between
+    bronze = read_ledger_files(spark, args.ledgers_dir).select(
+        "sequence", F.col("content").alias("lcm_xdr")
+    )
 
     cmd, out = args.command, args.output
     s, e = args.start_ledger, args.end_ledger
@@ -134,11 +143,11 @@ def main(argv: list[str] | None = None) -> None:
         spark.stop()
         return
 
-    df = _dispatch(bronze)
-    if df is not None:
-        # PrintTransformStats parity (cmd/command_utils.go:90-103)
-        n = df.count()
-        print(json.dumps({"command": cmd, "rows": n, "output": out, "fmt": fmt}))
+    rows = _dispatch(bronze)
+    if rows is not None:
+        # PrintTransformStats parity (cmd/command_utils.go:90-103), counted
+        # by the write job
+        print(json.dumps({"command": cmd, "rows": rows, "output": out, "fmt": fmt}))
     spark.stop()
 
 

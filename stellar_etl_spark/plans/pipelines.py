@@ -5,7 +5,10 @@ Each pipeline = silver-input DataFrames → transform (transforms/*) → sink
 (sources/sinks).  All take a ledger range (the universal ``--start-ledger/
 --end-ledger`` contract, internal/utils/main.go:231-253) applied as a
 partition-prunable filter, and write JSONL and/or Parquet exactly like
-``ExportEntry``/``WriteParquet`` (cmd/command_utils.go).
+``ExportEntry``/``WriteParquet`` (cmd/command_utils.go) through the one
+observed sink, ``sources.sinks.export``.  Each returns the rows it wrote,
+counted by the write job itself: an int for a single-table export,
+``{name: rows}`` for the multi-table ones.
 
 Shape notes: every pipeline is one Spark job; the range filter reaches the
 scan; only the aggregation/explode steps shuffle (see tests/test_plans.py).
@@ -20,7 +23,7 @@ from pyspark.sql import functions as F
 
 from stellar_etl_spark.operators.compaction import compact_changes
 from stellar_etl_spark.operators.ranges import ledger_range_for_times
-from stellar_etl_spark.sources.sinks import export_jsonl, export_parquet
+from stellar_etl_spark.sources.sinks import export
 from stellar_etl_spark.streaming.micro_batch import DEFAULT_BATCH_LEDGERS, batch_id_col
 from stellar_etl_spark.transforms import (
     transform_asset,
@@ -46,6 +49,9 @@ def _range(df: DataFrame, start: int, end: int, col: str = "ledger_sequence") ->
     return df.where(cond)
 
 
+_SUFFIX = {"json": ".jsonl", "parquet": ".parquet"}
+
+
 def _sink(
     df: DataFrame,
     out_dir: str,
@@ -53,17 +59,17 @@ def _sink(
     fmt: str = "json",
     extra_fields: dict[str, object] | None = None,
     mode: str = "overwrite",
-) -> DataFrame:
+) -> int:
+    """Write ``<out_dir>/<name>.jsonl`` and/or ``.parquet``; returns the rows
+    observed by the first write."""
     path = os.path.join(out_dir, name)
-    if fmt in ("json", "both"):
-        export_jsonl(df, path + ".jsonl", extra_fields, mode=mode)
-    if fmt in ("parquet", "both"):
-        export_parquet(df, path + ".parquet", extra_fields, mode=mode)
-    return df
+    formats = ("json", "parquet") if fmt == "both" else (fmt,)
+    rows = [export(df, path + _SUFFIX[f], f, extra_fields, mode) for f in formats]
+    return rows[0]
 
 
 def export_ledgers(ledgers, transactions, out_dir, start=0, end=0, fmt="json",
-                   strict=False, extra_fields=None, mode="overwrite") -> DataFrame:
+                   strict=False, extra_fields=None, mode="overwrite") -> int:
     """cmd/export_ledgers.go equivalent (SURVEY.md §3.1)."""
     out = transform_ledger(
         _range(ledgers, start, end, "sequence"), transactions, strict=strict
@@ -73,61 +79,60 @@ def export_ledgers(ledgers, transactions, out_dir, start=0, end=0, fmt="json",
 
 def export_transactions(transactions, ledgers, out_dir, start=0, end=0,
                         fmt="json", strict=False, extra_fields=None,
-                        mode="overwrite") -> DataFrame:
+                        mode="overwrite") -> int:
     out = transform_transaction(_range(transactions, start, end), ledgers, strict)
     return _sink(out, out_dir, "transactions", fmt, extra_fields, mode=mode)
 
 
 def export_ledger_transactions(transactions, out_dir, start=0, end=0,
                                fmt="json", extra_fields=None,
-                               mode="overwrite") -> DataFrame:
+                               mode="overwrite") -> int:
     out = transform_ledger_transaction(_range(transactions, start, end))
     return _sink(out, out_dir, "ledger_transactions", fmt, extra_fields, mode=mode)
 
 
 def export_operations(operations, transactions, out_dir, start=0, end=0,
-                      fmt="json", extra_fields=None, mode="overwrite") -> DataFrame:
+                      fmt="json", extra_fields=None, mode="overwrite") -> int:
     out = transform_operation(_range(operations, start, end), transactions)
     return _sink(out, out_dir, "operations", fmt, extra_fields, mode=mode)
 
 
 def export_effects(operations, transactions, out_dir, start=0, end=0,
-                   fmt="json", extra_fields=None, mode="overwrite") -> DataFrame:
+                   fmt="json", extra_fields=None, mode="overwrite") -> int:
     out = transform_effects(_range(operations, start, end), transactions)
     return _sink(out, out_dir, "effects", fmt, extra_fields, mode=mode)
 
 
 def export_trades(operations, ledgers, out_dir, start=0, end=0,
-                  fmt="json", extra_fields=None, mode="overwrite") -> DataFrame:
+                  fmt="json", extra_fields=None, mode="overwrite") -> int:
     out = transform_trade(_range(operations, start, end), ledgers)
     return _sink(out, out_dir, "trades", fmt, extra_fields, mode=mode)
 
 
 def export_assets(operations, out_dir, start=0, end=0, fmt="json",
-                  extra_fields=None, mode="overwrite") -> DataFrame:
+                  extra_fields=None, mode="overwrite") -> int:
     out = transform_asset(_range(operations, start, end))
     return _sink(out, out_dir, "assets", fmt, extra_fields, mode=mode)
 
 
 def export_contract_events(events, out_dir, start=0, end=0, fmt="json",
-                           extra_fields=None, mode="overwrite") -> DataFrame:
+                           extra_fields=None, mode="overwrite") -> int:
     out = transform_contract_events(_range(events, start, end))
     return _sink(out, out_dir, "contract_events", fmt, extra_fields, mode=mode)
 
 
 def export_token_transfers(events, out_dir, start=0, end=0, fmt="json",
-                           extra_fields=None, mode="overwrite") -> DataFrame:
+                           extra_fields=None, mode="overwrite") -> int:
     out = transform_token_transfer(_range(events, start, end))
     return _sink(out, out_dir, "token_transfers", fmt, extra_fields, mode=mode)
 
 
 def export_orderbooks(offers, out_dir, fmt="parquet",
-                      mode="overwrite") -> dict[str, DataFrame]:
+                      mode="overwrite") -> dict[str, int]:
     """cmd/export_orderbooks.go equivalent: the FNV star schema snapshot."""
     star = transform_offer_normalized(offers)
-    for name, df in star.items():
-        _sink(df, out_dir, name, fmt, mode=mode)
-    return star
+    return {name: _sink(df, out_dir, name, fmt, mode=mode)
+            for name, df in star.items()}
 
 
 # The 9 per-entity export-type flags (utils/main.go:278-288, default all).
@@ -146,7 +151,7 @@ def export_ledger_entry_changes(
     export_types: list[str] | None = None,
     fmt: str = "json",
     mode: str = "overwrite",
-) -> dict[str, DataFrame]:
+) -> dict[str, int]:
     """cmd/export_ledger_entry_changes.go equivalent (SURVEY.md §3.3):
     range → 64-ledger batches → per-(batch, key) compaction → per-entity
     routing → one batch-partitioned output dir per entity.
@@ -154,6 +159,8 @@ def export_ledger_entry_changes(
     The whole fan-out is ONE logical plan per entity over a shared compacted
     change log; Spark writes each entity's every batch in a single job
     (partitionBy batch), unlike the reference's sequential per-batch loop.
+    Each entity is one ``<out_dir>/<entity>`` directory, so ``fmt`` is
+    "json" or "parquet", not "both".
     """
     ranged = _range(changes, start, end).withColumn(
         "batch_id", batch_id_col(batch_size=batch_size)
@@ -164,17 +171,10 @@ def export_ledger_entry_changes(
         "change_type", F.col("effective_change_type")
     )
     routed = route_changes(compacted)
-    wanted = export_types or DEFAULT_EXPORT_TYPES
-    out: dict[str, DataFrame] = {}
-    for name in wanted:
-        out[name] = routed[name]
-        path = os.path.join(out_dir, name)
-        writer = routed[name].write.mode(mode)
-        if fmt == "json":
-            writer.option("ignoreNullFields", "false").json(path)
-        else:
-            writer.parquet(path)
-    return out
+    return {
+        name: export(routed[name], os.path.join(out_dir, name), fmt, mode=mode)
+        for name in export_types or DEFAULT_EXPORT_TYPES
+    }
 
 
 def get_ledger_range_from_times(ledgers, start_time, end_time) -> DataFrame:

@@ -10,23 +10,17 @@ from stellar_etl_spark.sources.bronze import (
 )
 from stellar_etl_spark.sources.sinks import (
     batch_dir_name,
+    export,
     export_batches,
-    export_jsonl,
-    export_parquet,
-    export_with_stats,
-    transform_stats,
 )
 
 __all__ = [
     "batch_dir_name",
     "decode_ledger_files",
+    "export",
     "export_batches",
-    "export_jsonl",
-    "export_parquet",
-    "export_with_stats",
     "fake_lcm_decoder",
     "read_ledger_files",
     "real_lcm_decoder",
-    "transform_stats",
     "write_bronze",
 ]

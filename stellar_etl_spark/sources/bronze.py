@@ -2,15 +2,19 @@
 BufferedStorageBackend, internal/utils/main.go:990-1019, layout 1 ledger/file
 and 64 000 files/partition, utils/main.go:981-984).
 
-Spark shape: ``binaryFile`` scan over the object-store listing → Arrow-batched
-decode in ``mapInPandas`` → partitioned bronze parquet.  The reference's
-prefetch workers / ring buffer (utils/main.go:239-240) are replaced by Spark
-task parallelism; its retry loop by task retries.
+Spark shape: ``binaryFile`` scan over the object-store listing (the ledger
+sequence comes from the file name) → optional Arrow-batched header decode in
+``mapInPandas`` → partitioned bronze parquet.  The reference's prefetch
+workers / ring buffer (utils/main.go:239-240) are replaced by Spark task
+parallelism; its retry loop by task retries.
 
-The real LedgerCloseMeta XDR decode needs the stellar SDK, which is not in
-this container — the decode step is therefore pluggable: pass any callable
-``bytes -> dict``; ``fake_lcm_decoder`` is the deterministic stand-in used by
-tests (plumbing — schema, batching, partitioning — is real and tested).
+The silver decoders (sources/silver.py) parse the raw LedgerCloseMeta bytes
+themselves, so an export needs only :func:`read_ledger_files`; the CLI hands
+silver the scan directly.  :func:`decode_ledger_files` adds header columns
+(close time, protocol version, tx count) for bronze tables.  Its default
+decoder is the in-repo RFC 4506 parser (sources/xdr.py); the decoder is a
+plain ``bytes -> dict`` callable, and ``fake_lcm_decoder`` derives stable
+values from arbitrary bytes for plumbing tests.
 """
 
 from __future__ import annotations

@@ -1,50 +1,55 @@
 """Export sinks (reference: cmd/command_utils.go).
 
-- JSONL writer (``ExportEntry``, command_utils.go:55-87) with ``--extra-fields``
-  literals
-- Parquet writer (``WriteParquet``, command_utils.go:162-180) — the widening
+Every export goes through ONE observed sink, :func:`export`: a single
+``DataFrameWriter`` call (JSONL or parquet) with ``df.observe`` wrapped
+around it, so the write job itself yields the row count.  This is the
+reference's ``ExportEntry`` + ``PrintTransformStats`` pairing
+(command_utils.go:55-103): rows are counted while they are written, never
+by reading the output a second time.
+
+- JSONL (``ExportEntry``, command_utils.go:55-87): explicit nulls and the
+  ``--extra-fields`` literals
+- Parquet (``WriteParquet``, command_utils.go:162-180): the widening
   conversions live in the transforms' schemas, not here
 - batch naming ``{start}-{end}-{type}`` (command_utils.go:105-111) as
-  partitioned output directories
-- transform stats (``PrintTransformStats``, command_utils.go:90-103)
+  partitioned output directories (:func:`export_batches`, the streaming
+  change sink)
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
-def _with_extras(df: DataFrame, extra_fields: dict[str, object] | None) -> DataFrame:
+def export(
+    df: DataFrame,
+    path: str,
+    fmt: str,
+    extra_fields: dict[str, object] | None = None,
+    mode: str = "overwrite",
+) -> int:
+    """Write ``df`` to ``path`` as ``fmt`` ("json" or "parquet") and return
+    the rows written, observed on the write job itself.
+
+    JSON is newline-delimited, one object per row, with
+    ignoreNullFields=False to match the reference's explicit nulls
+    (command_utils.go:56-66 keeps int64-safe values; Spark writes longs as
+    JSON numbers losslessly).  ``extra_fields`` become literal columns on
+    every row.  ``mode="append"`` is the streaming micro-batch contract."""
+    if fmt not in ("json", "parquet"):
+        raise ValueError(f"export fmt must be 'json' or 'parquet', got {fmt!r}")
+    obs = Observation()
     for k, v in (extra_fields or {}).items():
         df = df.withColumn(k, F.lit(v))
-    return df
-
-
-def export_jsonl(
-    df: DataFrame,
-    path: str,
-    extra_fields: dict[str, object] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Newline-delimited JSON, one object per row.  ignoreNullFields=False
-    matches the reference's explicit nulls (command_utils.go:56-66 keeps
-    int64-safe values; Spark writes longs as JSON numbers losslessly).
-    ``mode="append"`` is the streaming micro-batch contract."""
-    _with_extras(df, extra_fields).write.mode(mode).option(
-        "ignoreNullFields", "false"
-    ).json(path)
-
-
-def export_parquet(
-    df: DataFrame,
-    path: str,
-    extra_fields: dict[str, object] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    _with_extras(df, extra_fields).write.mode(mode).parquet(path)
+    writer = df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(mode)
+    if fmt == "json":
+        writer.option("ignoreNullFields", "false").json(path)
+    else:
+        writer.parquet(path)
+    return obs.get["rows"]
 
 
 def batch_dir_name(start: int, end: int, entity: str) -> str:
@@ -79,62 +84,6 @@ def export_batches(
     )
     path = os.path.join(out_dir, entity)
     writer.json(path) if fmt == "json" else writer.parquet(path)
-
-
-def transform_stats(attempted: DataFrame, success: object) -> dict[str, int]:
-    """attempted/successful/failed counts (``PrintTransformStats``,
-    command_utils.go:90-103) in ONE aggregate job: ``success`` is a boolean
-    Column or column name over ``attempted``.  (The legacy two-frame form —
-    a pre-split successful subset costing a second count job — was removed;
-    pass the predicate instead, or use :func:`export_with_stats` to fold the
-    stats into the export job itself.)"""
-    pred = F.col(success) if isinstance(success, str) else success
-    row = attempted.agg(
-        F.count(F.lit(1)).alias("attempted"),
-        F.coalesce(F.sum(pred.cast("int")), F.lit(0)).alias("successful"),
-    ).first()
-    return {
-        "attempted": row["attempted"],
-        "successful": row["successful"],
-        "failed": row["attempted"] - row["successful"],
-    }
-
-
-def export_with_stats(
-    df: DataFrame,
-    path: str,
-    success: object,
-    fmt: str = "json",
-    extra_fields: dict[str, object] | None = None,
-    mode: str = "overwrite",
-) -> dict[str, int]:
-    """Export the successful subset AND produce transform stats in ONE job.
-
-    ``df.observe`` attaches the attempted/successful aggregates to the scan
-    *before* the success filter, so the write job itself yields the stats —
-    no second pass over the data (the reference's ExportEntry +
-    PrintTransformStats pairing, command_utils.go:55-103, without its
-    re-read).  ``success`` is a boolean Column or column name over ``df``.
-    """
-    from pyspark.sql import Observation
-
-    pred = F.col(success) if isinstance(success, str) else success
-    obs = Observation()
-    observed = df.observe(
-        obs,
-        F.count(F.lit(1)).alias("attempted"),
-        F.coalesce(F.sum(pred.cast("int")), F.lit(0)).alias("successful"),
-    ).where(pred)
-    out = _with_extras(observed, extra_fields).write.mode(mode).option(
-        "ignoreNullFields", "false"
-    )
-    out.json(path) if fmt == "json" else out.parquet(path)
-    got = obs.get
-    return {
-        "attempted": got["attempted"],
-        "successful": got["successful"],
-        "failed": got["attempted"] - got["successful"],
-    }
 
 
 def compact_small_files(

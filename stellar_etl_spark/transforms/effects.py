@@ -119,22 +119,17 @@ def _effect_dyn(kind_col: Column, address: Column, details: Column) -> Column:
     )
 
 
-def _detail_ctx(
-    detail_fields: frozenset | None,
-    detail_types: tuple[tuple[str, str], ...] | None,
-):
+def _detail_ctx(detail_types: tuple[tuple[str, str], ...] | None):
     """Details-building context for one _effects_array_expr build: returns
     ``(j, empty_details, details_ddl)``.
 
-    Three modes, keyed on the two knobs (threaded explicitly — round-10:
-    the keep-set used to ride in a module global that could leak across
-    concurrent expression builds):
+    Two modes, keyed on ``detail_types`` (passed explicitly, never through
+    a module global, so concurrent expression builds cannot leak into each
+    other):
 
-    - full (both None): ``j(**kv)`` serializes every key to JSON with
+    - full (None): ``j(**kv)`` serializes every key to JSON with
       ignoreNullFields — the reference's details_json, byte-identical.
-    - pruned JSON (``detail_fields``): keys outside the set are dropped at
-      expression-BUILD time; kept keys serialize exactly as in full mode.
-    - struct (``detail_types``, a (name, ddl_type) tuple): ``j(**kv)``
+    - struct (a (name, ddl_type) tuple): ``j(**kv)``
       emits a typed STRUCT of exactly these fields (missing keys null) —
       no JSON serialization at all.  Field values equal what
       ``from_json(details_json, schema)[name]`` returns on the full build:
@@ -156,13 +151,7 @@ def _detail_ctx(
         ddl = "struct<" + ",".join(f"{n}:{t}" for n, t in detail_types) + ">"
         return j, j(), ddl
 
-    keep = detail_fields
-
     def j(**kv) -> Column:
-        if keep is not None:
-            kv = {k: v for k, v in kv.items() if k in keep}
-            if not kv:
-                return F.lit("{}")
         return F.to_json(
             F.struct(*[v.alias(k) for k, v in kv.items()]),
             {"ignoreNullFields": "true"},
@@ -196,7 +185,6 @@ def _effects_array_expr(
     present: frozenset | None = None,
     has_changes: bool = True,
     has_atoms: bool = True,
-    detail_fields: frozenset | None = None,
     detail_types: tuple[tuple[str, str], ...] | None = None,
 ) -> Column:
     """The full per-operation effects array as ONE unresolved column
@@ -217,17 +205,13 @@ def _effects_array_expr(
     interpreted) to just the families the data can hit.  transform_effects
     derives the pruning context with one column-pruned probe aggregate.
 
-    ``detail_fields`` (None = full): build details_json with only these
-    keys — for callers that extract a known field subset out of the JSON
-    and never surface the blob itself (transform_effects' knob).
-
     ``detail_types`` (None = JSON details): emit details as a typed STRUCT
     of exactly these (name, ddl_type) fields instead of a JSON string —
     kills the serialize-then-parse round trip for callers that consume a
     fixed field set (see _detail_ctx for the value-equivalence argument)."""
     return _effects_array_expr_impl(
         changes_type, atoms_type, present, has_changes, has_atoms,
-        detail_fields, detail_types,
+        detail_types,
     )
 
 
@@ -237,10 +221,9 @@ def _effects_array_expr_impl(
     present: frozenset | None,
     has_changes: bool,
     has_atoms: bool,
-    detail_fields: frozenset | None = None,
     detail_types: tuple[tuple[str, str], ...] | None = None,
 ) -> Column:
-    _j, _empty_details, _details_ddl = _detail_ctx(detail_fields, detail_types)
+    _j, _empty_details, _details_ddl = _detail_ctx(detail_types)
     body = F.col("body")
     source = F.coalesce(F.col("source_account"), F.col("_tx_source"))
     t = F.col("type")
@@ -319,9 +302,7 @@ def _effects_array_expr_impl(
         effect addressed to the op source.  The liquidity_pool sub-object
         carries the pool id; the reserve/fee details need the pool entry
         delta from changes and are filled by the change-driven pass.
-        Routed through _j so prune/struct modes handle each key
-        independently (round-10: the old direct to_json was all-or-nothing
-        under a partial keep-set)."""
+        Routed through _j so struct mode handles each key independently."""
         return _effect(
             "liquidity_pool_trade",
             source,
@@ -1437,7 +1418,6 @@ def transform_effects(
     transactions: DataFrame,
     ledgers: DataFrame | None = None,
     prune: bool = True,
-    detail_fields: list[str] | None = None,
     detail_types: list[tuple[str, str]] | None = None,
 ) -> DataFrame:
     """One row per emitted effect; only successful txs emit (effects.go:55-57).
@@ -1452,17 +1432,11 @@ def transform_effects(
     calling) — the full 52-family expression is built unconditionally, the
     same path streaming inputs always take.
 
-    ``detail_fields`` (None = the reference's full details, the default):
-    build each effect's details_json with only these top-level keys — for
-    callers that parse a fixed field subset out of the JSON and never
-    surface the blob itself.  The kept fields' values are bit-identical
-    to the full build; only key presence changes.
-
     ``detail_types`` (None = JSON details): emit the ``details`` column as
     a typed STRUCT of exactly these (name, ddl_type) fields instead of a
     JSON string — no serialization, no parse-back.  Each field's value
     equals ``from_json(details, "name ddl_type")[name]`` on the full
-    build (see _detail_ctx).  Takes precedence over ``detail_fields``.
+    build (see _detail_ctx).
     """
     tx_src = transactions.select(
         F.col("ledger_sequence").alias("_ls"),
@@ -1510,7 +1484,6 @@ def transform_effects(
         present,
         has_changes,
         has_atoms,
-        None if detail_fields is None else frozenset(detail_fields),
         None if detail_types is None else tuple(tuple(ft) for ft in detail_types),
     )
     source = F.coalesce(F.col("source_account"), F.col("_tx_source"))

@@ -13,6 +13,9 @@ Headers come from the ledgers goldens' ``ledger_header`` blobs where the
 range overlaps (30822015-25); for 30820015 (the one-ledger golden range)
 only seq/close_time are known, so a header carrying exactly those is
 synthesized — no downstream transform reads other header fields.
+
+``build_ledgers`` writes small synthetic ledgers with the repo's own
+encoder, for tests that need ledger files without the goldens.
 """
 
 from __future__ import annotations
@@ -143,3 +146,69 @@ def write_golden_ledger_dir(path: str) -> dict[int, bytes]:
         with open(os.path.join(path, f"{seq}.xdr"), "wb") as f:
             f.write(raw)
     return lcms
+
+
+def build_ledgers(out_dir: str, n: int) -> None:
+    """Write ``n`` encoder-built busy ledgers (sequences 2..n+1, 5 tx x 3 ops
+    of payments and an offer, V0/V1 alternating) as ``<seq>.xdr`` files."""
+    from stellar_etl_spark.sources.xdr import (
+        LedgerHeader,
+        encode_ledger_close_meta_v0,
+        encode_ledger_close_meta_v1,
+    )
+
+    a, b = b"\x01" * 32, b"\x02" * 32
+    usd = {"type": "credit_alphanum4", "code": "USD", "issuer": b}
+    payment = {
+        "source": None,
+        "type": 1,
+        "body": {
+            "destination": {"ed25519": b, "id": None},
+            "asset": usd,
+            "amount": 150_000_000,
+        },
+    }
+    offer = {
+        "source": {"ed25519": b, "id": None},
+        "type": 3,
+        "body": {
+            "selling": usd,
+            "buying": {"type": "native"},
+            "amount": 80_000_000,
+            "price": (1, 4),
+            "offer_id": 42,
+        },
+    }
+    sig = [{"hint": b"\x01\x02\x03\x04", "signature": b"\xaa" * 64}]
+
+    def env(seq_num: int) -> dict:
+        return {
+            "type": "v1",
+            "tx": {
+                "source": {"ed25519": a, "id": None},
+                "fee": 100,
+                "seq_num": seq_num,
+                "preconditions": {"time_bounds": {"min_time": 5, "max_time": 50}},
+                "memo": {"type": "text", "text": "bench"},
+                "operations": [payment, offer, payment],
+                "soroban_data": None,
+            },
+            "signatures": sig,
+        }
+
+    # 5 tx x 3 ops per ledger — a busy-ledger shape
+    for seq in range(2, 2 + n):
+        h = LedgerHeader(
+            ledger_version=20 + seq % 2,
+            close_time=1_704_067_200 + seq * 5,
+            ledger_seq=seq,
+            total_coins=10**12,
+        )
+        envs = [env(100 + i) for i in range(5)]
+        raw = (
+            encode_ledger_close_meta_v0(h, envs)
+            if seq % 2 == 0
+            else encode_ledger_close_meta_v1(h, [envs])
+        )
+        with open(os.path.join(out_dir, f"{seq}.xdr"), "wb") as fh:
+            fh.write(raw)

@@ -7,30 +7,34 @@ from __future__ import annotations
 import glob
 import json
 import os
+import shutil
 import subprocess
 import sys
 
 import pytest
+
+from golden_lcm import build_ledgers
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture(scope="module")
 def xdr_dir(tmp_path_factory):
-    sys.path.insert(0, os.path.join(REPO, "tools"))
-    from bench_decode import build_ledgers
-
     d = tmp_path_factory.mktemp("cli_xdr")
     build_ledgers(str(d), 6)
     return str(d)
 
 
-def _run(args: list[str]) -> str:
+def _cli(args: list[str]) -> subprocess.CompletedProcess:
     env = dict(os.environ, SPARK_GRAFT_CPUS="4")
-    res = subprocess.run(
+    return subprocess.run(
         [sys.executable, "-m", "stellar_etl_spark", *args],
         capture_output=True, text=True, cwd=REPO, env=env, timeout=300,
     )
+
+
+def _run(args: list[str]) -> str:
+    res = _cli(args)
     assert res.returncode == 0, res.stderr[-2000:]
     return res.stdout
 
@@ -52,6 +56,41 @@ class TestCli:
         assert all(r["network"] == "testnet" for r in rows)
         # per-ledger counts computed from the decoded tx set (5 tx x 3 ops)
         assert all(r["tx_set_operation_count"] == "15" for r in rows)
+
+    def test_empty_range_prints_zero_rows(self, xdr_dir, tmp_path):
+        """The row count comes from the write job; a range that selects no
+        ledger still runs that job and reports 0."""
+        out = _run([
+            "export_transactions", "--ledgers-dir", xdr_dir,
+            "--output", str(tmp_path), "-s", "100", "-e", "200",
+        ])
+        assert json.loads(out.strip().splitlines()[-1])["rows"] == 0
+
+    def test_truncated_ledger_file_fails_loudly(self, xdr_dir, tmp_path):
+        """A truncated ledger file fails the export with the XDR error and
+        no row count, now that silver parses the raw scan directly."""
+        d = str(tmp_path / "ledgers")
+        shutil.copytree(xdr_dir, d)
+        victim = os.path.join(d, sorted(os.listdir(d))[0])
+        raw = open(victim, "rb").read()
+        with open(victim, "wb") as fh:
+            fh.write(raw[: len(raw) // 2])
+        res = _cli([
+            "export_ledgers", "--ledgers-dir", d,
+            "--output", str(tmp_path / "out"),
+        ])
+        assert res.returncode != 0
+        assert "XdrError" in res.stderr or "truncated" in res.stderr
+        assert '"rows"' not in res.stdout
+
+    def test_changes_reject_both(self, tmp_path):
+        """Both formats would collide on <output>/<entity>: --both must be
+        refused up front, not silently reduced to one format."""
+        from stellar_etl_spark.__main__ import main
+
+        with pytest.raises(SystemExit, match="--both"):
+            main(["export_ledger_entry_changes", "--both", "--ledgers-dir",
+                  str(tmp_path), "--output", str(tmp_path / "out")])
 
     @pytest.mark.slow
     def test_streamed_changes_equal_batch(self, xdr_dir, tmp_path):

@@ -47,12 +47,47 @@ class TestPipelines:
         assert "node_id" in by_seq[2]
 
     def test_export_trades_range_filter(self, spark, tmp_path):
-        out = export_trades(
+        written = export_trades(
             fx.operations_df(spark), fx.ledgers_df(spark), str(tmp_path),
             start=3, end=3,
         )
         rows = _read_jsonl(str(tmp_path / "trades.jsonl" / "part-*"))
-        assert len(rows) == out.count() == 2
+        # the returned count is the one the write job observed
+        assert len(rows) == written == 2
+
+    def test_export_runs_no_job_after_write(self, spark, tmp_path, monkeypatch):
+        """The row count rides on the write job: once the write returns, the
+        export finishes without starting another Spark job."""
+        from pyspark.sql import DataFrameWriter
+
+        sc = spark.sparkContext
+        group = "sink-contract"
+
+        def jobs() -> set[int]:
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            return set(sc.statusTracker().getJobIdsForGroup(group))
+
+        seen = {}
+        write_json = DataFrameWriter.json
+
+        def recording_json(self, *args, **kwargs):
+            write_json(self, *args, **kwargs)
+            seen["after_write"] = jobs()
+
+        monkeypatch.setattr(DataFrameWriter, "json", recording_json)
+        sc.setJobGroup(group, "export_trades")
+        try:
+            written = export_trades(
+                fx.operations_df(spark), fx.ledgers_df(spark), str(tmp_path),
+                start=3, end=3,
+            )
+            after_export = jobs()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert written == 2
+        assert seen["after_write"]
+        assert after_export == seen["after_write"]
 
     def test_export_changes_batched_entities(self, spark, tmp_path):
         out = export_ledger_entry_changes(
@@ -65,6 +100,7 @@ class TestPipelines:
         )
         accounts = _read_jsonl(str(tmp_path / "accounts" / "part-*"))
         assert {a["account_id"] for a in accounts} == {fx.ACCOUNT_A, fx.ACCOUNT_B}
+        assert out["accounts"] == len(accounts)
         # nonce contract-data entry dropped by the transform
         cd = _read_jsonl(str(tmp_path / "contract_data" / "part-*"))
         assert len(cd) == 1

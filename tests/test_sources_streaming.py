@@ -15,11 +15,10 @@ from stellar_etl_spark.operators.compaction import compact_changes
 from stellar_etl_spark.sources import (
     batch_dir_name,
     decode_ledger_files,
+    export,
     export_batches,
-    export_jsonl,
     fake_lcm_decoder,
     read_ledger_files,
-    transform_stats,
     write_bronze,
 )
 from stellar_etl_spark.sources.bronze import read_bronze
@@ -79,12 +78,12 @@ class TestSinks:
     def test_export_jsonl_extra_fields(self, spark, tmp_path):
         df = spark.createDataFrame([(1, "a"), (2, None)], "id long, v string")
         out = str(tmp_path / "out")
-        export_jsonl(df, out, extra_fields={"network": "testnet"})
+        written = export(df, out, "json", extra_fields={"network": "testnet"})
         lines = []
         for f in glob.glob(out + "/part-*"):
             with open(f) as fh:
                 lines += [json.loads(line) for line in fh if line.strip()]
-        assert len(lines) == 2
+        assert len(lines) == written == 2
         assert all(line["network"] == "testnet" for line in lines)
         # explicit nulls preserved (ExportEntry parity)
         assert any("v" in line and line["v"] is None for line in lines)
@@ -122,32 +121,6 @@ class TestSinks:
         got = spark.read.json(str(tmp_path / "accounts"))
         rows = {(r["_batch"], r["v"]) for r in got.collect()}
         assert rows == {(0, "a"), (1, "b"), (2, "c")}  # 0 kept, 1 not doubled
-
-    def test_transform_stats_single_pass(self, spark):
-        from pyspark.sql import functions as F
-
-        att = spark.range(10).withColumn("ok", F.col("id") < 7)
-        assert transform_stats(att, success="ok") == {
-            "attempted": 10,
-            "successful": 7,
-            "failed": 3,
-        }
-        assert transform_stats(att, success=F.col("id") < 3) == {
-            "attempted": 10,
-            "successful": 3,
-            "failed": 7,
-        }
-
-    def test_export_with_stats_one_job(self, spark, tmp_path):
-        from pyspark.sql import functions as F
-
-        from stellar_etl_spark.sources import export_with_stats
-
-        df = spark.range(10).withColumn("ok", F.col("id") % 2 == 0)
-        stats = export_with_stats(df, str(tmp_path / "out"), "ok")
-        assert stats == {"attempted": 10, "successful": 5, "failed": 5}
-        back = spark.read.json(str(tmp_path / "out"))
-        assert back.count() == 5
 
 
 class TestStreaming:

@@ -441,34 +441,6 @@ class TestChangesFamily:
 
 
 class TestEffects:
-    def test_detail_fields_keeps_requested_values(self, data):
-        """detail_fields builds details_json with only the requested keys;
-        the kept keys' parsed values must equal the full build's, row for
-        row (the effects_fanout query-edge contract)."""
-        import json
-
-        fields = ["amount", "asset_type", "asset_code", "starting_balance",
-                  "name", "new_seq"]
-        full = transform_effects(
-            data["operations"], data["transactions"]
-        ).collect()
-        pruned = transform_effects(
-            data["operations"], data["transactions"], detail_fields=fields
-        ).collect()
-        assert len(full) == len(pruned) > 0
-        fm = {r["id"]: r for r in full}
-        for r in pruned:
-            fr = fm[r["id"]]
-            # non-details columns identical
-            for c in ("operation_id", "index", "type", "type_string",
-                      "address", "ledger_sequence", "operation_type"):
-                assert r[c] == fr[c], (r["id"], c)
-            pd_, fd = json.loads(r["details"]), json.loads(fr["details"])
-            # pruned keys ⊆ requested; kept values identical to full build
-            assert set(pd_) <= set(fields), (r["id"], set(pd_) - set(fields))
-            for k in fields:
-                assert pd_.get(k) == fd.get(k), (r["id"], k)
-
     def test_detail_types_struct_matches_parsed_json(self, data):
         """detail_types (round-10): details arrives as a typed struct whose
         field values equal parsing the full build's details_json with the
