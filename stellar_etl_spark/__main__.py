@@ -26,6 +26,10 @@ import os
 import sys
 
 
+# the commands whose pipeline takes no --start-ledger/--end-ledger range
+UNRANGED = ("export_orderbooks", "get_ledger_range_from_times")
+
+
 def _parse_extra_fields(pairs: list[str]) -> dict[str, str]:
     out = {}
     for p in pairs:
@@ -98,7 +102,14 @@ def main(argv: list[str] | None = None) -> None:
     from stellar_etl_spark.session import get_spark
     from stellar_etl_spark.sources.bronze import read_ledger_files
 
-    spark = get_spark("stellar-etl-cli", cpus=args.cpus)
+    # A CLI process lives seconds, so tiered C2's server-grade compiles
+    # never pay back: the JIT compiler threads, mostly C2, took ~60% of the
+    # JVM's CPU in an export.  C1 alone compiles cheaply; the library
+    # session, long-lived enough to profit from C2, keeps it (session.py).
+    spark = get_spark("stellar-etl-cli", cpus=args.cpus, extra_conf={
+        "spark.driver.extraJavaOptions":
+            "-XX:ReservedCodeCacheSize=1g -XX:TieredStopAtLevel=1",
+    })
     spark.sparkContext.setLogLevel("WARN")
     # silver parses the raw LedgerCloseMeta bytes itself (a superset of the
     # bronze header parse, so corrupt files still fail the job): hand it the
@@ -156,9 +167,13 @@ def _dispatch_cmd(cmd, bronze, spark, args, out, s, e, fmt, extra, mode):
 
     from pyspark.sql import functions as F
 
-    from stellar_etl_spark.plans.pipelines import EXPORT_PIPELINES
+    from stellar_etl_spark.plans.pipelines import EXPORT_PIPELINES, _range
     from stellar_etl_spark.sources import silver
 
+    if cmd not in UNRANGED:
+        # the pipeline keeps only [s, e]: drop the other ledgers on the
+        # file-name sequence before silver parses them in Python
+        bronze = _range(bronze, s, e, "sequence")
     types = args.export_types.split(",") if args.export_types else None
     extra_kw = {"mode": mode}
     if cmd == "export_ledgers":

@@ -9,6 +9,7 @@ contract/pool keys, trustline.go:45): payload = version_byte || data || CRC16
 from __future__ import annotations
 
 import base64
+import binascii
 
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
@@ -22,12 +23,8 @@ VERSION_CLAIMABLE_BALANCE = 1 << 3  # 'B'
 
 
 def _crc16_xmodem(data: bytes) -> int:
-    crc = 0
-    for b in data:
-        crc ^= b << 8
-        for _ in range(8):
-            crc = ((crc << 1) ^ 0x1021) & 0xFFFF if crc & 0x8000 else (crc << 1) & 0xFFFF
-    return crc
+    # CRC-CCITT (XModem): poly 0x1021, init 0 — what binascii.crc_hqx computes
+    return binascii.crc_hqx(data, 0)
 
 
 def encode_strkey(version: int, data: bytes) -> str:

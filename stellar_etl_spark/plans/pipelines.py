@@ -10,8 +10,10 @@ observed sink, ``sources.sinks.export``.  Each returns the rows it wrote,
 counted by the write job itself: an int for a single-table export,
 ``{name: rows}`` for the multi-table ones.
 
-Shape notes: every pipeline is one Spark job; the range filter reaches the
-scan; only the aggregation/explode steps shuffle (see tests/test_plans.py).
+Shape notes: every pipeline is one Spark job; only the aggregation/explode
+steps shuffle (see tests/test_plans.py).  The range filter sits on the silver
+rows; the CLI also filters bronze on the file-name sequence, so ledgers out
+of range are read but never parsed in Python.
 """
 
 from __future__ import annotations
@@ -159,22 +161,31 @@ def export_ledger_entry_changes(
     The whole fan-out is ONE logical plan per entity over a shared compacted
     change log; Spark writes each entity's every batch in a single job
     (partitionBy batch), unlike the reference's sequential per-batch loop.
-    Each entity is one ``<out_dir>/<entity>`` directory, so ``fmt`` is
-    "json" or "parquet", not "both".
+    The silver change rows are persisted for the duration of the export, so
+    the ledgers are decoded once, not once per entity.  Each entity is one
+    ``<out_dir>/<entity>`` directory, so ``fmt`` is "json" or "parquet",
+    not "both".
     """
+    names = export_types or DEFAULT_EXPORT_TYPES
+    # cached BEFORE the compaction shuffle: AQE does not re-coalesce a
+    # cached plan's output, so persisting ``compacted`` instead freezes its
+    # shuffle partitions and multiplies the files each entity writes
     ranged = _range(changes, start, end).withColumn(
         "batch_id", batch_id_col(batch_size=batch_size)
-    )
-    # after compaction the surviving row's type is the RECONCILED one
-    # (created→updated collapses to created, ChangeCompactor rule)
-    compacted = compact_changes(ranged).withColumn(
-        "change_type", F.col("effective_change_type")
-    )
-    routed = route_changes(compacted)
-    return {
-        name: export(routed[name], os.path.join(out_dir, name), fmt, mode=mode)
-        for name in export_types or DEFAULT_EXPORT_TYPES
-    }
+    ).persist()
+    try:
+        # after compaction the surviving row's type is the RECONCILED one
+        # (created→updated collapses to created, ChangeCompactor rule)
+        compacted = compact_changes(ranged).withColumn(
+            "change_type", F.col("effective_change_type")
+        )
+        routed = route_changes(compacted, names)
+        return {
+            name: export(routed[name], os.path.join(out_dir, name), fmt, mode=mode)
+            for name in names
+        }
+    finally:
+        ranged.unpersist()
 
 
 def get_ledger_range_from_times(ledgers, start_time, end_time) -> DataFrame:

@@ -12,6 +12,8 @@ and typically pre-compacted by operators.compaction.compact_changes.
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -599,8 +601,11 @@ def route_change(changes: DataFrame, name: str) -> DataFrame:
     return _routes()[name](changes.where(F.col("entry_type") == _TYPE_OF[name]))
 
 
-def route_changes(changes: DataFrame) -> dict[str, DataFrame]:
+def route_changes(
+    changes: DataFrame, names: Iterable[str] | None = None
+) -> dict[str, DataFrame]:
     """Per-entity-type routing (export_ledger_entry_changes.go:116-259):
     one filtered view per entity — Catalyst collapses each into a pruned
-    scan of the shared change log."""
-    return {name: route_change(changes, name) for name in _routes()}
+    scan of the shared change log.  ``names`` limits the views built to
+    those entities (default all ten)."""
+    return {name: route_change(changes, name) for name in names or _routes()}

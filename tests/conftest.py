@@ -21,6 +21,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+_SLOW_DROPPED = pytest.StashKey[int]()
 
 
 def pytest_configure(config):
@@ -40,6 +41,16 @@ def pytest_collection_modifyitems(config, items):
     if drop:
         config.hook.pytest_deselected(items=drop)
         items[:] = keep
+        config.stash[_SLOW_DROPPED] = len(drop)
+
+
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    dropped = config.stash.get(_SLOW_DROPPED, 0)
+    if dropped:
+        terminalreporter.write_line(
+            f"{dropped} slow tests deselected; set SPARK_GRAFT_FULL_TESTS=1 "
+            "for the full tier"
+        )
 
 
 @pytest.fixture(scope="session")

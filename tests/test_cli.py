@@ -4,6 +4,7 @@ build the binary, run a subcommand over a ledger range, inspect output)."""
 
 from __future__ import annotations
 
+import argparse
 import glob
 import json
 import os
@@ -158,3 +159,142 @@ class TestCli:
         b, s = rows(batch_out), rows(stream_out)
         assert len(b) > 0
         assert b == s
+
+
+def _cli_bronze(spark, ledgers_dir):
+    from pyspark.sql import functions as F
+
+    from stellar_etl_spark.sources.bronze import read_ledger_files
+
+    return read_ledger_files(spark, ledgers_dir).select(
+        "sequence", F.col("content").alias("lcm_xdr")
+    )
+
+
+def _cli_args():
+    """The parsed CLI defaults ``_dispatch_cmd`` reads."""
+    return argparse.Namespace(export_types=None, strict_export=False,
+                              batch_size=64, start_time=None, end_time=None)
+
+
+def _ranged_commands():
+    from stellar_etl_spark.__main__ import UNRANGED
+    from stellar_etl_spark.plans.pipelines import EXPORT_PIPELINES
+
+    return sorted(set(EXPORT_PIPELINES) - set(UNRANGED))
+
+
+def _subtrees(plan: str, node: str) -> list[list[str]]:
+    """The lines below each ``node`` line of a plan's tree string."""
+    lines = plan.splitlines()
+
+    def depth(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-"))
+
+    out = []
+    for i, line in enumerate(lines):
+        if line.lstrip(" :+-").startswith(node):
+            sub = []
+            for below in lines[i + 1:]:
+                if depth(below) <= depth(line):
+                    break
+                sub.append(below.lstrip(" :+-"))
+            out.append(sub)
+    return out
+
+
+class TestCliSession:
+    def test_cli_jvm_is_c1_only(self, monkeypatch, tmp_path):
+        """The short-lived CLI JVM stops at the C1 tier and keeps the
+        large code cache."""
+        from stellar_etl_spark import session
+        from stellar_etl_spark.__main__ import main
+
+        class SessionRequested(Exception):
+            pass
+
+        seen = {}
+
+        def capture(*args, **kwargs):
+            seen.update(kwargs)
+            raise SessionRequested
+
+        monkeypatch.setattr(session, "get_spark", capture)
+        with pytest.raises(SessionRequested):
+            main(["export_effects", "--ledgers-dir", str(tmp_path),
+                  "--output", str(tmp_path / "out")])
+        opts = seen["extra_conf"]["spark.driver.extraJavaOptions"].split()
+        assert "-XX:TieredStopAtLevel=1" in opts
+        assert "-XX:ReservedCodeCacheSize=1g" in opts
+
+    def test_library_session_keeps_tiered_c2(self, spark):
+        conf = spark.sparkContext.getConf()
+        assert "TieredStopAtLevel" not in conf.get(
+            "spark.driver.extraJavaOptions", ""
+        )
+
+
+class TestCliRange:
+    @pytest.mark.parametrize("cmd", _ranged_commands())
+    def test_range_filter_below_python_decode(self, spark, xdr_dir, cmd,
+                                              monkeypatch):
+        """Ledgers outside [start, end] are dropped on the file name before
+        any silver decode parses them in Python."""
+        from pyspark.sql import DataFrame
+
+        from stellar_etl_spark.__main__ import _dispatch_cmd
+        from stellar_etl_spark.plans.pipelines import EXPORT_PIPELINES
+
+        frames = []
+
+        def capture(*args, **kwargs):
+            frames.extend(a for a in args if isinstance(a, DataFrame))
+            return {} if cmd == "export_ledger_entry_changes" else 0
+
+        monkeypatch.setitem(EXPORT_PIPELINES, cmd, capture)
+        _dispatch_cmd(cmd, _cli_bronze(spark, xdr_dir), spark, _cli_args(),
+                      "unused", 3, 5, "json", None, "overwrite")
+        assert frames
+        for df in frames:
+            plan = df._jdf.queryExecution().optimizedPlan().toString()
+            decodes = _subtrees(plan, "MapInPandas")
+            assert decodes, plan
+            for below in decodes:
+                assert any(
+                    line.startswith("Filter") and ">= 3" in line and "<= 5" in line
+                    for line in below
+                ), plan
+
+    @pytest.mark.parametrize("cmd", _ranged_commands())
+    def test_sub_range_export_matches_pipeline_range(self, spark, xdr_dir,
+                                                     cmd, tmp_path):
+        """Filtering bronze first changes no output: a sub-range export
+        equals the one the pipeline's own range filter gives when every
+        ledger reaches silver."""
+        from pyspark.sql import functions as F
+
+        from stellar_etl_spark.__main__ import _dispatch_cmd
+
+        def export(bronze, out):
+            _dispatch_cmd(cmd, bronze, spark, _cli_args(), str(out), 3, 5,
+                          "json", None, "overwrite")
+            rows = {}
+            for f in glob.glob(str(out / "**" / "part-*"), recursive=True):
+                with open(f) as fh:
+                    rows.setdefault(os.path.relpath(os.path.dirname(f), out), []).extend(
+                        json.dumps(json.loads(line), sort_keys=True)
+                        for line in fh if line.strip()
+                    )
+            return {k: sorted(v) for k, v in rows.items()}
+
+        bronze = _cli_bronze(spark, xdr_dir)
+        got = export(bronze, tmp_path / "cli")
+        # a file-name sequence inside the range lets every ledger through
+        want = export(bronze.withColumn("sequence", F.lit(3).cast("long")),
+                      tmp_path / "all")
+        assert got == want
+        # the fixture's ledgers carry no Soroban events, entry changes or
+        # claim atoms; every other export has rows in the range
+        empty = ("export_contract_events", "export_ledger_entry_changes",
+                 "export_trades")
+        assert (sum(map(len, got.values())) == 0) == (cmd in empty)

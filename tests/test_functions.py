@@ -98,6 +98,32 @@ class TestStrkey:
         with pytest.raises(ValueError):
             decode_strkey(bad)
 
+    def test_known_sdk_vector(self):
+        assert encode_strkey(VERSION_ACCOUNT, bytes(32)) == (
+            "GAAAAAAAAAAAAAAAAAAAAAAAAAAAAAAAAAAAAAAAAAAAAAAAAAAAAWHF"
+        )
+
+    @pytest.mark.parametrize("size", [0, 1, 33, 35, 69])
+    def test_crc_matches_bit_loop(self, size):
+        """The checksum equals the SEP-23 CRC16-XModem bit loop, kept here
+        as the reference."""
+        import random
+
+        from stellar_etl_spark.functions.strkey import _crc16_xmodem
+
+        def bit_loop(data: bytes) -> int:
+            crc = 0
+            for b in data:
+                crc ^= b << 8
+                for _ in range(8):
+                    crc = ((crc << 1) ^ 0x1021) & 0xFFFF if crc & 0x8000 else (crc << 1) & 0xFFFF
+            return crc
+
+        rng = random.Random(size)
+        for _ in range(50):
+            data = rng.randbytes(size)
+            assert _crc16_xmodem(data) == bit_loop(data)
+
 
 class TestToid:
     CASES = [

@@ -105,6 +105,37 @@ class TestPipelines:
         cd = _read_jsonl(str(tmp_path / "contract_data" / "part-*"))
         assert len(cd) == 1
 
+    def test_changes_decode_each_ledger_once(self, spark, tmp_path):
+        """One silver decode serves every entity of a changes export: each
+        ledger reaches Python once, not once per entity written."""
+        from golden_lcm import build_ledgers
+        from pyspark.sql import functions as F
+
+        from stellar_etl_spark.sources.bronze import read_ledger_files
+        from stellar_etl_spark.sources.silver import decode_changes
+
+        ledgers_dir = tmp_path / "xdr"
+        ledgers_dir.mkdir()
+        build_ledgers(str(ledgers_dir), 4)
+        log = str(tmp_path / "decoded.log")
+
+        def tap(batches):
+            for pdf in batches:
+                with open(log, "a") as fh:
+                    fh.writelines(f"{seq}\n" for seq in pdf["sequence"])
+                yield pdf
+
+        bronze = read_ledger_files(spark, str(ledgers_dir)).select(
+            "sequence", F.col("content").alias("lcm_xdr")
+        )
+        export_ledger_entry_changes(
+            decode_changes(bronze.mapInPandas(tap, schema=bronze.schema)),
+            str(tmp_path / "out"),
+            export_types=["accounts", "offers", "trustlines"],
+        )
+        with open(log) as fh:
+            assert sorted(int(line) for line in fh) == [2, 3, 4, 5]
+
     def test_ledger_range_lookup(self, spark):
         import datetime as dt
 
