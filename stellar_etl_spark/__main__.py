@@ -78,9 +78,11 @@ def main(argv: list[str] | None = None) -> None:
                     help="comma list of change entities (default all 10)")
     ap.add_argument("--stream", action="store_true",
                     help="run the export as Structured Streaming over the "
-                         "ledger directory (unbounded end=0 mode; drains "
-                         "what is landed, then stops — availableNow); "
-                         "works for every export_* subcommand")
+                         "ledger directory (the same file scan as batch, "
+                         "tailed; --start-ledger/--end-ledger still apply): "
+                         "drains every file landed since the last run's "
+                         "checkpoint, then stops (availableNow); works for "
+                         "every export_* subcommand")
     ap.add_argument("--start-time", default=None,
                     help="get_ledger_range_from_times lower bound")
     ap.add_argument("--end-time", default=None,
@@ -93,6 +95,8 @@ def main(argv: list[str] | None = None) -> None:
             "--both is not supported by export_ledger_entry_changes: JSONL "
             "and parquet would share each <output>/<entity> directory"
         )
+    if args.stream and args.command == "get_ledger_range_from_times":
+        raise SystemExit("--stream does not apply to range lookup")
 
     fmt = "both" if args.both else ("parquet" if args.parquet else "json")
     extra = _parse_extra_fields(args.extra_fields) or None
@@ -113,10 +117,11 @@ def main(argv: list[str] | None = None) -> None:
     spark.sparkContext.setLogLevel("WARN")
     # silver parses the raw LedgerCloseMeta bytes itself (a superset of the
     # bronze header parse, so corrupt files still fail the job): hand it the
-    # scan directly, with no Python decode in between
-    bronze = read_ledger_files(spark, args.ledgers_dir).select(
-        "sequence", F.col("content").alias("lcm_xdr")
-    )
+    # scan directly, with no Python decode in between; --stream tails the
+    # same scan
+    bronze = read_ledger_files(
+        spark, args.ledgers_dir, stream=args.stream
+    ).select("sequence", F.col("content").alias("lcm_xdr"))
 
     cmd, out = args.command, args.output
     s, e = args.start_ledger, args.end_ledger
@@ -129,22 +134,11 @@ def main(argv: list[str] | None = None) -> None:
         )
 
     if args.stream:
-        if cmd == "get_ledger_range_from_times":
-            raise SystemExit("--stream does not apply to range lookup")
-        from stellar_etl_spark.sources.datasource import LedgerDataSource
-
-        spark.dataSource.register(LedgerDataSource)
-        tail = (
-            spark.readStream.format("stellar_ledgers")
-            .option("path", args.ledgers_dir)
-            .load()
-        )
-
         def process(batch_df, epoch_id):
             _dispatch(batch_df, mode="append")
 
         q = (
-            tail.writeStream.foreachBatch(process)
+            bronze.writeStream.foreachBatch(process)
             .option("checkpointLocation", os.path.join(out, "_checkpoint"))
             .trigger(availableNow=True)
             .start()

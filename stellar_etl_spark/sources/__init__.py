@@ -3,9 +3,7 @@ surface (JSONL / Parquet / batch-partitioned files)."""
 
 from stellar_etl_spark.sources.bronze import (
     decode_ledger_files,
-    fake_lcm_decoder,
     read_ledger_files,
-    real_lcm_decoder,
     write_bronze,
 )
 from stellar_etl_spark.sources.sinks import (
@@ -19,8 +17,6 @@ __all__ = [
     "decode_ledger_files",
     "export",
     "export_batches",
-    "fake_lcm_decoder",
     "read_ledger_files",
-    "real_lcm_decoder",
     "write_bronze",
 ]

@@ -8,19 +8,20 @@ sequence comes from the file name) → optional Arrow-batched header decode in
 workers / ring buffer (utils/main.go:239-240) are replaced by Spark task
 parallelism; its retry loop by task retries.
 
-The silver decoders (sources/silver.py) parse the raw LedgerCloseMeta bytes
-themselves, so an export needs only :func:`read_ledger_files`; the CLI hands
-silver the scan directly.  :func:`decode_ledger_files` adds header columns
-(close time, protocol version, tx count) for bronze tables.  Its default
-decoder is the in-repo RFC 4506 parser (sources/xdr.py); the decoder is a
-plain ``bytes -> dict`` callable, and ``fake_lcm_decoder`` derives stable
-values from arbitrary bytes for plumbing tests.
+:func:`read_ledger_files` is the one ledger reader: a bounded batch scan, or
+with ``stream=True`` the same listing tailed by Spark's file stream source
+(the reference's unbounded ``end=0`` mode), which tracks files by path in
+its checkpoint.  The silver decoders (sources/silver.py) parse the raw
+LedgerCloseMeta bytes themselves, so an export needs only this scan; the
+CLI hands it to silver directly.  :func:`decode_ledger_files` adds header
+columns (close time, protocol version, tx count) for bronze tables, parsed
+by the in-repo RFC 4506 decoder (sources/xdr.py).
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,55 +35,45 @@ BRONZE_SCHEMA = (
 )
 
 
-def read_ledger_files(spark: SparkSession, path: str) -> DataFrame:
+# Spark's fixed ``binaryFile`` schema; a streaming file source must be told it
+BINARY_FILE_SCHEMA = (
+    "path string, modificationTime timestamp, length long, content binary"
+)
+
+
+def read_ledger_files(
+    spark: SparkSession, path: str, stream: bool = False
+) -> DataFrame:
     """List + read one-ledger-per-file objects; the sequence is parsed from
     the file name (the datastore names files by ledger sequence).  A pure
     metadata/scan stage — no decode yet, so column pruning can drop
-    ``content`` for listing-only queries."""
-    return (
-        spark.read.format("binaryFile")
-        .load(path)
-        .select(
-            F.regexp_extract(F.col("path"), r"(\d+)\.[a-z.]+$", 1)
-            .cast("long")
-            .alias("sequence"),
-            F.col("length"),
-            F.col("content"),
-        )
+    ``content`` for listing-only queries.  ``stream=True`` tails the same
+    directory as a streaming source instead of scanning it once.  A
+    missing ``path`` fails in both modes."""
+    reader = (
+        spark.readStream.format("binaryFile").schema(BINARY_FILE_SCHEMA)
+        if stream
+        else spark.read.format("binaryFile")
+    )
+    return reader.load(path).select(
+        F.regexp_extract(F.col("path"), r"(\d+)\.[a-z.]+$", 1)
+        .cast("long")
+        .alias("sequence"),
+        F.col("length"),
+        F.col("content"),
     )
 
 
-def real_lcm_decoder(raw: bytes) -> dict:
-    """Default decoder: the pure-Python RFC 4506 parser over the real
-    LedgerCloseMeta wire format (sources/xdr.py) — header + tx-envelope
-    subset, no SDK needed."""
-    from stellar_etl_spark.sources.xdr import real_lcm_decoder as _decode
-
-    return _decode(raw)
-
-
-def fake_lcm_decoder(raw: bytes) -> dict:
-    """Deterministic stand-in decoder: derives header fields from the raw
-    bytes so tests exercise real plumbing with stable values."""
-    seq = int.from_bytes(raw[:4], "big") if len(raw) >= 4 else 0
-    return {
-        "sequence": seq,
-        "closed_at_unix": 1704067200 + 5 * max(seq - 2, 0),
-        "protocol_version": 20,
-        "tx_count": len(raw) % 16,
-    }
-
-
-def decode_ledger_files(
-    files: DataFrame, decoder: Callable[[bytes], dict] = real_lcm_decoder
-) -> DataFrame:
-    """Arrow-batched decode: one pandas iterator pass per partition
+def decode_ledger_files(files: DataFrame) -> DataFrame:
+    """Arrow-batched header decode: one pandas iterator pass per partition
     (mapInPandas) — the only Python hot path in ingestion."""
     import pandas as pd
 
+    from stellar_etl_spark.sources.xdr import real_lcm_decoder
+
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            decoded = [decoder(c) for c in pdf["content"]]
+            decoded = [real_lcm_decoder(c) for c in pdf["content"]]
             out = pd.DataFrame(
                 {
                     "sequence": [d["sequence"] for d in decoded],

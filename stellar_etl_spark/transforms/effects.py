@@ -1464,14 +1464,17 @@ def transform_effects(
     # occur.  The builder then skips families whose type cannot appear,
     # collapsing the generated projection from ~350 KB (beyond JIT's
     # compile threshold → interpreted) to just the reachable families.
-    # The probe reads ONLY the narrow ``type`` column (round-9: it used
-    # to also scan the wide nested changes / claim-atoms columns for a
-    # max(size(...)) emptiness check — a second full read of the table's
-    # heaviest columns per call, buying codegen shrinkage only on inputs
-    # whose type mix implies those columns but whose arrays are all empty;
-    # change/atom scans over empty arrays emit nothing either way, so
-    # has_changes/has_atoms now probe-default to True and rows are
-    # identical).  Streams can't be probed — they get the full expression.
+    # On parquet input the probe reads ONLY the narrow ``type`` column
+    # (round-9: it used to also scan the wide nested changes / claim-atoms
+    # columns for a max(size(...)) emptiness check — a second full read of
+    # the table's heaviest columns per call, buying codegen shrinkage only
+    # on inputs whose type mix implies those columns but whose arrays are
+    # all empty; change/atom scans over empty arrays emit nothing either
+    # way, so has_changes/has_atoms now probe-default to True and rows are
+    # identical).  Behind silver's ``mapInPandas`` (the CLI path) no column
+    # pruning reaches past the Python decode: the probe is its own job that
+    # re-runs the full ledger parse before the write parses again.  Streams
+    # can't be probed — they get the full expression.
     if operations.isStreaming or not prune:
         present = None
     else:

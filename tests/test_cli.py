@@ -93,20 +93,64 @@ class TestCli:
             main(["export_ledger_entry_changes", "--both", "--ledgers-dir",
                   str(tmp_path), "--output", str(tmp_path / "out")])
 
+    def test_stream_rejects_range_lookup(self, monkeypatch, tmp_path):
+        """A range lookup has no stream form: refused before a session
+        starts."""
+        from stellar_etl_spark import session
+        from stellar_etl_spark.__main__ import main
+
+        def no_session(*args, **kwargs):
+            raise AssertionError("session started before the check")
+
+        monkeypatch.setattr(session, "get_spark", no_session)
+        with pytest.raises(SystemExit, match="--stream"):
+            main(["get_ledger_range_from_times", "--stream", "--ledgers-dir",
+                  str(tmp_path), "--start-time", "0", "--end-time", "1"])
+
+    def test_streamed_range_matches_batch_range(self, xdr_dir, tmp_path):
+        """--stream reads the same file-name sequence as batch, so the
+        ledger range keeps exactly the ledgers the batch export keeps."""
+        _run([
+            "export_transactions", "--stream", "--ledgers-dir", xdr_dir,
+            "--output", str(tmp_path), "-s", "3", "-e", "5",
+        ])
+        rows = []
+        for f in glob.glob(str(tmp_path / "transactions.jsonl" / "part-*")):
+            with open(f) as fh:
+                rows += [json.loads(l) for l in fh if l.strip()]
+        assert len(rows) == 15
+        assert {r["ledger_sequence"] for r in rows} == {3, 4, 5}
+
+    def test_stream_missing_ledgers_dir_fails_loudly(self, tmp_path):
+        missing = str(tmp_path / "nowhere")
+        res = _cli([
+            "export_transactions", "--stream", "--ledgers-dir", missing,
+            "--output", str(tmp_path / "out"),
+        ])
+        assert res.returncode != 0
+        assert missing in res.stderr
+        assert "streamed" not in res.stdout
+
     @pytest.mark.slow
-    def test_streamed_changes_equal_batch(self, xdr_dir, tmp_path):
+    def test_streamed_changes_equal_batch(self, tmp_path):
         """--stream (unbounded end=0 mode) over the same XDR dir must
         produce the same per-entity rows as the batch subcommand — one
         code path per micro-batch (input/changes.go:162-180 parity)."""
+        from perfbench.corpus import build
+
+        ledgers = str(tmp_path / "ledgers")
+        build(ledgers, 3, 8)
+        entities = ("accounts", "account_signers", "trustlines", "offers",
+                    "liquidity_pools", "claimable_balances")
         batch_out, stream_out = str(tmp_path / "b"), str(tmp_path / "s")
         _run([
-            "export_ledger_entry_changes", "--ledgers-dir", xdr_dir,
-            "--output", batch_out, "--export-types", "accounts,offers",
+            "export_ledger_entry_changes", "--ledgers-dir", ledgers,
+            "--output", batch_out, "--export-types", ",".join(entities),
         ])
         _run([
             "export_ledger_entry_changes", "--stream", "--ledgers-dir",
-            xdr_dir, "--output", stream_out,
-            "--export-types", "accounts,offers",
+            ledgers, "--output", stream_out,
+            "--export-types", ",".join(entities),
         ])
 
         def rows(base, entity):
@@ -114,13 +158,12 @@ class TestCli:
             for f in glob.glob(os.path.join(base, entity, "part-*")):
                 with open(f) as fh:
                     out += [json.loads(l) for l in fh if l.strip()]
-            return sorted(
-                out, key=lambda r: (r.get("ledger_sequence"),
-                                    str(r.get("ledger_entry_key")))
-            )
+            return sorted(out, key=lambda r: json.dumps(r, sort_keys=True))
 
-        for entity in ("accounts", "offers"):
-            assert rows(batch_out, entity) == rows(stream_out, entity)
+        for entity in entities:
+            batch = rows(batch_out, entity)
+            assert batch, entity
+            assert batch == rows(stream_out, entity), entity
 
     @pytest.mark.slow
     def test_get_ledger_range_from_times(self, xdr_dir):

@@ -9,6 +9,7 @@ import glob
 import json
 import os
 
+from golden_lcm import build_ledgers
 from pyspark.sql import functions as F
 
 from stellar_etl_spark.operators.compaction import compact_changes
@@ -17,7 +18,6 @@ from stellar_etl_spark.sources import (
     decode_ledger_files,
     export,
     export_batches,
-    fake_lcm_decoder,
     read_ledger_files,
     write_bronze,
 )
@@ -50,18 +50,16 @@ class TestBronze:
     def test_binaryfile_roundtrip(self, spark, tmp_path):
         src = tmp_path / "files"
         src.mkdir()
-        for seq in (2, 3, 4):
-            (src / f"{seq:08d}.xdr.zst").write_bytes(
-                seq.to_bytes(4, "big") + b"payload" * seq
-            )
+        build_ledgers(str(src), 3)  # ledgers 2, 3, 4
         files = read_ledger_files(spark, str(src))
         assert {r.sequence for r in files.select("sequence").collect()} == {2, 3, 4}
 
-        bronze = decode_ledger_files(files, fake_lcm_decoder)
+        bronze = decode_ledger_files(files)
         rows = {r.sequence: r for r in bronze.collect()}
-        assert rows[3].protocol_version == 20
-        assert rows[3].lcm_xdr.startswith((3).to_bytes(4, "big"))
-        # 5s cadence from the fake decoder
+        assert rows[3].protocol_version == 21
+        assert rows[3].tx_count == 5
+        assert rows[3].lcm_xdr == (src / "3.xdr").read_bytes()
+        # the builder closes a ledger every 5 s
         assert (rows[4].closed_at - rows[2].closed_at).total_seconds() == 10
 
         write_bronze(bronze, str(tmp_path / "bronze"))
@@ -1156,136 +1154,6 @@ class TestStreamSessionize:
         assert closed == set()  # the single session is still open
 
 
-class TestLedgerDataSource:
-    """Python DataSource API source (sources/datasource.py): driver-side
-    range pruning at planning time, distributed file reads, streaming tail
-    with sequence offsets."""
-
-    def _mk_files(self, tmp_path, seqs):
-        src = tmp_path / "store"
-        src.mkdir(exist_ok=True)
-        for seq in seqs:
-            (src / f"{seq:08d}.xdr.zst").write_bytes(
-                seq.to_bytes(4, "big") + b"payload" * seq
-            )
-        return str(src)
-
-    def test_batch_range_scan(self, spark, tmp_path):
-        from stellar_etl_spark.sources.datasource import LedgerDataSource
-
-        path = self._mk_files(tmp_path, [2, 3, 4, 5, 6])
-        spark.dataSource.register(LedgerDataSource)
-        df = (
-            spark.read.format("stellar_ledgers")
-            .option("path", path)
-            .option("start", 3)
-            .option("end", 5)
-            .load()
-        )
-        rows = {r.sequence: r for r in df.collect()}
-        assert sorted(rows) == [3, 4, 5]  # planning-time pruning
-        assert rows[4].lcm_xdr.startswith((4).to_bytes(4, "big"))
-        assert rows[4].protocol_version == 20
-        # 5s close cadence from the shared fake decoder
-        assert (rows[5].closed_at - rows[3].closed_at).total_seconds() == 10
-
-    def test_batch_partition_grouping(self, spark, tmp_path):
-        from stellar_etl_spark.sources.datasource import LedgerBatchReader
-
-        path = self._mk_files(tmp_path, list(range(1, 8)))
-        reader = LedgerBatchReader(
-            {"path": path, "start": "1", "end": "7", "files_per_task": "3"}
-        )
-        parts = reader.partitions()
-        assert [len(p.files) for p in parts] == [3, 3, 1]
-        seqs = [s for p in parts for s, _ in p.files]
-        assert seqs == list(range(1, 8))
-
-    def test_unbounded_end_zero(self, spark, tmp_path):
-        from stellar_etl_spark.sources.datasource import LedgerBatchReader
-
-        path = self._mk_files(tmp_path, [10, 11])
-        reader = LedgerBatchReader({"path": path, "start": "0", "end": "0"})
-        parts = reader.partitions()
-        assert [s for p in parts for s, _ in p.files] == [10, 11]
-
-    def test_stream_reader_offsets(self, spark, tmp_path):
-        from stellar_etl_spark.sources.datasource import LedgerStreamReader
-
-        path = self._mk_files(tmp_path, [2, 3])
-        r = LedgerStreamReader({"path": path, "start": "2"})
-        off0 = r.initialOffset()
-        assert off0 == {"last_seq": 1}
-        rows, off1 = r.read(off0)
-        assert [row[0] for row in rows] == [2, 3]
-        assert off1 == {"last_seq": 3}
-        # nothing new -> empty batch, offset unchanged
-        rows, off2 = r.read(off1)
-        assert list(rows) == [] and off2 == {"last_seq": 3}
-        # new ledger arrives -> next batch picks up exactly the delta
-        self._mk_files(tmp_path, [4])
-        rows, off3 = r.read(off2)
-        assert [row[0] for row in rows] == [4] and off3 == {"last_seq": 4}
-        # replay between persisted offsets (checkpoint recovery path)
-        replay = list(r.readBetweenOffsets({"last_seq": 1}, {"last_seq": 3}))
-        assert [row[0] for row in replay] == [2, 3]
-
-    def test_streaming_end_to_end(self, spark, tmp_path):
-        from stellar_etl_spark.sources.datasource import LedgerDataSource
-
-        path = self._mk_files(tmp_path, [2, 3, 4])
-        spark.dataSource.register(LedgerDataSource)
-        out = str(tmp_path / "out")
-        q = (
-            spark.readStream.format("stellar_ledgers")
-            .option("path", path)
-            .load()
-            .writeStream.format("memory")
-            .queryName("ledger_tail")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(60)
-        got = spark.sql("select sequence from ledger_tail").collect()
-        assert sorted(r.sequence for r in got) == [2, 3, 4]
-
-
-class TestLedgerTxUdtf:
-    def test_lateral_fanout(self, spark, tmp_path):
-        from stellar_etl_spark.sources.datasource import (
-            LedgerDataSource,
-            ledger_tx_udtf,
-        )
-
-        src = tmp_path / "store"
-        src.mkdir()
-        for seq in (2, 3):
-            (src / f"{seq:08d}.xdr.zst").write_bytes(
-                seq.to_bytes(4, "big") + b"p" * seq  # len = 4 + seq
-            )
-        spark.dataSource.register(LedgerDataSource)
-        spark.udtf.register("ledger_txs", ledger_tx_udtf())
-        (
-            spark.read.format("stellar_ledgers")
-            .option("path", str(src))
-            .load()
-            .createOrReplaceTempView("bronze_v")
-        )
-        rows = spark.sql(
-            "SELECT t.sequence, t.tx_index, t.tx_hash "
-            "FROM bronze_v, LATERAL ledger_txs(sequence, lcm_xdr) t"
-        ).collect()
-        # file for seq s has len 4+s -> tx_count = (4+s) % 16
-        by_seq = {}
-        for r in rows:
-            by_seq.setdefault(r.sequence, []).append(r)
-        assert sorted(by_seq) == [2, 3]
-        assert len(by_seq[2]) == 6 and len(by_seq[3]) == 7
-        assert [r.tx_index for r in sorted(by_seq[3], key=lambda r: r.tx_index)] == list(range(7))
-        # deterministic hashes
-        assert len({r.tx_hash for r in rows}) == 13
-
-
 class TestZorderLayout:
     def test_morton_interleave_matches_reference(self, spark):
         from stellar_etl_spark.sources.layout import morton_interleave
@@ -1410,121 +1278,12 @@ class TestStreamStaticEnrichment:
         assert got == {1: "gold", 2: "silver", 3: None}
 
 
-class TestLedgerBatchFileWriter:
-    def test_write_batch_files_with_manifest(self, spark, tmp_path):
-        import json as _json
-
-        from stellar_etl_spark.sources.datasource import LedgerDataSource
-
-        src = tmp_path / "store"
-        src.mkdir()
-        for seq in range(2, 10):
-            (src / f"{seq:08d}.xdr.zst").write_bytes(
-                seq.to_bytes(4, "big") + b"p" * seq
-            )
-        spark.dataSource.register(LedgerDataSource)
-        out = str(tmp_path / "export")
-        df = (
-            spark.read.format("stellar_ledgers")
-            .option("path", str(src))
-            .option("files_per_task", 4)
-            .load()
-        )
-        (
-            df.repartitionByRange(2, "sequence")
-            .write.format("stellar_ledgers")
-            .option("path", out)
-            .option("entity", "ledgers")
-            .mode("append")
-            .save()
-        )
-        import glob as _glob
-        import os as _os
-
-        files = sorted(
-            _os.path.basename(p) for p in _glob.glob(out + "/*-ledgers.txt")
-        )
-        assert len(files) == 2
-        # file names carry each task's [min, max] sequence range
-        starts = [int(f.split("-")[0]) for f in files]
-        ends = [int(f.split("-")[1]) for f in files]
-        assert min(starts) == 2 and max(ends) == 9
-        # manifest lists exactly the written files
-        with open(out + "/_MANIFEST") as fh:
-            assert sorted(fh.read().split()) == files
-        # rows are jsonl without the binary column
-        with open(out + "/" + files[0]) as fh:
-            row = _json.loads(fh.readline())
-        assert "lcm_xdr" not in row and "sequence" in row
-
-    def test_overlapping_ranges_fail_loudly(self, spark, tmp_path):
-        """Two tasks producing the same {lo}-{hi} name means the input was
-        not range-partitioned — one task's os.replace would silently
-        discard the other's rows, so commit() must refuse the manifest."""
-        import pytest
-
-        from stellar_etl_spark.sources.datasource import LedgerDataSource
-
-        spark.dataSource.register(LedgerDataSource)
-        out = str(tmp_path / "export")
-        # same sequence duplicated into 2 hash partitions -> same file name
-        df = spark.createDataFrame(
-            [(7, None, 20, 1, bytearray(b"x")), (7, None, 20, 1, bytearray(b"y"))],
-            "sequence long, closed_at timestamp, protocol_version long, "
-            "tx_count long, lcm_xdr binary",
-        ).repartition(2)
-        with pytest.raises(Exception, match="name collision"):
-            (
-                df.write.format("stellar_ledgers")
-                .option("path", out)
-                .mode("append")
-                .save()
-            )
-
-    def test_empty_write_commits_valid_empty_manifest(self, spark, tmp_path):
-        from stellar_etl_spark.sources.datasource import LedgerDataSource
-
-        spark.dataSource.register(LedgerDataSource)
-        out = str(tmp_path / "export")
-        df = spark.createDataFrame(
-            [],
-            "sequence long, closed_at timestamp, protocol_version long, "
-            "tx_count long, lcm_xdr binary",
-        )
-        df.write.format("stellar_ledgers").option("path", out).mode(
-            "append"
-        ).save()
-        with open(out + "/_MANIFEST") as fh:
-            assert fh.read() == ""
-
-
 class TestStreamCrashRecovery:
-    """Checkpointed restart of the custom streaming source: a stopped query
+    """Checkpointed restart of the ledger-file stream
+    (sources/bronze.py ``read_ledger_files(stream=True)``): a stopped query
     resumed with the same checkpoint must deliver every ledger EXACTLY once
-    across runs (offset log + readBetweenOffsets replay path,
-    sources/datasource.py LedgerStreamReader)."""
-
-    def test_backlog_cap_catches_up_across_batches(self, tmp_path):
-        """A deep backlog is claimed max_files_per_batch at a time — the
-        first read() of a fresh stream must not materialize the whole
-        datastore on the driver."""
-        from stellar_etl_spark.sources.datasource import LedgerStreamReader
-
-        path = self._mk_files(tmp_path, list(range(1, 10)))
-        r = LedgerStreamReader({"path": path, "max_files_per_batch": "4"})
-        off = r.initialOffset()
-        seen = []
-        for _ in range(3):
-            rows, off = r.read(off)
-            seen.append([t[0] for t in rows])
-        assert seen == [[1, 2, 3, 4], [5, 6, 7, 8], [9]]
-
-    def test_missing_datastore_dir_is_empty_not_error(self, tmp_path):
-        from stellar_etl_spark.sources.datasource import LedgerStreamReader
-
-        r = LedgerStreamReader({"path": str(tmp_path / "nowhere")})
-        rows, off = r.read(r.initialOffset())
-        assert list(rows) == [] and off == {"last_seq": -1}
+    across runs.  The file source tracks files by path, so a ledger that
+    lands late with a lower sequence is delivered too."""
 
     def _mk_files(self, tmp_path, seqs):
         src = tmp_path / "store"
@@ -1536,19 +1295,14 @@ class TestStreamCrashRecovery:
         return str(src)
 
     def test_restart_is_exactly_once(self, spark, tmp_path):
-        from stellar_etl_spark.sources.datasource import LedgerDataSource
-
         path = self._mk_files(tmp_path, [2, 3, 4])
-        spark.dataSource.register(LedgerDataSource)
         ckpt = str(tmp_path / "ckpt")
         out = str(tmp_path / "out")
 
         def run_until_drained():
             q = (
-                spark.readStream.format("stellar_ledgers")
-                .option("path", path)
-                .load()
-                .selectExpr("sequence", "protocol_version")
+                read_ledger_files(spark, path, stream=True)
+                .select("sequence", "length")
                 .writeStream.format("parquet")
                 .option("path", out)
                 .option("checkpointLocation", ckpt)
@@ -1557,110 +1311,22 @@ class TestStreamCrashRecovery:
             )
             q.awaitTermination(120)
 
-        run_until_drained()
-        first = sorted(
-            r.sequence for r in spark.read.parquet(out).collect()
-        )
-        assert first == [2, 3, 4]
+        def delivered():
+            return sorted(r.sequence for r in spark.read.parquet(out).collect())
 
-        # the query is stopped ("crash"); new ledgers land in the store
-        self._mk_files(tmp_path, [5, 6])
         run_until_drained()
-        second = sorted(
-            r.sequence for r in spark.read.parquet(out).collect()
-        )
+        assert delivered() == [2, 3, 4]
+
+        # the query is stopped ("crash"); new ledgers land in the store,
+        # one of them below the sequences already delivered
+        self._mk_files(tmp_path, [1, 5, 6])
+        run_until_drained()
         # exactly once: old batches not reprocessed, new delta appended
-        assert second == [2, 3, 4, 5, 6]
+        assert delivered() == [1, 2, 3, 4, 5, 6]
 
         # a third restart with no new data must deliver nothing new
         run_until_drained()
-        third = sorted(
-            r.sequence for r in spark.read.parquet(out).collect()
-        )
-        assert third == [2, 3, 4, 5, 6]
-
-
-@pytest.mark.slow
-class TestStreamBatchFileSoak:
-    """Soak matrix (round-3 verdict item 7): N land→run→replay cycles of
-    the ledger stream feeding the reference-shaped ``{start}-{end}-{type}``
-    batch-file writer through foreachBatch.  After every cycle the file set
-    must be exactly-once (each sequence in exactly one file), gap-free
-    (the union of file contents is the full landed range), range-faithful
-    (each file's name brackets exactly its contents), and free of stale
-    task-attempt staging files (cmd/command_utils.go:105-111 naming)."""
-
-    N_CYCLES = 4
-
-    def test_kill_restart_cycles_exactly_once_gap_free(self, spark, tmp_path):
-        import glob as _glob
-        import json as _json
-        import os as _os
-
-        from stellar_etl_spark.sources.datasource import LedgerDataSource
-
-        spark.dataSource.register(LedgerDataSource)
-        store = tmp_path / "store"
-        store.mkdir()
-        out = str(tmp_path / "export")
-        ckpt = str(tmp_path / "ckpt")
-
-        def land(seqs):
-            for seq in seqs:
-                (store / f"{seq:08d}.xdr.zst").write_bytes(
-                    seq.to_bytes(4, "big") + b"p" * seq
-                )
-
-        def process(bdf, epoch_id):
-            (
-                bdf.write.format("stellar_ledgers")
-                .option("path", out)
-                .option("entity", "ledgers")
-                .mode("append")
-                .save()
-            )
-
-        def run_cycle():
-            q = (
-                spark.readStream.format("stellar_ledgers")
-                .option("path", str(store))
-                .load()
-                .writeStream.foreachBatch(process)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-
-        expected: set[int] = set()
-        base = 2
-        for _cycle in range(self.N_CYCLES):
-            new = list(range(base, base + 3))
-            base += 3
-            land(new)
-            expected |= set(new)
-            # a dead task attempt's staging file must never leak into the
-            # final set (the commit sweep)
-            _os.makedirs(out, exist_ok=True)
-            stale = _os.path.join(out, ".99-99-ledgers.txt.777.tmp")
-            with open(stale, "w") as fh:
-                fh.write("{}\n")
-            run_cycle()
-            run_cycle()  # restart with nothing new — must deliver nothing
-
-            all_seqs: list[int] = []
-            for p in _glob.glob(out + "/*-ledgers.txt"):
-                b = _os.path.basename(p).split("-")
-                lo, hi = int(b[0]), int(b[1])
-                with open(p) as fh:
-                    seqs = [_json.loads(line)["sequence"] for line in fh]
-                assert seqs, p
-                assert min(seqs) == lo and max(seqs) == hi, p
-                all_seqs += seqs
-            # exactly-once AND gap-free in one comparison: duplicates or
-            # missing sequences both break multiset equality
-            assert sorted(all_seqs) == sorted(expected)
-            assert not _glob.glob(out + "/.*.tmp")
+        assert delivered() == [1, 2, 3, 4, 5, 6]
 
 
 class TestStreamingIngest:
