@@ -85,31 +85,3 @@ def export_batches(
     path = os.path.join(out_dir, entity)
     writer.json(path) if fmt == "json" else writer.parquet(path)
 
-
-def compact_small_files(
-    spark,
-    path: str,
-    target_rows_per_file: int = 1_000_000,
-) -> int:
-    """Rewrite a parquet directory into right-sized files — the maintenance
-    job every streaming/batch-append layout needs (each micro-batch/export
-    writes at least one file per partition; at 100 TB that is millions of
-    tiny files and the NameNode/listing cost dominates scans).
-
-    One pass: count → repartition to ``ceil(rows / target)`` → atomic
-    swap via temp dir.  Returns the new file count.  The reference never
-    compacts its per-batch files (cmd/command_utils.go:105-111 one file per
-    batch forever); this is the Spark-side fix, not a replication.
-    """
-    import math
-    import shutil
-    import tempfile
-
-    df = spark.read.parquet(path)
-    rows = df.count()
-    n_files = max(1, math.ceil(rows / target_rows_per_file))
-    tmp = tempfile.mkdtemp(prefix="compact-", dir=os.path.dirname(path.rstrip("/")))
-    df.repartition(n_files).write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(path)
-    shutil.move(tmp, path)
-    return n_files

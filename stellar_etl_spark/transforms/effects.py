@@ -121,7 +121,8 @@ def _effect_dyn(kind_col: Column, address: Column, details: Column) -> Column:
 
 def _detail_ctx(detail_types: tuple[tuple[str, str], ...] | None):
     """Details-building context for one _effects_array_expr build: returns
-    ``(j, empty_details, details_ddl)``.
+    ``(j, empty_details, details_ddl, emitted)``; in struct mode
+    ``emitted`` collects every key ``j`` is called with during the build.
 
     Two modes, keyed on ``detail_types`` (passed explicitly, never through
     a module global, so concurrent expression builds cannot leak into each
@@ -138,9 +139,11 @@ def _detail_ctx(detail_types: tuple[tuple[str, str], ...] | None):
       column), and a JSON-absent / null-valued key parses back as null
       either way.
     """
+    emitted: set[str] = set()
     if detail_types is not None:
 
         def j(**kv) -> Column:
+            emitted.update(kv)
             return F.struct(
                 *[
                     (kv[n] if n in kv else F.lit(None)).cast(t).alias(n)
@@ -149,7 +152,7 @@ def _detail_ctx(detail_types: tuple[tuple[str, str], ...] | None):
             )
 
         ddl = "struct<" + ",".join(f"{n}:{t}" for n, t in detail_types) + ">"
-        return j, j(), ddl
+        return j, j(), ddl, emitted
 
     def j(**kv) -> Column:
         return F.to_json(
@@ -157,7 +160,7 @@ def _detail_ctx(detail_types: tuple[tuple[str, str], ...] | None):
             {"ignoreNullFields": "true"},
         )
 
-    return j, F.lit("{}"), "string"
+    return j, F.lit("{}"), "string", emitted
 
 
 def _canonical(asset: Column) -> Column:
@@ -182,55 +185,25 @@ def _amt_str(c: Column) -> Column:
 def _effects_array_expr(
     changes_type: str,
     atoms_type: str,
-    present: frozenset | None = None,
-    has_changes: bool = True,
-    has_atoms: bool = True,
-    detail_types: tuple[tuple[str, str], ...] | None = None,
+    detail_types: tuple[tuple[str, str], ...] | None,
 ) -> Column:
-    """The full per-operation effects array as ONE unresolved column
-    expression.  Building it costs thousands of py4j round trips
-    (~seconds of driver time), but the expression only references
-    column NAMES — it is reusable across any input DataFrame with the
-    operations schema, so it is built once per schema and cached
-    (keyed by the simpleString of the changes/claim-atoms types used
-    for the null-coalesce casts, plus the pruning context).
-
-    Pruning: ``present`` (the set of op-type ids actually in the input,
-    None = assume all), ``has_changes`` / ``has_atoms`` (whether any row
-    carries a non-empty changes / claim-atoms array).  A branch whose op
-    type cannot occur — or a change/atom scan over provably-empty arrays —
-    is simply not built: the emitted rows are IDENTICAL (those branches
-    produce empty arrays), but the expression tree shrinks from ~350 KB of
-    generated code (beyond JIT's compilable-method size, so it ran
-    interpreted) to just the families the data can hit.  transform_effects
-    derives the pruning context with one column-pruned probe aggregate.
+    """The per-operation effects array, every family of the reference's
+    op-type switch, as ONE unresolved column expression.  Building it
+    costs thousands of py4j round trips (~seconds of driver time), but the
+    expression only references column NAMES, so it is built once per key
+    and cached.  The key is everything the expression depends on: the
+    simpleString of the changes/claim-atoms types used for the
+    null-coalesce casts, and ``detail_types``.
 
     ``detail_types`` (None = JSON details): emit details as a typed STRUCT
     of exactly these (name, ddl_type) fields instead of a JSON string —
     kills the serialize-then-parse round trip for callers that consume a
-    fixed field set (see _detail_ctx for the value-equivalence argument)."""
-    return _effects_array_expr_impl(
-        changes_type, atoms_type, present, has_changes, has_atoms,
-        detail_types,
-    )
-
-
-def _effects_array_expr_impl(
-    changes_type: str,
-    atoms_type: str,
-    present: frozenset | None,
-    has_changes: bool,
-    has_atoms: bool,
-    detail_types: tuple[tuple[str, str], ...] | None = None,
-) -> Column:
-    _j, _empty_details, _details_ddl = _detail_ctx(detail_types)
+    fixed field set (see _detail_ctx for the value-equivalence argument).
+    A name that no effect family emits raises ValueError."""
+    _j, _empty_details, _details_ddl, emitted = _detail_ctx(detail_types)
     body = F.col("body")
     source = F.coalesce(F.col("source_account"), F.col("_tx_source"))
     t = F.col("type")
-
-    def pr(*type_ids: int) -> bool:
-        """True if any of these op types can occur in the input."""
-        return present is None or any(x in present for x in type_ids)
 
     _amt = _amt_str
 
@@ -343,237 +316,225 @@ def _effects_array_expr_impl(
 
         return F.flatten(F.transform(live_atoms, per_atom))
 
-    # ---- set_options helpers (effects.go:520-635); built only when a
-    # set_options op (t=5) can occur ----------------------------------------
-    if pr(5):
-        set_flags = F.coalesce(body["set_flags"], F.array().cast("array<int>"))
-        clear_flags = F.coalesce(
-            body["clear_flags"], F.array().cast("array<int>")
+    # ---- set_options helpers (effects.go:520-635) -------------------------
+    set_flags = F.coalesce(body["set_flags"], F.array().cast("array<int>"))
+    clear_flags = F.coalesce(
+        body["clear_flags"], F.array().cast("array<int>")
+    )
+
+    def _flag_detail(bit: int):
+        return (
+            F.when(F.array_contains(set_flags, bit), F.lit(True))
+            .when(F.array_contains(clear_flags, bit), F.lit(False))
         )
 
-        def _flag_detail(bit: int):
-            return (
-                F.when(F.array_contains(set_flags, bit), F.lit(True))
-                .when(F.array_contains(clear_flags, bit), F.lit(False))
-            )
+    flags_details = _j(
+        auth_required_flag=_flag_detail(1),
+        auth_revocable_flag=_flag_detail(2),
+        auth_immutable_flag=_flag_detail(4),
+        auth_clawback_enabled_flag=_flag_detail(8),
+    )
+    any_known_flag = F.exists(
+        F.array_union(set_flags, clear_flags), lambda b: b.isin(1, 2, 4, 8)
+    )
 
-        flags_details = _j(
-            auth_required_flag=_flag_detail(1),
-            auth_revocable_flag=_flag_detail(2),
-            auth_immutable_flag=_flag_detail(4),
-            auth_clawback_enabled_flag=_flag_detail(8),
-        )
-        any_known_flag = F.exists(
-            F.array_union(set_flags, clear_flags), lambda b: b.isin(1, 2, 4, 8)
-        )
-
-        # signer diffs from account changes (SignerSummary diff,
-        # effects.go:569-634); falls back to the op body's signer field when
-        # the fixture/source carries no account signer lists.
-        def _signer_map(signers):
-            return F.map_from_entries(
-                F.transform(
-                    F.coalesce(
-                        signers,
-                        F.array().cast(
-                            "array<struct<key:string,weight:int,sponsor:string>>"
-                        ),
+    # signer diffs from account changes (SignerSummary diff,
+    # effects.go:569-634); falls back to the op body's signer field when
+    # the fixture/source carries no account signer lists.
+    def _signer_map(signers):
+        return F.map_from_entries(
+            F.transform(
+                F.coalesce(
+                    signers,
+                    F.array().cast(
+                        "array<struct<key:string,weight:int,sponsor:string>>"
                     ),
-                    lambda s: F.struct(s["key"], s["weight"]),
-                )
-            )
-
-        def _signer_diff(c):
-            before, after = (
-                _signer_map(c["pre"]["signers"]),
-                _signer_map(c["post"]["signers"]),
-            )
-            before_keys = F.array_sort(F.map_keys(before))
-            after_keys = F.array_sort(F.map_keys(after))
-            removed_updated = F.flatten(
-                F.transform(
-                    before_keys,
-                    lambda k: F.when(
-                        F.try_element_at(after, k).isNull(),
-                        F.array(
-                            _effect("signer_removed", source, _j(public_key=k))
-                        ),
-                    )
-                    .when(
-                        F.try_element_at(after, k) != F.try_element_at(before, k),
-                        F.array(
-                            _effect(
-                                "signer_updated",
-                                source,
-                                _j(
-                                    public_key=k,
-                                    weight=F.try_element_at(after, k),
-                                ),
-                            )
-                        ),
-                    )
-                    .otherwise(empty),
-                )
-            )
-            created = F.flatten(
-                F.transform(
-                    after_keys,
-                    lambda k: F.when(
-                        F.try_element_at(before, k).isNull(),
-                        F.array(
-                            _effect(
-                                "signer_created",
-                                source,
-                                _j(
-                                    public_key=k,
-                                    weight=F.try_element_at(after, k),
-                                ),
-                            )
-                        ),
-                    ).otherwise(empty),
-                )
-            )
-            return F.concat(removed_updated, created)
-
-        body_fallback_signers = (
-            F.when(
-                body["signer_key"].isNotNull() & (body["signer_weight"] > 0),
-                F.array(
-                    _effect(
-                        "signer_created",
-                        source,
-                        _j(
-                            public_key=body["signer_key"],
-                            weight=body["signer_weight"],
-                        ),
-                    )
                 ),
+                lambda s: F.struct(s["key"], s["weight"]),
             )
-            .when(
-                body["signer_key"].isNotNull() & (body["signer_weight"] == 0),
-                F.array(
-                    _effect(
-                        "signer_removed",
-                        source,
-                        _j(public_key=body["signer_key"]),
-                    )
-                ),
-            )
-            .otherwise(empty)
         )
-        if has_changes:
-            acct_signer_changes = F.filter(
-                chg,
-                lambda c: (c["entry_type"] == "account")
-                & c["pre"].isNotNull()
-                & c["post"].isNotNull()
-                & (
-                    c["pre"]["signers"].isNotNull()
-                    | c["post"]["signers"].isNotNull()
-                ),
+
+    def _signer_diff(c):
+        before, after = (
+            _signer_map(c["pre"]["signers"]),
+            _signer_map(c["post"]["signers"]),
+        )
+        before_keys = F.array_sort(F.map_keys(before))
+        after_keys = F.array_sort(F.map_keys(after))
+        removed_updated = F.flatten(
+            F.transform(
+                before_keys,
+                lambda k: F.when(
+                    F.try_element_at(after, k).isNull(),
+                    F.array(
+                        _effect("signer_removed", source, _j(public_key=k))
+                    ),
+                )
+                .when(
+                    F.try_element_at(after, k) != F.try_element_at(before, k),
+                    F.array(
+                        _effect(
+                            "signer_updated",
+                            source,
+                            _j(
+                                public_key=k,
+                                weight=F.try_element_at(after, k),
+                            ),
+                        )
+                    ),
+                )
+                .otherwise(empty),
             )
-            change_driven_signers = F.flatten(
-                F.transform(acct_signer_changes, _signer_diff)
+        )
+        created = F.flatten(
+            F.transform(
+                after_keys,
+                lambda k: F.when(
+                    F.try_element_at(before, k).isNull(),
+                    F.array(
+                        _effect(
+                            "signer_created",
+                            source,
+                            _j(
+                                public_key=k,
+                                weight=F.try_element_at(after, k),
+                            ),
+                        )
+                    ),
+                ).otherwise(empty),
             )
-            signer_effects = F.when(
-                F.size(acct_signer_changes) > 0, change_driven_signers
-            ).otherwise(body_fallback_signers)
-        else:
-            # no row carries changes → the change-driven arm can never fire
-            signer_effects = body_fallback_signers
+        )
+        return F.concat(removed_updated, created)
+
+    body_fallback_signers = (
+        F.when(
+            body["signer_key"].isNotNull() & (body["signer_weight"] > 0),
+            F.array(
+                _effect(
+                    "signer_created",
+                    source,
+                    _j(
+                        public_key=body["signer_key"],
+                        weight=body["signer_weight"],
+                    ),
+                )
+            ),
+        )
+        .when(
+            body["signer_key"].isNotNull() & (body["signer_weight"] == 0),
+            F.array(
+                _effect(
+                    "signer_removed",
+                    source,
+                    _j(public_key=body["signer_key"]),
+                )
+            ),
+        )
+        .otherwise(empty)
+    )
+    acct_signer_changes = F.filter(
+        chg,
+        lambda c: (c["entry_type"] == "account")
+        & c["pre"].isNotNull()
+        & c["post"].isNotNull()
+        & (
+            c["pre"]["signers"].isNotNull()
+            | c["post"]["signers"].isNotNull()
+        ),
+    )
+    change_driven_signers = F.flatten(
+        F.transform(acct_signer_changes, _signer_diff)
+    )
+    signer_effects = F.when(
+        F.size(acct_signer_changes) > 0, change_driven_signers
+    ).otherwise(body_fallback_signers)
 
     # ---- change_trust: change-driven created/updated/removed --------------
     # (effects.go:637-696; first trustline change whose pool-ness matches the
     # op line wins; an op with changes but no matching trustline change emits
     # nothing — the account-trusts-itself regression, effects_test.go:2029).
-    if pr(6):
-        line_is_pool = F.coalesce(
-            body["line"]["asset_type"] == "pool_share", F.lit(False)
+    line_is_pool = F.coalesce(
+        body["line"]["asset_type"] == "pool_share", F.lit(False)
+    )
+
+    def _tl_is_pool(c):
+        e = _entry(c)
+        return e["pool_id"].isNotNull() | F.coalesce(
+            e["asset"]["asset_type"] == "pool_share", F.lit(False)
         )
 
-        def _tl_is_pool(c):
-            e = _entry(c)
-            return e["pool_id"].isNotNull() | F.coalesce(
-                e["asset"]["asset_type"] == "pool_share", F.lit(False)
-            )
-
-        # legacy limit heuristic when the source carries no change list at all
-        change_trust_legacy = (
-            F.when(
-                body["limit"] > 0,
-                F.array(
-                    _effect(
-                        "trustline_created",
-                        source,
-                        _j(
-                            asset_type=body["line"]["asset_type"],
-                            asset_code=body["line"]["asset_code"],
-                            asset_issuer=body["line"]["asset_issuer"],
-                            limit=_amt_str(body["limit"]),
-                        ),
-                    )
-                ),
-            )
-            .when(
-                body["limit"] == 0,
-                F.array(
-                    _effect(
-                        "trustline_removed",
-                        source,
-                        _j(
-                            asset_type=body["line"]["asset_type"],
-                            asset_code=body["line"]["asset_code"],
-                            asset_issuer=body["line"]["asset_issuer"],
-                        ),
-                    )
-                ),
-            )
-            .otherwise(empty)
-        )
-        if has_changes:
-            tl_matches = F.filter(
-                chg,
-                lambda c: (c["entry_type"] == "trustline")
-                & (_tl_is_pool(c) == line_is_pool),
-            )
-            first_tl = F.try_element_at(tl_matches, F.lit(1))
-            tl_verb = (
-                F.when(first_tl["pre"].isNull(), F.lit("trustline_created"))
-                .when(first_tl["post"].isNull(), F.lit("trustline_removed"))
-                .otherwise(F.lit("trustline_updated"))
-            )
-            tl_details = F.when(
-                line_is_pool,
-                _j(
-                    limit=_amt_str(body["limit"]),
-                    asset_type=F.lit("liquidity_pool_shares"),
-                    liquidity_pool_id=body["pool_id"],
-                ),
-            ).otherwise(
-                _j(
-                    limit=_amt_str(body["limit"]),
-                    asset_type=body["line"]["asset_type"],
-                    asset_code=body["line"]["asset_code"],
-                    asset_issuer=body["line"]["asset_issuer"],
+    # legacy limit heuristic when the source carries no change list at all
+    change_trust_legacy = (
+        F.when(
+            body["limit"] > 0,
+            F.array(
+                _effect(
+                    "trustline_created",
+                    source,
+                    _j(
+                        asset_type=body["line"]["asset_type"],
+                        asset_code=body["line"]["asset_code"],
+                        asset_issuer=body["line"]["asset_issuer"],
+                        limit=_amt_str(body["limit"]),
+                    ),
                 )
-            )
-            change_trust_driven = F.when(
-                first_tl.isNotNull(),
-                F.array(_effect_dyn(tl_verb, source, tl_details)),
-            ).otherwise(empty)
-            change_trust_effects = F.when(
-                F.size(chg) == 0, change_trust_legacy
-            ).otherwise(change_trust_driven)
-        else:
-            # size(chg) == 0 on every row → always the legacy arm
-            change_trust_effects = change_trust_legacy
+            ),
+        )
+        .when(
+            body["limit"] == 0,
+            F.array(
+                _effect(
+                    "trustline_removed",
+                    source,
+                    _j(
+                        asset_type=body["line"]["asset_type"],
+                        asset_code=body["line"]["asset_code"],
+                        asset_issuer=body["line"]["asset_issuer"],
+                    ),
+                )
+            ),
+        )
+        .otherwise(empty)
+    )
+    tl_matches = F.filter(
+        chg,
+        lambda c: (c["entry_type"] == "trustline")
+        & (_tl_is_pool(c) == line_is_pool),
+    )
+    first_tl = F.try_element_at(tl_matches, F.lit(1))
+    tl_verb = (
+        F.when(first_tl["pre"].isNull(), F.lit("trustline_created"))
+        .when(first_tl["post"].isNull(), F.lit("trustline_removed"))
+        .otherwise(F.lit("trustline_updated"))
+    )
+    tl_details = F.when(
+        line_is_pool,
+        _j(
+            limit=_amt_str(body["limit"]),
+            asset_type=F.lit("liquidity_pool_shares"),
+            liquidity_pool_id=body["pool_id"],
+        ),
+    ).otherwise(
+        _j(
+            limit=_amt_str(body["limit"]),
+            asset_type=body["line"]["asset_type"],
+            asset_code=body["line"]["asset_code"],
+            asset_issuer=body["line"]["asset_issuer"],
+        )
+    )
+    change_trust_driven = F.when(
+        first_tl.isNotNull(),
+        F.array(_effect_dyn(tl_verb, source, tl_details)),
+    ).otherwise(empty)
+    change_trust_effects = F.when(
+        F.size(chg) == 0, change_trust_legacy
+    ).otherwise(change_trust_driven)
 
     # ---- liquidity-pool revocation (effects.go:1142-1266, simplified) -----
     # allow_trust / set_trust_line_flags revoking pool-share trustlines create
     # claimable balances for the redeemed reserves; emit CB-created effects
     # then liquidity_pool_revoked with the revoked reserves.  Entirely
-    # change-driven: with no changes anywhere it is provably empty.
-    lp_revocation_possible = pr(7, 21) and has_changes
+    # change-driven.
     cb_created_changes = F.filter(
         chg,
         lambda c: (c["entry_type"] == "claimable_balance")
@@ -621,45 +582,42 @@ def _effects_array_expr_impl(
             ),
         )
 
-    if lp_revocation_possible:
-        lp_revoked_effects = F.when(
-            (F.size(cb_created_changes) > 0) & lp_pre_change.isNotNull(),
-            F.concat(
-                F.flatten(F.transform(cb_created_changes, _cb_created_effects)),
-                F.array(
-                    _effect(
-                        "liquidity_pool_revoked",
-                        source,
-                        _j(
-                            liquidity_pool_id=lp_pre_change["pre"]["pool_id"],
-                            shares_revoked=_amt_str(
-                                lp_pre_change["pre"]["total_shares"]
-                                - F.coalesce(
-                                    lp_pre_change["post"]["total_shares"],
-                                    F.lit(0),
-                                )
-                            ),
-                            reserves_revoked=F.transform(
-                                cb_created_changes,
-                                lambda c: F.struct(
-                                    _canonical(c["post"]["asset"]).alias(
-                                        "asset"
-                                    ),
-                                    _amt_str(c["post"]["amount"]).alias(
-                                        "amount"
-                                    ),
-                                    c["post"]["balance_id"].alias(
-                                        "claimable_balance_id"
-                                    ),
+    lp_revoked_effects = F.when(
+        (F.size(cb_created_changes) > 0) & lp_pre_change.isNotNull(),
+        F.concat(
+            F.flatten(F.transform(cb_created_changes, _cb_created_effects)),
+            F.array(
+                _effect(
+                    "liquidity_pool_revoked",
+                    source,
+                    _j(
+                        liquidity_pool_id=lp_pre_change["pre"]["pool_id"],
+                        shares_revoked=_amt_str(
+                            lp_pre_change["pre"]["total_shares"]
+                            - F.coalesce(
+                                lp_pre_change["post"]["total_shares"],
+                                F.lit(0),
+                            )
+                        ),
+                        reserves_revoked=F.transform(
+                            cb_created_changes,
+                            lambda c: F.struct(
+                                _canonical(c["post"]["asset"]).alias(
+                                    "asset"
+                                ),
+                                _amt_str(c["post"]["amount"]).alias(
+                                    "amount"
+                                ),
+                                c["post"]["balance_id"].alias(
+                                    "claimable_balance_id"
                                 ),
                             ),
                         ),
-                    )
-                ),
+                    ),
+                )
             ),
-        ).otherwise(empty)
-    else:
-        lp_revoked_effects = empty
+        ),
+    ).otherwise(empty)
 
     # ---- allow_trust / set_trust_line_flags details (effects.go:697-729,
     # 1091-1127) ------------------------------------------------------------
@@ -713,23 +671,15 @@ def _effects_array_expr_impl(
     )
 
     # ---- footprint ops: affected ttl entries (effects.go:1432-1513) -------
-    # with no changes anywhere the filter is provably [] — emit the same
-    # empty list without the per-row scan
-    ttl_entries = (
-        F.transform(
-            F.filter(
-                chg,
-                lambda c: (c["entry_type"] == "ttl") & c["post"].isNotNull(),
-            ),
-            lambda c: c["post"]["key_hash"],
-        )
-        if has_changes
-        else F.array().cast("array<string>")
+    ttl_entries = F.transform(
+        F.filter(
+            chg,
+            lambda c: (c["entry_type"] == "ttl") & c["post"].isNotNull(),
+        ),
+        lambda c: c["post"]["key_hash"],
     )
 
-    # ---- the op-type switch, as a PRUNED branch list: only families whose
-    # op type can occur are built (absent branches provably yield empty
-    # arrays, so the emitted rows are identical) ----------------------------
+    # ---- the op-type switch (effects.go:73-135), one branch per family -----
     branches: list[tuple[Column, Column]] = []
 
     def _br(cond: Column, val: Column) -> None:
@@ -737,432 +687,407 @@ def _effects_array_expr_impl(
 
     # create_account → account_created + account_debited + signer_created
     # (effects.go:401-427)
-    if pr(0):
-        _br(
-            t == 0,
-            F.array(
-                _effect(
-                    "account_created",
-                    body["account"],
-                    _j(starting_balance=_amt_str(body["starting_balance"])),
-                ),
-                _effect(
-                    "account_debited",
-                    source,
-                    _j(
-                        asset_type=F.lit("native"),
-                        amount=_amt_str(body["starting_balance"]),
-                    ),
-                ),
-                _effect(
-                    "signer_created",
-                    body["account"],
-                    _j(weight=F.lit(1), public_key=body["account"]),
+    _br(
+        t == 0,
+        F.array(
+            _effect(
+                "account_created",
+                body["account"],
+                _j(starting_balance=_amt_str(body["starting_balance"])),
+            ),
+            _effect(
+                "account_debited",
+                source,
+                _j(
+                    asset_type=F.lit("native"),
+                    amount=_amt_str(body["starting_balance"]),
                 ),
             ),
-        )
+            _effect(
+                "signer_created",
+                body["account"],
+                _j(weight=F.lit(1), public_key=body["account"]),
+            ),
+        ),
+    )
     # payment → credited(dest) + debited(source) (effects.go:429-445)
-    if pr(1):
-        _br(
-            t == 1,
-            F.array(
-                _effect("account_credited", body["to"], asset_json),
-                _effect(
-                    "account_debited",
-                    F.coalesce(body["from"], source),
-                    asset_json,
-                ),
+    _br(
+        t == 1,
+        F.array(
+            _effect("account_credited", body["to"], asset_json),
+            _effect(
+                "account_debited",
+                F.coalesce(body["from"], source),
+                asset_json,
             ),
-        )
+        ),
+    )
     # path_payment_strict_receive → credited(dest, op.DestAmount) +
     # debited(source, result.SendAmount) (effects.go:447-472); the trade
     # family appends below
-    if pr(2):
-        _br(
-            t == 2,
-            F.array(
-                _effect(
-                    "account_credited",
-                    body["to"],
-                    _j(
-                        amount=_amt(body["dest_amount"]),
-                        **_asset_kv(body["dest_asset"]),
-                    ),
-                ),
-                _effect(
-                    "account_debited",
-                    source,
-                    _j(
-                        amount=_amt(body["source_amount"]),
-                        **_asset_kv(body["send_asset"]),
-                    ),
+    _br(
+        t == 2,
+        F.array(
+            _effect(
+                "account_credited",
+                body["to"],
+                _j(
+                    amount=_amt(body["dest_amount"]),
+                    **_asset_kv(body["dest_asset"]),
                 ),
             ),
-        )
+            _effect(
+                "account_debited",
+                source,
+                _j(
+                    amount=_amt(body["source_amount"]),
+                    **_asset_kv(body["send_asset"]),
+                ),
+            ),
+        ),
+    )
     # path_payment_strict_send → credited(dest, result.DestAmount) +
     # debited(source, op.SendAmount) (effects.go:474-489); silver fills
     # body.amount from the result, body.source_amount from the op
-    if pr(13):
-        _br(
-            t == 13,
-            F.array(
-                _effect(
-                    "account_credited",
-                    body["to"],
-                    _j(
-                        amount=_amt(body["amount"]),
-                        **_asset_kv(body["dest_asset"]),
-                    ),
-                ),
-                _effect(
-                    "account_debited",
-                    source,
-                    _j(
-                        amount=_amt(body["source_amount"]),
-                        **_asset_kv(body["send_asset"]),
-                    ),
+    _br(
+        t == 13,
+        F.array(
+            _effect(
+                "account_credited",
+                body["to"],
+                _j(
+                    amount=_amt(body["amount"]),
+                    **_asset_kv(body["dest_asset"]),
                 ),
             ),
-        )
+            _effect(
+                "account_debited",
+                source,
+                _j(
+                    amount=_amt(body["source_amount"]),
+                    **_asset_kv(body["send_asset"]),
+                ),
+            ),
+        ),
+    )
     # account_merge → debited(src, result.sourceAccountBalance) +
     # credited(dest) + removed(src, {}) (effects.go:730-743)
-    if pr(8):
-        _br(
-            t == 8,
-            F.array(
-                _effect(
-                    "account_debited",
-                    source,
-                    _j(
-                        amount=_amt(body["source_amount"]),
-                        asset_type=F.lit("native"),
-                    ),
+    _br(
+        t == 8,
+        F.array(
+            _effect(
+                "account_debited",
+                source,
+                _j(
+                    amount=_amt(body["source_amount"]),
+                    asset_type=F.lit("native"),
                 ),
-                _effect(
-                    "account_credited",
-                    F.coalesce(body["account"], body["to"]),
-                    _j(
-                        amount=_amt(body["source_amount"]),
-                        asset_type=F.lit("native"),
-                    ),
-                ),
-                _effect("account_removed", source, _empty_details),
             ),
-        )
+            _effect(
+                "account_credited",
+                F.coalesce(body["account"], body["to"]),
+                _j(
+                    amount=_amt(body["source_amount"]),
+                    asset_type=F.lit("native"),
+                ),
+            ),
+            _effect("account_removed", source, _empty_details),
+        ),
+    )
     # change_trust → created/updated/removed (effects.go:637-696)
-    if pr(6):
-        _br(t == 6, change_trust_effects)
+    _br(t == 6, change_trust_effects)
     # allow_trust → TWO trustline_flags_updated effects, both addressed
     # to the SOURCE (the issuer): the legacy details {trustor, asset}
     # and the forward-compat flag effect (effects.go:697-729)
-    if pr(7):
-        _br(
-            t == 7,
-            F.concat(
-                F.array(
-                    _effect(
-                        "trustline_flags_updated",
-                        source,
-                        allow_trust_base_details,
-                    ),
-                    _effect(
-                        "trustline_flags_updated",
-                        source,
-                        allow_trust_flag_details,
-                    ),
+    _br(
+        t == 7,
+        F.concat(
+            F.array(
+                _effect(
+                    "trustline_flags_updated",
+                    source,
+                    allow_trust_base_details,
                 ),
-                lp_revoked_effects,
+                _effect(
+                    "trustline_flags_updated",
+                    source,
+                    allow_trust_flag_details,
+                ),
             ),
-        )
+            lp_revoked_effects,
+        ),
+    )
     # set_trust_line_flags → one flags effect from the op's set/clear
     # masks (addSetTrustLineFlagsEffects, effects.go:1091-1096)
-    if pr(21):
-        _br(
-            t == 21,
-            F.concat(
-                F.array(
-                    _effect(
-                        "trustline_flags_updated",
-                        source,
-                        set_tl_flags_details,
-                    )
-                ),
-                lp_revoked_effects,
+    _br(
+        t == 21,
+        F.concat(
+            F.array(
+                _effect(
+                    "trustline_flags_updated",
+                    source,
+                    set_tl_flags_details,
+                )
             ),
-        )
+            lp_revoked_effects,
+        ),
+    )
     # set_options → home domain / thresholds / flags / inflation dest /
     # signer effects, in reference order (effects.go:520-635)
-    if pr(5):
-        _br(
-            t == 5,
-            F.concat(
-                F.when(
-                    body["home_domain"].isNotNull(),
-                    F.array(
-                        _effect(
-                            "account_home_domain_updated",
-                            source,
-                            _j(home_domain=body["home_domain"]),
-                        )
-                    ),
-                ).otherwise(empty),
-                F.when(
-                    body["low_threshold"].isNotNull()
-                    | body["med_threshold"].isNotNull()
-                    | body["high_threshold"].isNotNull(),
-                    F.array(
-                        _effect(
-                            "account_thresholds_updated",
-                            source,
-                            _j(
-                                low_threshold=body["low_threshold"],
-                                med_threshold=body["med_threshold"],
-                                high_threshold=body["high_threshold"],
-                            ),
-                        )
-                    ),
-                ).otherwise(empty),
-                F.when(
-                    any_known_flag,
-                    F.array(_effect("account_flags_updated", source, flags_details)),
-                ).otherwise(empty),
-                F.when(
-                    body["inflation_dest"].isNotNull(),
-                    F.array(
-                        _effect(
-                            "account_inflation_destination_updated",
-                            source,
-                            _j(inflation_destination=body["inflation_dest"]),
-                        )
-                    ),
-                ).otherwise(empty),
-                signer_effects,
-            ),
-        )
+    _br(
+        t == 5,
+        F.concat(
+            F.when(
+                body["home_domain"].isNotNull(),
+                F.array(
+                    _effect(
+                        "account_home_domain_updated",
+                        source,
+                        _j(home_domain=body["home_domain"]),
+                    )
+                ),
+            ).otherwise(empty),
+            F.when(
+                body["low_threshold"].isNotNull()
+                | body["med_threshold"].isNotNull()
+                | body["high_threshold"].isNotNull(),
+                F.array(
+                    _effect(
+                        "account_thresholds_updated",
+                        source,
+                        _j(
+                            low_threshold=body["low_threshold"],
+                            med_threshold=body["med_threshold"],
+                            high_threshold=body["high_threshold"],
+                        ),
+                    )
+                ),
+            ).otherwise(empty),
+            F.when(
+                any_known_flag,
+                F.array(_effect("account_flags_updated", source, flags_details)),
+            ).otherwise(empty),
+            F.when(
+                body["inflation_dest"].isNotNull(),
+                F.array(
+                    _effect(
+                        "account_inflation_destination_updated",
+                        source,
+                        _j(inflation_destination=body["inflation_dest"]),
+                    )
+                ),
+            ).otherwise(empty),
+            signer_effects,
+        ),
+    )
     # inflation → one account_credited per payout (effects.go:745-755)
-    if pr(9):
-        _br(
-            t == 9,
-            F.transform(
-                F.coalesce(
-                    body["payouts"],
-                    F.array().cast(
-                        "array<struct<destination:string,amount:long>>"
-                    ),
-                ),
-                lambda p: _effect(
-                    "account_credited",
-                    p["destination"],
-                    _j(
-                        amount=_amt_str(p["amount"]),
-                        asset_type=F.lit("native"),
-                    ),
+    _br(
+        t == 9,
+        F.transform(
+            F.coalesce(
+                body["payouts"],
+                F.array().cast(
+                    "array<struct<destination:string,amount:long>>"
                 ),
             ),
-        )
+            lambda p: _effect(
+                "account_credited",
+                p["destination"],
+                _j(
+                    amount=_amt_str(p["amount"]),
+                    asset_type=F.lit("native"),
+                ),
+            ),
+        ),
+    )
     # manage_data → data created/removed/updated (effects.go:757-797): the
     # FIRST data-entry change decides the verb (before==nil → created,
     # after==nil → removed, both → updated); the body's value nullity is the
     # fallback heuristic when the source carries no change list (it cannot
     # distinguish created from updated — change-less fixtures only).
-    if pr(10):
-        data_details = _j(name=body["data_name"], value=body["data_value"])
-        body_verb = F.when(
-            body["data_value"].isNotNull(), F.lit("data_created")
-        ).otherwise(F.lit("data_removed"))
-        if has_changes:
-            first_data = F.try_element_at(
-                F.filter(chg, lambda c: c["entry_type"] == "data"), F.lit(1)
-            )
-            data_verb = (
-                F.when(first_data.isNull(), body_verb)
-                .when(
-                    first_data["pre"].isNull() & first_data["post"].isNotNull(),
-                    F.lit("data_created"),
-                )
-                .when(
-                    first_data["pre"].isNotNull() & first_data["post"].isNull(),
-                    F.lit("data_removed"),
-                )
-                .otherwise(F.lit("data_updated"))
-            )
-        else:
-            data_verb = body_verb
-        _br(
-            t == 10,
-            F.array(_effect_dyn(data_verb, source, data_details)),
+    data_details = _j(name=body["data_name"], value=body["data_value"])
+    body_verb = F.when(
+        body["data_value"].isNotNull(), F.lit("data_created")
+    ).otherwise(F.lit("data_removed"))
+    first_data = F.try_element_at(
+        F.filter(chg, lambda c: c["entry_type"] == "data"), F.lit(1)
+    )
+    data_verb = (
+        F.when(first_data.isNull(), body_verb)
+        .when(
+            first_data["pre"].isNull() & first_data["post"].isNotNull(),
+            F.lit("data_created"),
         )
+        .when(
+            first_data["pre"].isNotNull() & first_data["post"].isNull(),
+            F.lit("data_removed"),
+        )
+        .otherwise(F.lit("data_updated"))
+    )
+    _br(
+        t == 10,
+        F.array(_effect_dyn(data_verb, source, data_details)),
+    )
     # bump_sequence → sequence_bumped (effects.go:798-832)
-    if pr(11):
-        _br(
-            t == 11,
-            F.array(
-                _effect(
-                    "sequence_bumped", source, _j(new_seq=body["bump_to"])
-                )
-            ),
-        )
+    _br(
+        t == 11,
+        F.array(
+            _effect(
+                "sequence_bumped", source, _j(new_seq=body["bump_to"])
+            )
+        ),
+    )
     # create_claimable_balance → created + one claimant effect per claimant
     # (effects.go:833-905)
-    if pr(14):
-        _br(
-            t == 14,
-            F.concat(
-                F.array(
-                    _effect(
-                        "claimable_balance_created",
-                        source,
-                        _j(balance_id=body["balance_id"], amount=amount),
-                    )
-                ),
-                F.transform(
-                    body["claimants"],
-                    lambda c: _effect(
-                        "claimable_balance_claimant_created",
-                        c["destination"],
-                        _j(balance_id=body["balance_id"], amount=amount),
-                    ),
+    _br(
+        t == 14,
+        F.concat(
+            F.array(
+                _effect(
+                    "claimable_balance_created",
+                    source,
+                    _j(balance_id=body["balance_id"], amount=amount),
+                )
+            ),
+            F.transform(
+                body["claimants"],
+                lambda c: _effect(
+                    "claimable_balance_claimant_created",
+                    c["destination"],
+                    _j(balance_id=body["balance_id"], amount=amount),
                 ),
             ),
-        )
+        ),
+    )
     # claim_claimable_balance → claimed{balance_id, asset, amount} +
     # account_credited (effects.go:906-964)
-    if pr(15):
-        _br(
-            t == 15,
-            F.concat(
+    _br(
+        t == 15,
+        F.concat(
+            F.array(
+                _effect(
+                    "claimable_balance_claimed",
+                    source,
+                    _j(
+                        amount=amount,
+                        balance_id=body["balance_id"],
+                        asset=F.when(
+                            body["asset"].isNotNull(), _canonical(body["asset"])
+                        ),
+                    ),
+                )
+            ),
+            F.when(
+                body["amount"].isNotNull(),
+                F.array(_effect("account_credited", source, asset_json)),
+            ).otherwise(empty),
+        ),
+    )
+    # clawback → credited(issuer=source) THEN debited(from)
+    # (effects.go:1033-1055 order)
+    _br(
+        t == 19,
+        F.array(
+            _effect("account_credited", source, asset_json),
+            _effect("account_debited", body["from"], asset_json),
+        ),
+    )
+    # clawback_claimable_balance → clawed_back + credited from the removed
+    # CB entry (effects.go:1057-1089)
+    _br(
+        t == 20,
+        F.concat(
+            F.array(
+                _effect(
+                    "claimable_balance_clawed_back",
+                    source,
+                    _j(balance_id=body["balance_id"]),
+                )
+            ),
+            F.when(
+                first_removed_cb.isNotNull(),
                 F.array(
                     _effect(
-                        "claimable_balance_claimed",
+                        "account_credited",
                         source,
                         _j(
-                            amount=amount,
-                            balance_id=body["balance_id"],
-                            asset=F.when(
-                                body["asset"].isNotNull(), _canonical(body["asset"])
+                            amount=_amt_str(
+                                first_removed_cb["pre"]["amount"]
                             ),
+                            asset_type=first_removed_cb["pre"]["asset"][
+                                "asset_type"
+                            ],
+                            asset_code=first_removed_cb["pre"]["asset"][
+                                "asset_code"
+                            ],
+                            asset_issuer=first_removed_cb["pre"]["asset"][
+                                "asset_issuer"
+                            ],
                         ),
                     )
                 ),
-                F.when(
-                    body["amount"].isNotNull(),
-                    F.array(_effect("account_credited", source, asset_json)),
-                ).otherwise(empty),
-            ),
-        )
-    # clawback → credited(issuer=source) THEN debited(from)
-    # (effects.go:1033-1055 order)
-    if pr(19):
-        _br(
-            t == 19,
-            F.array(
-                _effect("account_credited", source, asset_json),
-                _effect("account_debited", body["from"], asset_json),
-            ),
-        )
-    # clawback_claimable_balance → clawed_back + credited from the removed
-    # CB entry (effects.go:1057-1089)
-    if pr(20):
-        _br(
-            t == 20,
-            F.concat(
-                F.array(
-                    _effect(
-                        "claimable_balance_clawed_back",
-                        source,
-                        _j(balance_id=body["balance_id"]),
-                    )
-                ),
-                F.when(
-                    first_removed_cb.isNotNull(),
-                    F.array(
-                        _effect(
-                            "account_credited",
-                            source,
-                            _j(
-                                amount=_amt_str(
-                                    first_removed_cb["pre"]["amount"]
-                                ),
-                                asset_type=first_removed_cb["pre"]["asset"][
-                                    "asset_type"
-                                ],
-                                asset_code=first_removed_cb["pre"]["asset"][
-                                    "asset_code"
-                                ],
-                                asset_issuer=first_removed_cb["pre"]["asset"][
-                                    "asset_issuer"
-                                ],
-                            ),
-                        )
-                    ),
-                ).otherwise(empty),
-            ),
-        )
+            ).otherwise(empty),
+        ),
+    )
     # liquidity pool deposit / withdraw (effects.go:1268-1318)
-    if pr(22):
-        _br(
-            t == 22,
-            F.array(
-                _effect(
-                    "liquidity_pool_deposited",
-                    source,
-                    _j(
-                        liquidity_pool_id=body["pool_id"],
-                        shares_received=_amt_str(body["shares"]),
-                    ),
-                )
-            ),
-        )
-    if pr(23):
-        _br(
-            t == 23,
-            F.array(
-                _effect(
-                    "liquidity_pool_withdrew",
-                    source,
-                    _j(
-                        liquidity_pool_id=body["pool_id"],
-                        shares_redeemed=_amt_str(body["shares"]),
-                    ),
-                )
-            ),
-        )
+    _br(
+        t == 22,
+        F.array(
+            _effect(
+                "liquidity_pool_deposited",
+                source,
+                _j(
+                    liquidity_pool_id=body["pool_id"],
+                    shares_received=_amt_str(body["shares"]),
+                ),
+            )
+        ),
+    )
+    _br(
+        t == 23,
+        F.array(
+            _effect(
+                "liquidity_pool_withdrew",
+                source,
+                _j(
+                    liquidity_pool_id=body["pool_id"],
+                    shares_redeemed=_amt_str(body["shares"]),
+                ),
+            )
+        ),
+    )
     # extend_footprint_ttl / restore_footprint (effects.go:1432-1513)
-    if pr(25):
-        _br(
-            t == 25,
-            F.array(
-                _effect(
-                    "extend_footprint_ttl",
-                    source,
-                    _j(entries=ttl_entries, extend_to=body["extend_to"]),
-                )
-            ),
-        )
-    if pr(26):
-        _br(
-            t == 26,
-            F.array(
-                _effect("restore_footprint", source, _j(entries=ttl_entries))
-            ),
-        )
+    _br(
+        t == 25,
+        F.array(
+            _effect(
+                "extend_footprint_ttl",
+                source,
+                _j(entries=ttl_entries, extend_to=body["extend_to"]),
+            )
+        ),
+    )
+    _br(
+        t == 26,
+        F.array(
+            _effect("restore_footprint", source, _j(entries=ttl_entries))
+        ),
+    )
     # begin/end/revoke sponsoring, manage offers, invoke host fn: direct
     # effects come only from changes / atoms / events (effects.go:105-107)
-    chain = None
-    for _cond, _val in branches:
-        chain = F.when(_cond, _val) if chain is None else chain.when(_cond, _val)
-    effects_array = chain.otherwise(empty) if chain is not None else empty
+    chain = F.when(*branches[0])
+    for cond, val in branches[1:]:
+        chain = chain.when(cond, val)
+    effects_array = chain.otherwise(empty)
 
     # trade-capable ops append the per-atom effect family
-    # (addIngestTradeEffects; offer_created skipped for strict-send) — built
-    # only when a trade-capable op type AND a non-empty atom list can occur
-    if has_atoms and pr(2, 3, 4, 12, 13):
-        trade_part = F.when(
-            t == 13, _trade_family(skip_offer_created=True)
-        ).when(
-            t.isin(2, 3, 4, 12), _trade_family(skip_offer_created=False)
-        ).otherwise(empty)
-        effects_array = F.concat(effects_array, trade_part)
+    # (addIngestTradeEffects; offer_created skipped for strict-send)
+    trade_part = F.when(
+        t == 13, _trade_family(skip_offer_created=True)
+    ).when(
+        t.isin(2, 3, 4, 12), _trade_family(skip_offer_created=False)
+    ).otherwise(empty)
+    effects_array = F.concat(effects_array, trade_part)
 
     # ---- change-driven sponsorship state machine (effects.go:197-368) -----
     # per entry change: entry-family sponsorship transition, then per-signer
@@ -1323,18 +1248,17 @@ def _effects_array_expr_impl(
             )
         )
 
-    if has_changes:
-        effects_array = F.concat(
-            effects_array,
-            F.flatten(
-                F.transform(
-                    chg,
-                    lambda c: F.concat(
-                        _entry_sponsorship(c), _signer_sponsorship(c)
-                    ),
-                )
-            ),
-        )
+    effects_array = F.concat(
+        effects_array,
+        F.flatten(
+            F.transform(
+                chg,
+                lambda c: F.concat(
+                    _entry_sponsorship(c), _signer_sponsorship(c)
+                ),
+            )
+        ),
+    )
 
     # ---- liquidity-pool entry lifecycle (effects.go:370-399) --------------
     def _lp_entry_effects(c):
@@ -1377,66 +1301,34 @@ def _effects_array_expr_impl(
             .otherwise(empty)
         )
 
-    if has_changes:
-        effects_array = F.concat(
-            effects_array, F.flatten(F.transform(chg, _lp_entry_effects))
-        )
+    effects_array = F.concat(
+        effects_array, F.flatten(F.transform(chg, _lp_entry_effects))
+    )
 
+    unknown = [n for n, _ in detail_types or () if n not in emitted]
+    if unknown:
+        raise ValueError(f"detail_types names no effect detail field: {unknown}")
     return effects_array
-
-
-# Session-scoped memo of the codegen-pruning probe: (analyzed logical plan,
-# op-type set).  Keyed by Catalyst's own sameResult() — exact plan
-# equivalence after expression-id canonicalization, so a hit is only
-# possible when re-running the probe would scan the same computation (no
-# hash-collision false positives).  Round-10, VERDICT item 7: the probe is
-# a full pass over the input's ``type`` column PER transform_effects CALL;
-# at 100 TB that is an extra scan per query build.  Same static-input
-# contract as ``prune`` itself (see docstring): a path whose files are
-# rewritten mid-session must pass prune=False.
-_PRESENT_CACHE: list[tuple[object, frozenset]] = []
-
-
-def _present_op_types(operations: DataFrame) -> frozenset:
-    try:
-        plan = operations._jdf.queryExecution().analyzed()
-        for cached_plan, present in _PRESENT_CACHE:
-            if plan.sameResult(cached_plan):
-                return present
-    except Exception:  # py4j internals unavailable → just probe
-        plan = None
-    prow = operations.agg(F.collect_set("type").alias("_ts")).first()
-    present = frozenset(int(x) for x in (prow["_ts"] or []))
-    if plan is not None:
-        _PRESENT_CACHE.append((plan, present))
-        del _PRESENT_CACHE[:-8]
-    return present
 
 
 def transform_effects(
     operations: DataFrame,
     transactions: DataFrame,
     ledgers: DataFrame | None = None,
-    prune: bool = True,
     detail_types: list[tuple[str, str]] | None = None,
 ) -> DataFrame:
     """One row per emitted effect; only successful txs emit (effects.go:55-57).
 
-    ``prune=True`` (the default) runs one column-pruned aggregate over
-    ``operations`` FIRST and builds only the effect families that snapshot
-    can reach.  This requires ``operations`` to be STATIC between the probe
-    action and the main job: a non-deterministic or re-resolved input
-    (e.g. a view over files being rewritten) could grow new op types after
-    the probe and those ops would silently emit zero effects.  For such
-    inputs pass ``prune=False`` (or cache/checkpoint the frame before
-    calling) — the full 52-family expression is built unconditionally, the
-    same path streaming inputs always take.
+    Batch and streaming inputs get the same expression: every effect
+    family, selected per row by op type, with no pass over the input
+    before the job that uses it.
 
     ``detail_types`` (None = JSON details): emit the ``details`` column as
     a typed STRUCT of exactly these (name, ddl_type) fields instead of a
     JSON string — no serialization, no parse-back.  Each field's value
     equals ``from_json(details, "name ddl_type")[name]`` on the full
-    build (see _detail_ctx).
+    build (see _detail_ctx).  A name that no effect family emits raises
+    ValueError.
     """
     tx_src = transactions.select(
         F.col("ledger_sequence").alias("_ls"),
@@ -1460,33 +1352,9 @@ def transform_effects(
     else:
         ops = ops.withColumn("_closed_at", F.lit(None).cast("timestamp"))
 
-    # One column-pruned probe derives the pruning context: which op types
-    # occur.  The builder then skips families whose type cannot appear,
-    # collapsing the generated projection from ~350 KB (beyond JIT's
-    # compile threshold → interpreted) to just the reachable families.
-    # On parquet input the probe reads ONLY the narrow ``type`` column
-    # (round-9: it used to also scan the wide nested changes / claim-atoms
-    # columns for a max(size(...)) emptiness check — a second full read of
-    # the table's heaviest columns per call, buying codegen shrinkage only
-    # on inputs whose type mix implies those columns but whose arrays are
-    # all empty; change/atom scans over empty arrays emit nothing either
-    # way, so has_changes/has_atoms now probe-default to True and rows are
-    # identical).  Behind silver's ``mapInPandas`` (the CLI path) no column
-    # pruning reaches past the Python decode: the probe is its own job that
-    # re-runs the full ledger parse before the write parses again.  Streams
-    # can't be probed — they get the full expression.
-    if operations.isStreaming or not prune:
-        present = None
-    else:
-        present = _present_op_types(operations)
-    has_changes, has_atoms = True, True
-
     effects_array = _effects_array_expr(
         operations.schema["changes"].dataType.simpleString(),
         operations.schema["claim_atoms"].dataType.simpleString(),
-        present,
-        has_changes,
-        has_atoms,
         None if detail_types is None else tuple(tuple(ft) for ft in detail_types),
     )
     source = F.coalesce(F.col("source_account"), F.col("_tx_source"))

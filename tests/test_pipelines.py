@@ -9,6 +9,7 @@ import json
 import fixtures as fx
 from stellar_etl_spark.plans import (
     EXPORT_PIPELINES,
+    export_effects,
     export_ledger_entry_changes,
     export_ledgers,
     export_trades,
@@ -132,6 +133,40 @@ class TestPipelines:
             decode_changes(bronze.mapInPandas(tap, schema=bronze.schema)),
             str(tmp_path / "out"),
             export_types=["accounts", "offers", "trustlines"],
+        )
+        with open(log) as fh:
+            assert sorted(int(line) for line in fh) == [2, 3, 4, 5]
+
+    def test_effects_decode_operations_once(self, spark, tmp_path):
+        """export_effects builds its expression without a pass over the
+        input: the operations decode runs once per ledger, in the write."""
+        from golden_lcm import build_ledgers
+        from pyspark.sql import functions as F
+
+        from stellar_etl_spark.sources.bronze import read_ledger_files
+        from stellar_etl_spark.sources.silver import (
+            decode_operations,
+            decode_transactions,
+        )
+
+        ledgers_dir = tmp_path / "xdr"
+        ledgers_dir.mkdir()
+        build_ledgers(str(ledgers_dir), 4)
+        log = str(tmp_path / "decoded.log")
+
+        def tap(batches):
+            for pdf in batches:
+                with open(log, "a") as fh:
+                    fh.writelines(f"{seq}\n" for seq in pdf["sequence"])
+                yield pdf
+
+        bronze = read_ledger_files(spark, str(ledgers_dir)).select(
+            "sequence", F.col("content").alias("lcm_xdr")
+        )
+        export_effects(
+            decode_operations(bronze.mapInPandas(tap, schema=bronze.schema)),
+            decode_transactions(bronze),
+            str(tmp_path / "out"),
         )
         with open(log) as fh:
             assert sorted(int(line) for line in fh) == [2, 3, 4, 5]

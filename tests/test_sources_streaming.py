@@ -1003,24 +1003,6 @@ class TestSessionWindowParity:
         assert len(native) == 3
 
 
-class TestCompaction:
-    def test_compact_small_files(self, spark, tmp_path):
-        from stellar_etl_spark.sources.sinks import compact_small_files
-
-        path = str(tmp_path / "many")
-        df = spark.range(0, 1000).withColumnRenamed("id", "n")
-        df.repartition(20).write.parquet(path)
-        import glob
-
-        assert len(glob.glob(f"{path}/*.parquet")) == 20
-        n = compact_small_files(spark, path, target_rows_per_file=500)
-        assert n == 2
-        assert len(glob.glob(f"{path}/*.parquet")) == 2
-        got = spark.read.parquet(path)
-        assert got.count() == 1000
-        assert got.agg({"n": "sum"}).collect()[0][0] == 499500
-
-
 class TestStreamSessionize:
     """Streaming gap-sessionization with event-time timeout
     (streaming/stateful.py stream_sessionize): in-batch gaps close sessions

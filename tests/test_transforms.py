@@ -468,53 +468,14 @@ class TestEffects:
                 want = fd.get(name)
                 assert r["details"][name] == want, (r["id"], name)
 
-    def test_present_probe_cached_by_plan(self, spark, data):
-        """The op-type probe memoizes on exact plan equivalence: a second
-        transform_effects over an equal input plan must HIT (one cache
-        entry), a semantically different input must MISS (second entry)."""
-        from pyspark.sql import functions as F
-
-        from stellar_etl_spark.transforms import effects as E
-
-        from stellar_etl_spark.catalog import table
-        from stellar_etl_spark.transforms.derive import (
-            derived_operations_effects,
-            derived_transactions,
-        )
-
-        sf = "/root/testdata/sf0.001"
-
-        def ops():  # fresh plan each call (new expression ids)
-            return derived_operations_effects(table(spark, sf, "lineitem"))
-
-        txs = derived_transactions(table(spark, sf, "orders"))
-        E._PRESENT_CACHE.clear()
-        transform_effects(ops(), txs)
-        assert len(E._PRESENT_CACHE) == 1
-        # fresh-but-equal parquet-backed frame (the bench/query path): HIT
-        transform_effects(ops(), txs)
-        assert len(E._PRESENT_CACHE) == 1
-        # different computation: must probe again, not serve stale types
-        transform_effects(ops().where(F.col("type") == 1), txs)
-        assert len(E._PRESENT_CACHE) == 2
-        # local-relation frames (RDD-backed plans compare by identity):
-        # a rebuilt frame may MISS — that re-probes, never serves stale
-        transform_effects(fx.operations_df(spark), data["transactions"])
-        assert len(E._PRESENT_CACHE) >= 2
-
-    def test_prune_false_matches_pruned_output(self, data):
-        """prune=False (the escape hatch for non-static inputs) builds the
-        full 52-family expression; on a static batch input it must emit
-        exactly the rows the pruned default emits."""
-        pruned = transform_effects(
-            data["operations"], data["transactions"]
-        ).collect()
-        full = transform_effects(
-            data["operations"], data["transactions"], prune=False
-        ).collect()
-        key = lambda r: r["id"]  # noqa: E731
-        assert sorted(map(tuple, pruned)) == sorted(map(tuple, full))
-        assert len(pruned) > 0
+    def test_detail_types_unknown_field_raises(self, data):
+        """A detail_types name no effect family emits is refused at build
+        time, naming the field, instead of yielding an all-null column."""
+        with pytest.raises(ValueError, match="amuont"):
+            transform_effects(
+                data["operations"], data["transactions"],
+                detail_types=[("amount", "string"), ("amuont", "string")],
+            )
 
     def _by_op(self, data):
         rows = transform_effects(data["operations"], data["transactions"]).collect()
