@@ -82,7 +82,10 @@ def main(argv: list[str] | None = None) -> None:
                          "tailed; --start-ledger/--end-ledger still apply): "
                          "drains every file landed since the last run's "
                          "checkpoint, then stops (availableNow); works for "
-                         "every export_* subcommand")
+                         "every export_* subcommand, but "
+                         "export_ledger_entry_changes compacts each "
+                         "micro-batch on its own, so a 64-ledger window "
+                         "whose files land across two runs is written twice")
     ap.add_argument("--start-time", default=None,
                     help="get_ledger_range_from_times lower bound")
     ap.add_argument("--end-time", default=None,
@@ -185,17 +188,8 @@ def _dispatch_cmd(cmd, bronze, spark, args, out, s, e, fmt, extra, mode):
             silver.decode_transactions(bronze), out, s, e, fmt, extra,
             **extra_kw,
         )
-    elif cmd in ("export_operations", "export_effects"):
-        return EXPORT_PIPELINES[cmd](
-            silver.decode_operations(bronze), silver.decode_transactions(bronze),
-            out, s, e, fmt, extra, **extra_kw,
-        )
-    elif cmd == "export_trades":
-        return EXPORT_PIPELINES[cmd](
-            silver.decode_operations(bronze), silver.decode_ledgers(bronze),
-            out, s, e, fmt, extra, **extra_kw,
-        )
-    elif cmd == "export_assets":
+    elif cmd in ("export_operations", "export_effects", "export_trades",
+                 "export_assets"):
         return EXPORT_PIPELINES[cmd](
             silver.decode_operations(bronze), out, s, e, fmt, extra, **extra_kw
         )

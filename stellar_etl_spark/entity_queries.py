@@ -145,11 +145,9 @@ def op_details_switch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stellar_etl_spark.transforms.operation import transform_operation
 
     li = table(spark, sf_dir, "lineitem")
-    orders = table(spark, sf_dir, "orders")
     out = transform_operation(
         _cached_input(spark, sf_dir, "ops_details",
                       lambda: derived_operations_details(_wide(li))),
-        derived_transactions(orders),
         # round-9: only the detail fields this projection reads — prunes
         # the other ~70 (incl. the 4 asset-id ArrowEvalPython UDFs) and
         # skips the begin-ops second scan (see transform_operation)
@@ -203,11 +201,9 @@ def op_sponsorship_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stellar_etl_spark.transforms.operation import transform_operation
 
     li = table(spark, sf_dir, "lineitem")
-    orders = table(spark, sf_dir, "orders")
     out = transform_operation(
         _cached_input(spark, sf_dir, "ops_sponsorship",
                       lambda: derived_operations_sponsorship(_wide(li))),
-        derived_transactions(orders),
         # round-9: this projection reads exactly two detail fields; the
         # begin-ops back-scan stays (begin_sponsor needs it)
         detail_fields=["sponsored_id", "begin_sponsor"],
@@ -230,15 +226,13 @@ def trade_atoms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stellar_etl_spark.transforms.trade import transform_trade
 
     li = table(spark, sf_dir, "lineitem")
-    orders = table(spark, sf_dir, "orders")
     # deterministic 1/3 slice: the wall cost here is SYNTHETIC input
     # construction (600k 2-atom nested structs through Generate), not the
     # transform — a third exercises every branch at a third the build cost
     li = li.where(F.col("l_orderkey") % 3 == 1)
     out = transform_trade(
         _cached_input(spark, sf_dir, "ops_trades",
-                      lambda: derived_operations_trades(_wide(li))),
-        derived_ledgers(orders)
+                      lambda: derived_operations_trades(_wide(li)))
     )
     return out.select(
         "history_operation_id",
@@ -278,11 +272,9 @@ def effects_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("new_seq", "long"),
     )
     li = table(spark, sf_dir, "lineitem")
-    orders = table(spark, sf_dir, "orders")
     out = transform_effects(
         _cached_input(spark, sf_dir, "ops_effects",
                       lambda: derived_operations_effects(_wide(li))),
-        derived_transactions(orders),
         # round-10: details arrive as a typed struct of exactly these
         # fields — the to_json→from_json round trip on ~10 M effect rows
         # is gone; field values are identical to parsing the full JSON

@@ -11,9 +11,13 @@ counted by the write job itself: an int for a single-table export,
 ``{name: rows}`` for the multi-table ones.
 
 Shape notes: every pipeline is one Spark job; only the aggregation/explode
-steps shuffle (see tests/test_plans.py).  The range filter sits on the silver
-rows; the CLI also filters bronze on the file-name sequence, so ledgers out
-of range are read but never parsed in Python.
+steps shuffle (see tests/test_plans.py).  The op-grain exports (operations,
+effects, trades, assets) take the operations frame alone: each silver
+operation row carries its transaction's hash and source and its ledger's
+close time, so none of them joins a transactions or ledgers frame.  The
+range filter sits on the silver rows; the CLI also filters bronze on the
+file-name sequence, so ledgers out of range are read but never parsed in
+Python.
 """
 
 from __future__ import annotations
@@ -93,21 +97,21 @@ def export_ledger_transactions(transactions, out_dir, start=0, end=0,
     return _sink(out, out_dir, "ledger_transactions", fmt, extra_fields, mode=mode)
 
 
-def export_operations(operations, transactions, out_dir, start=0, end=0,
-                      fmt="json", extra_fields=None, mode="overwrite") -> int:
-    out = transform_operation(_range(operations, start, end), transactions)
+def export_operations(operations, out_dir, start=0, end=0, fmt="json",
+                      extra_fields=None, mode="overwrite") -> int:
+    out = transform_operation(_range(operations, start, end))
     return _sink(out, out_dir, "operations", fmt, extra_fields, mode=mode)
 
 
-def export_effects(operations, transactions, out_dir, start=0, end=0,
-                   fmt="json", extra_fields=None, mode="overwrite") -> int:
-    out = transform_effects(_range(operations, start, end), transactions)
+def export_effects(operations, out_dir, start=0, end=0, fmt="json",
+                   extra_fields=None, mode="overwrite") -> int:
+    out = transform_effects(_range(operations, start, end))
     return _sink(out, out_dir, "effects", fmt, extra_fields, mode=mode)
 
 
-def export_trades(operations, ledgers, out_dir, start=0, end=0,
-                  fmt="json", extra_fields=None, mode="overwrite") -> int:
-    out = transform_trade(_range(operations, start, end), ledgers)
+def export_trades(operations, out_dir, start=0, end=0, fmt="json",
+                  extra_fields=None, mode="overwrite") -> int:
+    out = transform_trade(_range(operations, start, end))
     return _sink(out, out_dir, "trades", fmt, extra_fields, mode=mode)
 
 

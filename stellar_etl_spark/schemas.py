@@ -57,10 +57,14 @@ _OP_CHANGE_ENTRY_DDL = f"""struct<
 >"""
 
 # Sparse per-type body struct (operation.go:584-1173 details switch); claim
-# atoms + changes ride along for trades/sponsorship (trade.go:21-162).
+# atoms + changes ride along for trades/sponsorship (trade.go:21-162).  Each
+# row also carries its transaction's hash and source and its ledger's close
+# time, as the reference's operation input carries the whole transaction and
+# close meta (input/operations.go:58-70): no transform joins them back.
 OPERATIONS_DDL = f"""
     ledger_sequence long, tx_index int, op_index int, type int,
     source_account string, source_muxed string, tx_successful boolean,
+    transaction_hash string, tx_source_account string, closed_at timestamp,
     result_code string, trace_code string,
     result_offer_id long,
     body struct<

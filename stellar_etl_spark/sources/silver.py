@@ -19,7 +19,11 @@ The full ingestion surface is decoded (sources/xdr.py + xdr_ledger.py):
 - ``decode_operations`` attaches per-op result codes, claim atoms from
   offer/path-payment results (the trades input) and the op's PAIRED
   ledger-entry changes (stellar/go ingest.Change semantics) from the apply
-  meta — the sponsor scan / trade price scan / effects inputs.
+  meta — the sponsor scan / trade price scan / effects inputs.  Each row
+  also carries its transaction's hash and source account and its ledger's
+  close time, the way the reference's operation input carries its parent
+  transaction and close meta (input/operations.go:58-70), so no op-grain
+  transform needs a second decode or a join to get them.
 - ``decode_changes`` emits the CHANGES_DDL table (fee processing + per-op
   + tx-level changes) feeding route_changes — the StreamChanges surface.
 - ``decode_contract_events`` emits the CONTRACT_EVENTS_DDL table from the
@@ -981,9 +985,10 @@ def decode_operations(
 ) -> DataFrame:
     """One OPERATIONS_DDL row per operation from raw LCM bytes
     (GetOperations surface, input/operations.go) — with per-op result codes,
-    claim atoms from offer/path-payment results (the trades input), and the
-    op's paired ledger-entry changes (the sponsor/effects/trade price scan
-    input) from the apply meta."""
+    claim atoms from offer/path-payment results (the trades input), the op's
+    paired ledger-entry changes (the sponsor/effects/trade price scan input)
+    from the apply meta, and its transaction's hash and source and its
+    ledger's close time."""
     import pandas as pd
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -992,7 +997,8 @@ def decode_operations(
             for raw in pdf["lcm_xdr"]:
                 meta = parse_ledger_close_meta(bytes(raw))
                 h = meta["header"]
-                for ti, (env, _th, proc) in enumerate(
+                closed_at = pd.Timestamp(h.close_time, unit="s")
+                for ti, (env, th, proc) in enumerate(
                     _match_processing(meta, passphrase), start=1
                 ):
                     tx = (
@@ -1000,6 +1006,7 @@ def decode_operations(
                         if env["type"] == "fee_bump"
                         else env["tx"]
                     )
+                    tx_source = _muxed(tx["source"])[0]
                     result = proc["result"]["result"] if proc else None
                     if result is not None and result["code"] in (1, -13):
                         result = result["inner_result"]
@@ -1057,6 +1064,9 @@ def decode_operations(
                                 source_account=g,
                                 source_muxed=m,
                                 tx_successful=successful,
+                                transaction_hash=th.hex(),
+                                tx_source_account=tx_source,
+                                closed_at=closed_at,
                                 result_code=(
                                     _OP_RESULT_CODE_NAMES.get(res["code"])
                                     if res
@@ -1076,7 +1086,7 @@ def decode_operations(
                                         op["type"],
                                         res,
                                         atoms,
-                                        g or _muxed(tx["source"])[0],
+                                        g or tx_source,
                                     ),
                                     **soroban_extras,
                                 },
@@ -1088,6 +1098,7 @@ def decode_operations(
                 columns=[
                     "ledger_sequence", "tx_index", "op_index", "type",
                     "source_account", "source_muxed", "tx_successful",
+                    "transaction_hash", "tx_source_account", "closed_at",
                     "result_code", "trace_code", "result_offer_id", "body",
                     "claim_atoms", "changes",
                 ]

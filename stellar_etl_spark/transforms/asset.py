@@ -15,25 +15,10 @@ from stellar_etl_spark.functions.toid import toid
 from stellar_etl_spark.schemas import ASSET_OP_TYPES
 
 
-def transform_asset(
-    operations: DataFrame,
-    first_sighting: bool = False,
-    ledgers: DataFrame | None = None,
-) -> DataFrame:
+def transform_asset(operations: DataFrame, first_sighting: bool = False) -> DataFrame:
     """One row per asset sighting (or per asset with ``first_sighting``).
-    ``closed_at`` (AssetOutput, schema.go:219) joins in from the broadcast
-    ledger headers when given."""
+    ``closed_at`` (AssetOutput, schema.go:219) is the op row's close time."""
     src = operations.where(F.col("type").isin(*ASSET_OP_TYPES))
-    if ledgers is not None:
-        hdr = F.broadcast(
-            ledgers.select(
-                F.col("sequence").alias("_hseq"),
-                F.col("closed_at").alias("_closed_at"),
-            )
-        )
-        src = src.join(hdr, src.ledger_sequence == hdr._hseq, "left")
-    else:
-        src = src.withColumn("_closed_at", F.lit(None).cast("timestamp"))
     # payment carries body.asset; manage_sell_offer sights the selling asset
     asset = F.when(F.col("type") == 1, F.col("body.asset")).otherwise(
         F.col("body.selling")
@@ -43,7 +28,7 @@ def transform_asset(
             "operation_id"
         ),
         F.col("ledger_sequence"),
-        F.col("_closed_at").alias("closed_at"),
+        F.col("closed_at"),
         asset["asset_type"].alias("asset_type"),
         F.coalesce(asset["asset_code"], F.lit("")).alias("asset_code"),
         F.coalesce(asset["asset_issuer"], F.lit("")).alias("asset_issuer"),

@@ -16,6 +16,10 @@ Conventions:
   ``seq = k div 1024 + 2``, ``tx_index = k mod 1024`` (tx_index < 2^20, so
   TOID packing is collision-free).
 - closed_at = 2024-01-01T00:00:00Z + 5 s per sequence.
+- an operation row carries its transaction's hash and source and its
+  ledger's close time from the same helpers (``tx_hash_of``,
+  ``tx_source_of``, ``closed_at_of``) that derived_transactions and
+  derived_ledgers use, so the op and tx sides agree by construction.
 - protocol_version = 19 + seq mod 4 (so both pre- and post-21 branches of
   the fee-bump/soroban fix are exercised).
 
@@ -85,6 +89,18 @@ def tx_index_of(key: Column) -> Column:
     return (key % 1024).cast("int")
 
 
+def tx_hash_of(key: Column) -> Column:
+    return F.md5(key.cast("string").cast("binary"))
+
+
+def tx_source_of(key: Column) -> Column:
+    return F.concat(F.lit("GACC"), (key % 997).cast("string"))
+
+
+def closed_at_of(seq: Column) -> Column:
+    return F.timestamp_seconds(F.lit(EPOCH) + seq * 5)
+
+
 def derived_ledgers(orders: DataFrame) -> DataFrame:
     """Ledger headers (the 3 columns the transforms read) for every ledger
     sequence the derived transactions inhabit."""
@@ -94,9 +110,7 @@ def derived_ledgers(orders: DataFrame) -> DataFrame:
         .distinct()
         .select(
             "sequence",
-            F.timestamp_seconds(F.lit(EPOCH) + F.col("sequence") * 5).alias(
-                "closed_at"
-            ),
+            closed_at_of(F.col("sequence")).alias("closed_at"),
             (F.lit(19) + F.col("sequence") % 4).alias("protocol_version"),
         )
     )
@@ -128,8 +142,8 @@ def _derived_transactions_cols() -> tuple:
     return (
         seq_of(k).alias("ledger_sequence"),
         tx_index_of(k).alias("tx_index"),
-        F.md5(k.cast("string").cast("binary")).alias("transaction_hash"),
-        F.concat(F.lit("GACC"), (k % 997).cast("string")).alias("source_account"),
+        tx_hash_of(k).alias("transaction_hash"),
+        tx_source_of(k).alias("source_account"),
         F.when(k % 10 == 0, F.concat(F.lit("MUX"), (k % 997).cast("string"))).alias(
             "source_muxed"
         ),
@@ -343,6 +357,9 @@ def _op_frame_cols(type_col: Column, source: Column, body: Column,
         source.alias("source_account"),
         F.lit(None).cast("string").alias("source_muxed"),
         (k % 10 != 0).alias("tx_successful"),
+        tx_hash_of(k).alias("transaction_hash"),
+        tx_source_of(k).alias("tx_source_account"),
+        closed_at_of(seq_of(k)).alias("closed_at"),
         F.lit("OperationResultCodeOpInner").alias("result_code"),
         F.lit("success").alias("trace_code"),
         F.lit(None).cast("long").alias("result_offer_id"),
@@ -707,7 +724,7 @@ def _derived_changes_cols() -> tuple:
     null_entry = F.lit(None).cast(_CHANGE_ENTRY_T)
     return (
         seq.alias("ledger_sequence"),
-        F.timestamp_seconds(F.lit(EPOCH) + seq * 5).alias("closed_at"),
+        closed_at_of(seq).alias("closed_at"),
         entity.alias("entry_type"),
         change_type.alias("change_type"),
         (eid % 8).cast("int").alias("change_index"),
@@ -746,7 +763,7 @@ def _token_ops_cols() -> tuple:
     # issuer back (burn); both only bite for credit assets (issuer non-null)
     source = F.when(
         (t4 == 1) & (k % 9 == 0), issuer
-    ).otherwise(F.concat(F.lit("GACC"), (k % 997).cast("string")))
+    ).otherwise(tx_source_of(k))
     to = F.when((t4 == 1) & (k % 9 == 1), issuer).otherwise(
         F.concat(F.lit("GBEN"), (pk % 997).cast("string"))
     )
@@ -992,7 +1009,7 @@ def _soroban_changes_cols() -> tuple:
     null_entry = F.lit(None).cast(_CHANGE_ENTRY_T)
     return (
         seq.alias("ledger_sequence"),
-        F.timestamp_seconds(F.lit(EPOCH) + seq * 5).alias("closed_at"),
+        closed_at_of(seq).alias("closed_at"),
         entity.alias("entry_type"),
         change_type.alias("change_type"),
         (eid % 8).cast("int").alias("change_index"),
@@ -1031,7 +1048,7 @@ def _contract_events_cols() -> tuple:
     )
     return (
         seq.alias("ledger_sequence"),
-        F.timestamp_seconds(F.lit(EPOCH) + seq * 5).alias("closed_at"),
+        closed_at_of(seq).alias("closed_at"),
         (eid % 1024).cast("int").alias("tx_index"),
         F.md5(F.concat(F.lit("EV"), eid.cast("string")).cast("binary")).alias(
             "transaction_hash"

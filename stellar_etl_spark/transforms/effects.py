@@ -202,7 +202,7 @@ def _effects_array_expr(
     A name that no effect family emits raises ValueError."""
     _j, _empty_details, _details_ddl, emitted = _detail_ctx(detail_types)
     body = F.col("body")
-    source = F.coalesce(F.col("source_account"), F.col("_tx_source"))
+    source = F.coalesce(F.col("source_account"), F.col("tx_source_account"))
     t = F.col("type")
 
     _amt = _amt_str
@@ -1312,10 +1312,7 @@ def _effects_array_expr(
 
 
 def transform_effects(
-    operations: DataFrame,
-    transactions: DataFrame,
-    ledgers: DataFrame | None = None,
-    detail_types: list[tuple[str, str]] | None = None,
+    operations: DataFrame, detail_types: list[tuple[str, str]] | None = None
 ) -> DataFrame:
     """One row per emitted effect; only successful txs emit (effects.go:55-57).
 
@@ -1330,43 +1327,21 @@ def transform_effects(
     build (see _detail_ctx).  A name that no effect family emits raises
     ValueError.
     """
-    tx_src = transactions.select(
-        F.col("ledger_sequence").alias("_ls"),
-        F.col("tx_index").alias("_ti"),
-        F.col("source_account").alias("_tx_source"),
-    )
-    ops = operations.where(F.col("tx_successful")).join(
-        tx_src,
-        (operations.ledger_sequence == tx_src._ls)
-        & (operations.tx_index == tx_src._ti),
-        "left",
-    )
-    if ledgers is not None:
-        hdr = F.broadcast(
-            ledgers.select(
-                F.col("sequence").alias("_hseq"),
-                F.col("closed_at").alias("_closed_at"),
-            )
-        )
-        ops = ops.join(hdr, ops.ledger_sequence == hdr._hseq, "left")
-    else:
-        ops = ops.withColumn("_closed_at", F.lit(None).cast("timestamp"))
-
     effects_array = _effects_array_expr(
         operations.schema["changes"].dataType.simpleString(),
         operations.schema["claim_atoms"].dataType.simpleString(),
         None if detail_types is None else tuple(tuple(ft) for ft in detail_types),
     )
-    source = F.coalesce(F.col("source_account"), F.col("_tx_source"))
+    source = F.coalesce(F.col("source_account"), F.col("tx_source_account"))
 
     op_id = toid(F.col("ledger_sequence"), F.col("tx_index"), F.col("op_index") + 1)
-    exploded = ops.select(
+    exploded = operations.where(F.col("tx_successful")).select(
         op_id.alias("operation_id"),
         F.col("ledger_sequence"),
         F.col("type").alias("operation_type"),
         source.alias("_src"),
         F.col("source_muxed").alias("_src_muxed"),
-        F.col("_closed_at"),
+        F.col("closed_at"),
         F.posexplode(effects_array).alias("index", "e"),
     )
     return exploded.select(
@@ -1382,7 +1357,7 @@ def transform_effects(
             F.col("e")["address"] == F.col("_src"), F.col("_src_muxed")
         ).alias("address_muxed"),
         F.col("e")["details_json"].alias("details"),
-        F.col("_closed_at").alias("closed_at"),
+        F.col("closed_at"),
         F.col("ledger_sequence"),
         F.col("operation_type"),
     )

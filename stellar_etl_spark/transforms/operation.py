@@ -109,7 +109,7 @@ def _op_exprs() -> tuple[tuple[tuple[str, Column], ...], Column]:
     )
     sponsor = F.try_element_at(sponsoring, F.lit(-1))["post"]["sponsor"]
 
-    op_source = F.coalesce(F.col("source_account"), F.col("_tx_source"))
+    op_source = F.coalesce(F.col("source_account"), F.col("tx_source_account"))
 
     # realized LP deposit/withdraw amounts from the op's liquidity-pool change
     # delta (getLiquidityPoolAndProductDelta, operation.go:238-285)
@@ -178,7 +178,7 @@ def _op_exprs() -> tuple[tuple[tuple[str, Column], ...], Column]:
     )
     begin_sponsor = F.when(
         (F.col("type") == 17) & matching_begin.isNotNull(),
-        F.coalesce(matching_begin["source_account"], F.col("_tx_source")),
+        F.coalesce(matching_begin["source_account"], F.col("tx_source_account")),
     )
 
     t = F.col("type")
@@ -489,17 +489,15 @@ def _op_exprs() -> tuple[tuple[tuple[str, Column], ...], Column]:
 
 
 def transform_operation(
-    operations: DataFrame,
-    transactions: DataFrame,
-    ledgers: DataFrame | None = None,
-    detail_fields: list[str] | None = None,
+    operations: DataFrame, detail_fields: list[str] | None = None
 ) -> DataFrame:
     """One output row per operation.
 
     - operation id = TOID(ledger, tx, op_index+1) — the +1 offset is the
       reference's (operation.go:32)
     - source account defaults to the tx source when the op has none
-      (operation.go:287-294)
+      (operation.go:287-294); it, the transaction hash and ``closed_at``
+      come from the op row's tx and ledger context
     - sponsor = sponsor of the last change whose post carries one
       (operation.go:296-358 change scan)
 
@@ -518,24 +516,9 @@ def transform_operation(
     not pass ``detail_fields``.  Default ``None`` = full struct, exactly
     the pre-round-9 behavior.
     """
-    tx_src = transactions.select(
-        F.col("ledger_sequence").alias("_ls"),
-        F.col("tx_index").alias("_ti"),
-        F.col("source_account").alias("_tx_source"),
-        F.col("transaction_hash").alias("_tx_hash"),
-    )
-
-    ops = operations.join(
-        tx_src,
-        (operations.ledger_sequence == tx_src._ls)
-        & (operations.tx_index == tx_src._ti),
-        "left",
-    )
-
     # in-tx back-scan for end_sponsoring_future_reserves: the matching
     # begin op's source (findInitatingBeginSponsoringOp, operation.go:533-553).
-    # Begin ops are rare, so the aggregate is tiny; the join key matches the
-    # tx join, so AQE coalesces both into one co-partitioned exchange.
+    # Begin ops are rare, so the aggregate is tiny.
     # Skipped entirely (second scan + aggregate + join) when the caller's
     # detail_fields excludes begin_sponsor, the only consumer of _begins.
     if detail_fields is None or "begin_sponsor" in detail_fields:
@@ -556,31 +539,20 @@ def transform_operation(
             .withColumnRenamed("ledger_sequence", "_bls")
             .withColumnRenamed("tx_index", "_bti")
         )
-        ops = ops.join(
+        ops = operations.join(
             begin_ops,
-            (ops.ledger_sequence == begin_ops._bls)
-            & (ops.tx_index == begin_ops._bti),
+            (operations.ledger_sequence == begin_ops._bls)
+            & (operations.tx_index == begin_ops._bti),
             "left",
         )
     else:
-        ops = ops.withColumn(
+        ops = operations.withColumn(
             "_begins",
             F.lit(None).cast(
                 "array<struct<op_index:int,sponsored_id:string,"
                 "source_account:string>>"
             ),
         )
-    if ledgers is not None:
-        hdr = F.broadcast(
-            ledgers.select(
-                F.col("sequence").alias("_hseq"),
-                F.col("closed_at").alias("_closed_at"),
-            )
-        )
-        ops = ops.join(hdr, ops.ledger_sequence == hdr._hseq, "left")
-    else:
-        ops = ops.withColumn("_closed_at", F.lit(None).cast("timestamp"))
-
     pairs, sponsor = _op_exprs()
     if detail_fields is not None:
         want = set(detail_fields)
@@ -597,17 +569,17 @@ def transform_operation(
             "id"
         ),
         toid(F.col("ledger_sequence"), F.col("tx_index"), 0).alias("transaction_id"),
-        F.col("_tx_hash").alias("transaction_hash"),
+        F.col("transaction_hash"),
         F.col("ledger_sequence"),
         (F.col("op_index") + 1).alias("application_order"),
-        F.coalesce(F.col("source_account"), F.col("_tx_source")).alias(
+        F.coalesce(F.col("source_account"), F.col("tx_source_account")).alias(
             "source_account"
         ),
         F.col("source_muxed").alias("source_account_muxed"),
         F.col("type"),
         op_type_string(F.col("type")).alias("type_string"),
         F.col("tx_successful").alias("transaction_successful"),
-        F.col("_closed_at").alias("closed_at"),
+        F.col("closed_at"),
         # json tags operation_result_code / operation_trace_code
         # (schema.go:140-141)
         F.col("result_code").alias("operation_result_code"),

@@ -100,26 +100,16 @@ def derive_token_transfer_events(
     passphrase: str = PUBLIC_PASSPHRASE,
 ) -> DataFrame:
     """Classic-operation events + per-tx fee events, in the contract-events
-    shape ``transform_token_transfer`` consumes."""
-    tx_src = transactions.select(
-        F.col("ledger_sequence").alias("_ls"),
-        F.col("tx_index").alias("_ti"),
-        F.col("source_account").alias("_tx_source"),
-        F.col("transaction_hash").alias("_tx_hash"),
-        F.col("successful").alias("_tx_ok"),
-    )
+    shape ``transform_token_transfer`` consumes.  Op events take the tx
+    source, tx hash and close time from the op row; fee events are per tx,
+    and ``ledgers`` gives them their close time (null without it)."""
     ops = operations.where(
         F.col("type").isin(*EVENT_OP_TYPES) & F.col("tx_successful")
-    ).join(
-        tx_src,
-        (operations.ledger_sequence == tx_src._ls)
-        & (operations.tx_index == tx_src._ti),
-        "left",
     )
 
     body = F.col("body")
     t = F.col("type")
-    source = F.coalesce(F.col("source_account"), F.col("_tx_source"))
+    source = F.coalesce(F.col("source_account"), F.col("tx_source_account"))
     native = F.struct(
         F.lit("native").alias("asset_type"),
         F.lit(None).cast("string").alias("asset_code"),
@@ -216,9 +206,9 @@ def derive_token_transfer_events(
     # NULL issuer, so they always classify as transfer.
     op_events = ops.withColumn("_ev", F.explode(movements)).select(
         F.col("ledger_sequence"),
-        F.lit(None).cast("timestamp").alias("closed_at"),
+        F.col("closed_at"),
         F.col("tx_index"),
-        F.col("_tx_hash").alias("transaction_hash"),
+        F.col("transaction_hash"),
         F.col("tx_successful"),
         F.lit(True).alias("in_successful_contract_call"),
         _sac_id(ev["ma"], passphrase).alias("contract_id"),
@@ -243,9 +233,17 @@ def derive_token_transfer_events(
         F.lit(False).alias("sac_amount_clamped"),
     )
 
-    fee_events = transactions.where(F.col("fee_charged") > 0).select(
+    fee_txs = transactions.where(F.col("fee_charged") > 0)
+    if ledgers is not None:
+        hdr = F.broadcast(
+            ledgers.select(F.col("sequence").alias("_hseq"), "closed_at")
+        )
+        fee_txs = fee_txs.join(hdr, fee_txs.ledger_sequence == hdr._hseq, "left")
+    else:
+        fee_txs = fee_txs.withColumn("closed_at", F.lit(None).cast("timestamp"))
+    fee_events = fee_txs.select(
         F.col("ledger_sequence"),
-        F.lit(None).cast("timestamp").alias("closed_at"),
+        F.col("closed_at"),
         F.col("tx_index"),
         F.col("transaction_hash"),
         F.lit(True).alias("tx_successful"),
@@ -277,17 +275,4 @@ def derive_token_transfer_events(
         F.lit(False).alias("sac_amount_clamped"),
     )
 
-    out = op_events.unionByName(fee_events)
-    if ledgers is not None:
-        hdr = F.broadcast(
-            ledgers.select(
-                F.col("sequence").alias("_hseq"),
-                F.col("closed_at").alias("_hclosed"),
-            )
-        )
-        out = (
-            out.join(hdr, out.ledger_sequence == hdr._hseq, "left")
-            .withColumn("closed_at", F.col("_hclosed"))
-            .drop("_hseq", "_hclosed")
-        )
-    return out
+    return op_events.unionByName(fee_events)

@@ -28,11 +28,7 @@ def _aid(asset):
     )
 
 
-def transform_trade(
-    operations: DataFrame,
-    ledgers: DataFrame,
-    transactions: DataFrame | None = None,
-) -> DataFrame:
+def transform_trade(operations: DataFrame) -> DataFrame:
     """One row per claim atom of trade-capable ops in successful txs.
 
     - gate: op type ∈ {2,3,4,12,13} and tx successful (input/trades.go:89-104,
@@ -42,34 +38,16 @@ def transform_trade(
       LP trades: pool fee from the pre-change pool entry (trade.go:264-317)
     - synthetic buying offer id when the buyer had no resting offer: TOID-typed
       id with bit 62 set (trade.go:116-120, synt_offer_id.go:28-35)
-    - buying account = op source, falling back to the tx source when
-      ``transactions`` is provided (trade.go:122-129)
+    - buying account = op source, falling back to the tx source
+      (trade.go:122-129); ``ledger_closed_at`` is the op row's close time
     - trade_type 1 orderbook / 2 LP; seller_is_exact true for
       strict-receive, false for strict-send, else null (trade.go:227,243);
       rounding_slippage bips from the CAP-38 payout over the pool's
       pre-change reserves (trade.go:350-399)
     """
-    hdr = ledgers.select(
-        F.col("sequence").alias("_seq"), F.col("closed_at").alias("_closed_at")
-    )
-
     tradable = operations.where(
         F.col("type").isin(*TRADE_OP_TYPES) & F.col("tx_successful")
     )
-    if transactions is not None:
-        tx_src = transactions.select(
-            F.col("ledger_sequence").alias("_tls"),
-            F.col("tx_index").alias("_tti"),
-            F.col("source_account").alias("_tx_source"),
-        )
-        tradable = tradable.join(
-            tx_src,
-            (tradable.ledger_sequence == tx_src._tls)
-            & (tradable.tx_index == tx_src._tti),
-            "left",
-        )
-    else:
-        tradable = tradable.withColumn("_tx_source", F.lit(None).cast("string"))
 
     # Hoist the per-OP change reductions above the atom explode so the full
     # changes array never rides through Generate: the price scan only needs
@@ -94,29 +72,19 @@ def transform_trade(
         pool_pre_full["reserve_b"].alias("reserve_b"),
     )
 
-    # the resting buying offer's REAL id (trade.go:116-118), when the
-    # silver decode provides it; synthetic TOID-typed id otherwise.  Older
-    # frames without the column fall back to all-synthetic.
-    result_offer = (
-        F.col("result_offer_id")
-        if "result_offer_id" in tradable.columns
-        else F.lit(None).cast("long")
-    )
-
     exploded = (
-        tradable.join(F.broadcast(hdr), tradable.ledger_sequence == hdr._seq)
-        .select(
+        tradable.select(
             "ledger_sequence",
             "tx_index",
             "op_index",
             "type",
-            result_offer.alias("_result_offer_id"),
+            F.col("result_offer_id").alias("_result_offer_id"),
             offer_pres.alias("_offer_pres"),
             pool_pre_slim.alias("_pool_pre"),
-            F.coalesce(F.col("source_account"), F.col("_tx_source")).alias(
+            F.coalesce(F.col("source_account"), F.col("tx_source_account")).alias(
                 "_buyer"
             ),
-            F.col("_closed_at").alias("ledger_closed_at"),
+            F.col("closed_at").alias("ledger_closed_at"),
             F.posexplode("claim_atoms").alias("order", "atom"),
         )
         .where(~((F.col("atom.amount_sold") == 0) & (F.col("atom.amount_bought") == 0)))

@@ -137,6 +137,8 @@ def _body(**kw):
 
 def _op(seq, tx, op, type_, body, successful=True, source=None, atoms=None,
         changes=None, result_offer_id=None):
+    """Operation row; its tx and ledger context matches ``_tx``/``_ledger``
+    (every fixture transaction's source is ACCOUNT_A)."""
     return (
         seq,
         tx,
@@ -145,6 +147,9 @@ def _op(seq, tx, op, type_, body, successful=True, source=None, atoms=None,
         source,
         None,
         successful,
+        f"{seq:04x}{tx:060x}",
+        ACCOUNT_A,
+        EPOCH + dt.timedelta(seconds=5 * (seq - 2)),
         "OperationResultCodeOpInner",
         "success",
         result_offer_id,

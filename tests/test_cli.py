@@ -341,3 +341,85 @@ class TestCliRange:
         empty = ("export_contract_events", "export_ledger_entry_changes",
                  "export_trades")
         assert (sum(map(len, got.values())) == 0) == (cmd in empty)
+
+
+@pytest.fixture(scope="module")
+def corpus_dir(tmp_path_factory):
+    from perfbench.corpus import build
+
+    d = str(tmp_path_factory.mktemp("cli_corpus"))
+    build(d, 3, 8)
+    return d
+
+
+class TestCliOpContext:
+    def _export(self, spark, ledgers_dir, cmd, out):
+        from stellar_etl_spark.__main__ import _dispatch_cmd
+
+        _dispatch_cmd(cmd, _cli_bronze(spark, ledgers_dir), spark, _cli_args(),
+                      str(out), 0, 0, "json", None, "overwrite")
+        name = cmd.removeprefix("export_")
+        rows = []
+        for f in glob.glob(str(out / f"{name}.jsonl" / "part-*")):
+            with open(f) as fh:
+                rows += [json.loads(line) for line in fh if line.strip()]
+        assert rows, cmd
+        return rows
+
+    def test_op_rows_carry_close_time_and_tx_source(self, spark, corpus_dir,
+                                                    tmp_path):
+        """Operations, effects and assets rows carry their ledger's close
+        time, and each trade's buyer is its tx source (no op in this corpus
+        sets its own source, trade.go:122-129)."""
+        closed = {
+            r["sequence"]: r["closed_at"]
+            for r in self._export(spark, corpus_dir, "export_ledgers",
+                                  tmp_path / "l")
+        }
+        tx_source = {
+            int(r["id"]): r["account"]
+            for r in self._export(spark, corpus_dir, "export_transactions",
+                                  tmp_path / "t")
+        }
+        ops = self._export(spark, corpus_dir, "export_operations",
+                           tmp_path / "o")
+        assert all(o["closed_at"] == closed[o["ledger_sequence"]] for o in ops)
+        effects = self._export(spark, corpus_dir, "export_effects",
+                               tmp_path / "e")
+        assert all(
+            e["closed_at"] == closed[int(e["operation_id"]) >> 32]
+            for e in effects
+        )
+        assets = self._export(spark, corpus_dir, "export_assets",
+                              tmp_path / "a")
+        assert all(a["closed_at"] == closed[a["ledger_sequence"]] for a in assets)
+        trades = self._export(spark, corpus_dir, "export_trades",
+                              tmp_path / "tr")
+        for t in trades:
+            op_id = int(t["history_operation_id"])
+            assert t["buying_account_address"] == tx_source[op_id >> 12 << 12]
+            assert t["ledger_closed_at"] == closed[op_id >> 32]
+
+    @pytest.mark.parametrize("cmd", ["export_operations", "export_effects",
+                                     "export_trades", "export_assets"])
+    def test_op_grain_export_decodes_once(self, spark, xdr_dir, cmd,
+                                          monkeypatch):
+        """An op-grain export hands its pipeline the operations decode
+        alone: one Python pass over the ledgers."""
+        from pyspark.sql import DataFrame
+
+        from stellar_etl_spark.__main__ import _dispatch_cmd
+        from stellar_etl_spark.plans.pipelines import EXPORT_PIPELINES
+
+        frames = []
+
+        def capture(*args, **kwargs):
+            frames.extend(a for a in args if isinstance(a, DataFrame))
+            return 0
+
+        monkeypatch.setitem(EXPORT_PIPELINES, cmd, capture)
+        _dispatch_cmd(cmd, _cli_bronze(spark, xdr_dir), spark, _cli_args(),
+                      "unused", 0, 0, "json", None, "overwrite")
+        plans = [df._jdf.queryExecution().optimizedPlan().toString()
+                 for df in frames]
+        assert sum(len(_subtrees(p, "MapInPandas")) for p in plans) == 1

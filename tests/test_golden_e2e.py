@@ -71,11 +71,7 @@ class TestEffectsMainnetParity:
         trade families and path-payment chains."""
         from stellar_etl_spark.transforms.effects import transform_effects
 
-        eff = transform_effects(
-            silver["operations"],
-            silver["transactions"],
-            ledgers=silver["ledgers"],
-        ).collect()
+        eff = transform_effects(silver["operations"]).collect()
         mine = {r["id"]: r.asDict() for r in eff}
 
         golden = {
@@ -191,11 +187,7 @@ class TestOperationsMainnetParity:
         source_amount of failed path payments."""
         from stellar_etl_spark.transforms.operation import transform_operation
 
-        out = transform_operation(
-            silver["operations"],
-            silver["transactions"],
-            ledgers=silver["ledgers"],
-        ).collect()
+        out = transform_operation(silver["operations"]).collect()
         mine = {int(r["id"]): r.asDict() for r in out}
 
         golden = {
@@ -441,21 +433,12 @@ class TestTradesGoldenParity:
             decode_ledger_files,
             read_ledger_files,
         )
-        from stellar_etl_spark.sources.silver import (
-            decode_ledgers,
-            decode_operations,
-            decode_transactions,
-        )
+        from stellar_etl_spark.sources.silver import decode_operations
 
         d = str(tmp_path_factory.mktemp("golden_trades"))
-        lcms = write_trade_ledger_dir(d)
+        write_trade_ledger_dir(d)
         bronze = decode_ledger_files(read_ledger_files(spark, d)).cache()
-        return {
-            "seqs": set(lcms),
-            "transactions": decode_transactions(bronze),
-            "operations": decode_operations(bronze),
-            "ledgers": decode_ledgers(bronze),
-        }
+        return {"operations": decode_operations(bronze)}
 
     def test_all_trade_rows_recompute(self, trade_frames):
         """Every golden history_trades row recomputes from wire bytes whose
@@ -469,11 +452,7 @@ class TestTradesGoldenParity:
 
         from stellar_etl_spark.transforms.trade import transform_trade
 
-        out = transform_trade(
-            trade_frames["operations"],
-            trade_frames["ledgers"],
-            transactions=trade_frames["transactions"],
-        ).collect()
+        out = transform_trade(trade_frames["operations"]).collect()
         mine = {int(r["history_operation_id"]): r.asDict() for r in out}
 
         golden = unique_golden_trades()
@@ -529,11 +508,7 @@ class TestTradesMainnetConsistency:
 
         from stellar_etl_spark.transforms.trade import transform_trade
 
-        trades = transform_trade(
-            silver["operations"],
-            silver["ledgers"],
-            transactions=silver["transactions"],
-        ).collect()
+        trades = transform_trade(silver["operations"]).collect()
 
         by_op: dict = {}
         for r in trades:
@@ -1104,9 +1079,7 @@ class TestAssetsMainnetParity:
 
         from stellar_etl_spark.transforms.asset import transform_asset
 
-        out = transform_asset(
-            silver["operations"], ledgers=silver["ledgers"]
-        ).collect()
+        out = transform_asset(silver["operations"]).collect()
         sightings = sorted(
             (r.asDict() for r in out),
             key=lambda r: (r["ledger_sequence"], r["operation_id"]),

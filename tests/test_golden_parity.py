@@ -107,10 +107,10 @@ def outputs(spark):
         "ledgers": transform_ledger(L, T),
         "transactions": transform_transaction(T, L),
         "ledger_transactions": transform_ledger_transaction(T, L),
-        "operations": transform_operation(O, T, L),
-        "effects": transform_effects(O, T, L),
-        "trades": transform_trade(O, L, T),
-        "assets": transform_asset(O, ledgers=L),
+        "operations": transform_operation(O),
+        "effects": transform_effects(O),
+        "trades": transform_trade(O),
+        "assets": transform_asset(O),
         "accounts": transform_account(C),
         "account_signers": transform_signers(C),
         "trustlines": transform_trustline(C),

@@ -49,8 +49,7 @@ class TestPipelines:
 
     def test_export_trades_range_filter(self, spark, tmp_path):
         written = export_trades(
-            fx.operations_df(spark), fx.ledgers_df(spark), str(tmp_path),
-            start=3, end=3,
+            fx.operations_df(spark), str(tmp_path), start=3, end=3
         )
         rows = _read_jsonl(str(tmp_path / "trades.jsonl" / "part-*"))
         # the returned count is the one the write job observed
@@ -79,8 +78,7 @@ class TestPipelines:
         sc.setJobGroup(group, "export_trades")
         try:
             written = export_trades(
-                fx.operations_df(spark), fx.ledgers_df(spark), str(tmp_path),
-                start=3, end=3,
+                fx.operations_df(spark), str(tmp_path), start=3, end=3
             )
             after_export = jobs()
         finally:
@@ -144,10 +142,7 @@ class TestPipelines:
         from pyspark.sql import functions as F
 
         from stellar_etl_spark.sources.bronze import read_ledger_files
-        from stellar_etl_spark.sources.silver import (
-            decode_operations,
-            decode_transactions,
-        )
+        from stellar_etl_spark.sources.silver import decode_operations
 
         ledgers_dir = tmp_path / "xdr"
         ledgers_dir.mkdir()
@@ -165,7 +160,6 @@ class TestPipelines:
         )
         export_effects(
             decode_operations(bronze.mapInPandas(tap, schema=bronze.schema)),
-            decode_transactions(bronze),
             str(tmp_path / "out"),
         )
         with open(log) as fh:

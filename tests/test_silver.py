@@ -163,6 +163,22 @@ class TestSilverDecode:
         # fee-bump inner operations surface under the outer tx index
         assert (3, 1, 0) in ops
 
+    def test_operations_carry_tx_and_ledger_context(self, bronze):
+        """Each op row holds its tx's hash and (inner) source, as
+        decode_transactions emits them, and its ledger's close time."""
+        txs = {
+            (r.ledger_sequence, r.tx_index): r
+            for r in decode_transactions(bronze).collect()
+        }
+        closed = {r.sequence: r.closed_at for r in bronze.collect()}
+        ops = decode_operations(bronze).collect()
+        assert {(o.ledger_sequence, o.tx_index) for o in ops} == set(txs)
+        for o in ops:
+            tx = txs[(o.ledger_sequence, o.tx_index)]
+            assert o.transaction_hash == tx.transaction_hash
+            assert o.tx_source_account == tx.source_account
+            assert o.closed_at == closed[o.ledger_sequence]
+
     def test_transforms_consume_silver(self, spark, bronze):
         """The same production transforms run on XDR-decoded rows: TOID ids,
         memo clearing, [a,b) bounds, details JSON — no fixture shortcuts."""
@@ -189,7 +205,7 @@ class TestSilverDecode:
         assert t.account == GA
         assert out[(3, 1)].memo is None  # memo none cleared
 
-        ops = transform_operation(decode_operations(bronze), txs, ledgers)
+        ops = transform_operation(decode_operations(bronze))
         rows = {r.id: r for r in ops.collect()}
         pay = rows[(2 << 32) | (1 << 12) | 1]
         assert pay.type_string == "payment"
@@ -385,8 +401,7 @@ class TestFullDecode:
         and the price comes from the pre-change offer entry."""
         from stellar_etl_spark.transforms.trade import transform_trade
 
-        ledgers = bronze.select("sequence", "closed_at", "protocol_version")
-        trades = transform_trade(decode_operations(bronze), ledgers).collect()
+        trades = transform_trade(decode_operations(bronze)).collect()
         [t] = trades
         assert t.selling_account_address == GB
         assert (t.price_n, t.price_d) == (1, 2)
@@ -1049,9 +1064,7 @@ class TestSorobanOpDetails:
 
         from stellar_etl_spark.transforms.operation import transform_operation
 
-        out = transform_operation(
-            decode_operations(bronze), decode_transactions(bronze)
-        ).collect()
+        out = transform_operation(decode_operations(bronze)).collect()
         rows = {}
         for i, name in enumerate(ops):
             [r] = [x for x in out if x.transaction_id == (20 << 32) | ((i + 1) << 12)]
@@ -1177,10 +1190,7 @@ class TestInflationPayouts:
             decode_ledger_files,
             read_ledger_files,
         )
-        from stellar_etl_spark.sources.silver import (
-            decode_operations,
-            decode_transactions,
-        )
+        from stellar_etl_spark.sources.silver import decode_operations
         from stellar_etl_spark.sources.xdr import transaction_hash
         from stellar_etl_spark.transforms.effects import transform_effects
 
@@ -1226,9 +1236,7 @@ class TestInflationPayouts:
         store.mkdir()
         (store / "12.xdr").write_bytes(raw)
         bronze = decode_ledger_files(read_ledger_files(spark, str(store)))
-        ops = decode_operations(bronze)
-        txs = decode_transactions(bronze)
-        effs = transform_effects(ops, txs).collect()
+        effs = transform_effects(decode_operations(bronze)).collect()
         credited = {
             (r.address, r.details): r
             for r in effs

@@ -118,7 +118,7 @@ class TestOperation:
         out = {
             r.id: r
             for r in transform_operation(
-                data["operations"], data["transactions"]
+                data["operations"]
             ).collect()
         }
         pay_id = (2 << 32) | (1 << 12) | 1  # op_index 0 → +1 offset
@@ -144,7 +144,7 @@ class TestOperation:
         out = {
             r.id: r
             for r in transform_operation(
-                data["operations"], data["transactions"]
+                data["operations"]
             ).collect()
         }
         mso = out[(3 << 32) | (1 << 12) | 1]
@@ -155,7 +155,7 @@ class TestOperation:
         out = {
             r.id: r
             for r in transform_operation(
-                data["operations"], data["transactions"]
+                data["operations"]
             ).collect()
         }
         so = json.loads(out[(3 << 32) | (2 << 12) | 2].details_json)
@@ -169,7 +169,7 @@ class TestOperation:
         introspection that powers it stays in sync with the schema."""
         from stellar_etl_spark.transforms.operation import _op_exprs
 
-        full = transform_operation(data["operations"], data["transactions"])
+        full = transform_operation(data["operations"])
         # _alias_name-extracted pair names == the built struct's field names
         pair_names = [n for n, _ in _op_exprs()[0]]
         schema_names = [
@@ -179,7 +179,7 @@ class TestOperation:
 
         fields = ["from", "to", "amount", "asset_type", "price_r"]
         pruned = transform_operation(
-            data["operations"], data["transactions"], detail_fields=fields
+            data["operations"], detail_fields=fields
         )
         # pruned struct holds exactly the requested fields, in struct order
         assert [
@@ -198,7 +198,6 @@ class TestOperation:
         with pytest.raises(ValueError, match="unknown detail_fields"):
             transform_operation(
                 data["operations"],
-                data["transactions"],
                 detail_fields=["no_such_field"],
             )
 
@@ -209,7 +208,6 @@ class TestOperation:
             r.id: r.details
             for r in transform_operation(
                 fx.operation_details_ops_df(spark),
-                data["transactions"],
                 detail_fields=["sponsored_id", "begin_sponsor"],
             ).collect()
         }
@@ -229,7 +227,7 @@ class TestOperationDetailMaps:
         return {
             r.id: json.loads(r.details_json)
             for r in transform_operation(
-                fx.operation_details_ops_df(spark), data["transactions"]
+                fx.operation_details_ops_df(spark)
             ).collect()
         }
 
@@ -288,7 +286,7 @@ class TestOperationDetailMaps:
 
 class TestTrade:
     def test_atoms(self, data):
-        trades = transform_trade(data["operations"], data["ledgers"]).collect()
+        trades = transform_trade(data["operations"]).collect()
         # 2 valid atoms total: the 0/0 atom skipped, failed-tx op gated out
         assert len(trades) == 2
         offer = next(t for t in trades if t.trade_type == 1)
@@ -304,7 +302,7 @@ class TestTrade:
         assert offer.buying_offer_id == op_id | (1 << 62)
 
     def test_lp_trade(self, data):
-        trades = transform_trade(data["operations"], data["ledgers"]).collect()
+        trades = transform_trade(data["operations"]).collect()
         lp = next(t for t in trades if t.trade_type == 2)
         assert lp.selling_liquidity_pool_id == "POOL1"
         assert lp.liquidity_pool_fee == 30
@@ -451,10 +449,10 @@ class TestEffects:
                   ("asset_code", "string"), ("starting_balance", "string"),
                   ("name", "string"), ("new_seq", "long")]
         full = transform_effects(
-            data["operations"], data["transactions"]
+            data["operations"]
         ).collect()
         typed = transform_effects(
-            data["operations"], data["transactions"], detail_types=fields
+            data["operations"], detail_types=fields
         ).collect()
         assert len(full) == len(typed) > 0
         fm = {r["id"]: r for r in full}
@@ -473,12 +471,12 @@ class TestEffects:
         time, naming the field, instead of yielding an all-null column."""
         with pytest.raises(ValueError, match="amuont"):
             transform_effects(
-                data["operations"], data["transactions"],
+                data["operations"],
                 detail_types=[("amount", "string"), ("amuont", "string")],
             )
 
     def _by_op(self, data):
-        rows = transform_effects(data["operations"], data["transactions"]).collect()
+        rows = transform_effects(data["operations"]).collect()
         by_op: dict[int, list] = {}
         for r in rows:
             by_op.setdefault(r.operation_id, []).append(r)
@@ -589,7 +587,7 @@ class TestContractEvents:
 
 class TestTradeAndPoolEffects:
     def _by_op(self, data):
-        rows = transform_effects(data["operations"], data["transactions"]).collect()
+        rows = transform_effects(data["operations"]).collect()
         by_op: dict[int, list] = {}
         for r in rows:
             by_op.setdefault(r.operation_id, []).append(r)
@@ -669,7 +667,7 @@ class TestExtendedEffects:
     @pytest.fixture(scope="class")
     def by_op(self, spark, data):
         rows = transform_effects(
-            fx.effects_extended_ops_df(spark), data["transactions"]
+            fx.effects_extended_ops_df(spark)
         ).collect()
         out: dict[int, list] = {}
         for r in rows:
@@ -872,7 +870,7 @@ class TestEffectExhaustiveness:
             for tx, t in enumerate(sorted(OPERATION_TYPE_NAMES))
         ]
         ops = spark.createDataFrame(rows, OPERATIONS_DDL)
-        out = transform_effects(ops, data["transactions"]).collect()
+        out = transform_effects(ops).collect()
         emitted_op_types = {r.operation_type for r in out}
         for t in OPERATION_TYPE_NAMES:
             if t in self.CHANGE_OR_EVENT_DRIVEN:
@@ -1062,7 +1060,7 @@ class TestAll52EffectKinds:
         ops = spark.createDataFrame(self._ops_rows(), OPERATIONS_DDL)
         kinds = {
             r.type_string
-            for r in transform_effects(ops, data["transactions"]).collect()
+            for r in transform_effects(ops).collect()
         }
         # contract_credited(96)/debited(97): a SAC transfer between
         # C-addresses — the effect lands on the op source with a

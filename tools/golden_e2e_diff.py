@@ -39,11 +39,9 @@ def build_silver(spark):
 
 def diff_effects(spark) -> int:
     from stellar_etl_spark.transforms.effects import transform_effects
-    from stellar_etl_spark.transforms.ledger import transform_ledger
 
-    txs, ops, ledgers_bronze = build_silver(spark)
-    led = transform_ledger(ledgers_bronze) if False else None  # headers via decode_ledgers
-    eff = transform_effects(ops, txs, ledgers=ledgers_bronze).collect()
+    _, ops, _ = build_silver(spark)
+    eff = transform_effects(ops).collect()
     mine = {r["id"]: r.asDict() for r in eff}
 
     golden = {}
@@ -153,15 +151,10 @@ def diff_tokens(spark) -> int:
 
 
 def diff_ops(spark) -> int:
-    import inspect
-
     from stellar_etl_spark.transforms.operation import transform_operation
 
-    txs, ops, ledgers = build_silver(spark)
-    kwargs = {}
-    if "ledgers" in inspect.signature(transform_operation).parameters:
-        kwargs["ledgers"] = ledgers
-    out = transform_operation(ops, txs, **kwargs).collect()
+    _, ops, ledgers = build_silver(spark)
+    out = transform_operation(ops).collect()
     mine = {int(r["id"]): r.asDict() for r in out}
     seqs = {r["sequence"] for r in ledgers.select("sequence").collect()}
 
