@@ -175,13 +175,13 @@ def _dispatch_cmd(cmd, bronze, spark, args, out, s, e, fmt, extra, mode):
     extra_kw = {"mode": mode}
     if cmd == "export_ledgers":
         return EXPORT_PIPELINES[cmd](
-            silver.decode_ledgers(bronze), silver.decode_transactions(bronze),
-            out, s, e, fmt, args.strict_export, extra, **extra_kw,
+            silver.decode_ledgers(bronze), out, s, e, fmt, args.strict_export,
+            extra, **extra_kw,
         )
     elif cmd == "export_transactions":
         return EXPORT_PIPELINES[cmd](
-            silver.decode_transactions(bronze), silver.decode_ledgers(bronze),
-            out, s, e, fmt, args.strict_export, extra, **extra_kw,
+            silver.decode_transactions(bronze), out, s, e, fmt,
+            args.strict_export, extra, **extra_kw,
         )
     elif cmd == "export_ledger_transactions":
         return EXPORT_PIPELINES[cmd](
@@ -206,7 +206,6 @@ def _dispatch_cmd(cmd, bronze, spark, args, out, s, e, fmt, extra, mode):
         events = derive_token_transfer_events(
             silver.decode_operations(bronze),
             silver.decode_transactions(bronze),
-            ledgers=silver.decode_ledgers(bronze),
         )
         return EXPORT_PIPELINES[cmd](events, out, s, e, fmt, extra, mode=mode)
     elif cmd == "export_orderbooks":

@@ -88,10 +88,6 @@ def ns(ts: str) -> int:
     return int(dt.timestamp()) * 1_000_000_000
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in SYNTHETIC_TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every synthetic table as a temp view for spark.sql use."""
     for name in SYNTHETIC_TABLES:

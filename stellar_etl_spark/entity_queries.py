@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 from stellar_etl_spark.catalog import table
 from stellar_etl_spark.transforms.derive import (
     derived_changes,
-    derived_ledgers,
     derived_operations_details,
     derived_operations_effects,
     derived_operations_sponsorship,
@@ -81,25 +80,24 @@ def _wide(df: DataFrame) -> DataFrame:
     """Fan a CPU-heavy derived stage out to full cluster width.
 
     Input partitioning follows file BYTES (maxPartitionBytes), but these
-    stages are per-row CPU-bound (the wide effects/details expressions), and
-    the ledger-header join broadcasts — so without an exchange the whole
-    pipeline runs at scan width.  One narrow round-robin repartition of the
-    derived rows buys width = default parallelism; at cluster scale the
-    input is already wide and the exchange is noise."""
+    stages are per-row CPU-bound (the wide effects/details expressions) and
+    narrow — so without an exchange the whole pipeline runs at scan width.
+    One narrow round-robin repartition of the derived rows buys width =
+    default parallelism; at cluster scale the input is already wide and the
+    exchange is noise."""
     sc = df.sparkSession.sparkContext
     return df.repartition(sc.defaultParallelism)
 
 
 def tx_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """transform_transaction over derived txs/ledgers (transaction.go:20-275):
+    """transform_transaction over derived txs (transaction.go:20-275):
     TOID ids, memo switch, ``[a,b)`` bounds (invalid max<min rows dropped,
     max==0 unbounded), fee-bump/soroban field nulling, and the pre-21
     fee-bump+soroban fee recompute."""
     from stellar_etl_spark.transforms.transaction import transform_transaction
 
-    orders = table(spark, sf_dir, "orders")
     out = transform_transaction(
-        derived_transactions(_wide(orders)), derived_ledgers(orders)
+        derived_transactions(_wide(table(spark, sf_dir, "orders")))
     )
     return out.select(
         "id",
@@ -432,14 +430,12 @@ def token_transfer_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     li = table(spark, sf_dir, "lineitem")
-    orders = table(spark, sf_dir, "orders")
     events = derive_token_transfer_events(
         _cached_input(
             spark, sf_dir, "ops_token",
             lambda: derived_token_ops(_wide(li)),
         ),
-        derived_transactions(orders),
-        ledgers=derived_ledgers(orders),
+        derived_transactions(table(spark, sf_dir, "orders")),
     )
     out = transform_token_transfer(events)
     return out.select(
@@ -623,15 +619,14 @@ def contract_events_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def ledger_tx_passthrough(spark: SparkSession, sf_dir: str) -> DataFrame:
     """transform_ledger_transaction (ledger_transaction.go:13-58): the
-    raw-XDR passthrough table with the broadcast ledger-header closed_at
-    join and the tx_ledger_history result fallback."""
+    raw-XDR passthrough table with the tx row's closed_at and
+    tx_ledger_history."""
     from stellar_etl_spark.transforms.transaction import (
         transform_ledger_transaction,
     )
 
-    orders = table(spark, sf_dir, "orders")
     out = transform_ledger_transaction(
-        derived_transactions(orders), derived_ledgers(orders)
+        derived_transactions(table(spark, sf_dir, "orders"))
     )
     return out.select(
         "ledger_sequence",

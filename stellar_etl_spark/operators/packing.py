@@ -148,17 +148,3 @@ def concat_chunk_blocks(
             F.max("_id").alias("last_doc"),
         )
     )
-
-
-def pack_stats(packed: DataFrame, group_col: str = "source", budget: int = 512) -> DataFrame:
-    """Per-shard packing efficiency: bins used, mean fill fraction."""
-    per_bin = packed.groupBy(group_col, "bin_id").agg(
-        F.sum("n_tokens").alias("fill")
-    )
-    return per_bin.groupBy(group_col).agg(
-        F.count(F.lit(1)).alias("n_bins"),
-        F.sum("fill").alias("total_tokens"),
-        F.round(
-            F.sum("fill").cast("double") / (F.count(F.lit(1)) * budget), 6
-        ).alias("mean_fill_frac"),
-    )

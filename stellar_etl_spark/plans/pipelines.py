@@ -11,13 +11,13 @@ counted by the write job itself: an int for a single-table export,
 ``{name: rows}`` for the multi-table ones.
 
 Shape notes: every pipeline is one Spark job; only the aggregation/explode
-steps shuffle (see tests/test_plans.py).  The op-grain exports (operations,
-effects, trades, assets) take the operations frame alone: each silver
-operation row carries its transaction's hash and source and its ledger's
-close time, so none of them joins a transactions or ledgers frame.  The
-range filter sits on the silver rows; the CLI also filters bronze on the
-file-name sequence, so ledgers out of range are read but never parsed in
-Python.
+steps shuffle (see tests/test_plans.py).  Each export takes one frame and
+joins no other: a silver ledger row carries its own tx and op counts, a
+transaction row its ledger's close time, protocol and header entry blob,
+and an operation row its transaction's hash and source and its ledger's
+close time.  The range filter sits on the silver rows; the CLI also filters
+bronze on the file-name sequence, so ledgers out of range are read but
+never parsed in Python.
 """
 
 from __future__ import annotations
@@ -74,19 +74,17 @@ def _sink(
     return rows[0]
 
 
-def export_ledgers(ledgers, transactions, out_dir, start=0, end=0, fmt="json",
+def export_ledgers(ledgers, out_dir, start=0, end=0, fmt="json",
                    strict=False, extra_fields=None, mode="overwrite") -> int:
     """cmd/export_ledgers.go equivalent (SURVEY.md §3.1)."""
-    out = transform_ledger(
-        _range(ledgers, start, end, "sequence"), transactions, strict=strict
-    )
+    out = transform_ledger(_range(ledgers, start, end, "sequence"), strict=strict)
     return _sink(out, out_dir, "ledgers", fmt, extra_fields, mode=mode)
 
 
-def export_transactions(transactions, ledgers, out_dir, start=0, end=0,
-                        fmt="json", strict=False, extra_fields=None,
+def export_transactions(transactions, out_dir, start=0, end=0, fmt="json",
+                        strict=False, extra_fields=None,
                         mode="overwrite") -> int:
-    out = transform_transaction(_range(transactions, start, end), ledgers, strict)
+    out = transform_transaction(_range(transactions, start, end), strict)
     return _sink(out, out_dir, "transactions", fmt, extra_fields, mode=mode)
 
 

@@ -12,14 +12,26 @@ from __future__ import annotations
 # Asset triple used everywhere (asset.go:72-77): id = farmhash64(code+issuer+type)
 ASSET_DDL = "struct<asset_type:string, asset_code:string, asset_issuer:string>"
 
-LEDGERS_DDL = f"""
+# One row per ledger.  The four counts are the reference's extractCounts
+# (ledger.go:120-153) over the ledger's own transactions, computed by the
+# decoder that parses them: no transform aggregates the transactions table.
+# A ledger without transactions counts 0, never null.
+LEDGERS_DDL = """
     sequence long, ledger_hash string, previous_ledger_hash string,
     ledger_header string, closed_at timestamp, total_coins long, fee_pool long,
     base_fee long, base_reserve long, max_tx_set_size long, protocol_version long,
     soroban_fee_write_1kb long, total_byte_size_of_bucket_list long,
-    node_id string, signature string, ledger_header_history string
+    node_id string, signature string, ledger_header_history string,
+    successful_transaction_count long not null,
+    failed_transaction_count long not null,
+    operation_count long not null, tx_set_operation_count long not null
 """
 
+# One row per transaction.  Each row also carries its ledger's header
+# context, as the reference's transaction input carries its
+# LedgerHeaderHistoryEntry (transaction.go:20-275, ledger_transaction.go:
+# 13-58): the LedgerHeaderHistoryEntry blob, the close time and the
+# protocol version.  No transform joins the ledgers table back.
 TRANSACTIONS_DDL = """
     ledger_sequence long, tx_index int, transaction_hash string,
     source_account string, source_muxed string, account_sequence long,
@@ -37,7 +49,7 @@ TRANSACTIONS_DDL = """
     fee_initial_charged long,
     result_code string, tx_signers array<string>,
     tx_envelope string, tx_result string, tx_meta string, tx_fee_meta string,
-    tx_ledger_history string
+    tx_ledger_history string, closed_at timestamp, protocol_version long
 """
 
 # Per-op ledger-entry change view (ingest.Change pre/post pairs scoped to one

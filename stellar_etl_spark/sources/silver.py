@@ -1,6 +1,6 @@
-"""Silver layer: raw LedgerCloseMeta bytes → transform-ready transaction
-and operation rows (reference: input/ledgers.go normalization feeding
-transform_transaction / transform_operation).
+"""Silver layer: raw LedgerCloseMeta bytes → transform-ready ledger,
+transaction and operation rows (reference: input/ledgers.go normalization
+feeding transform_ledger / transform_transaction / transform_operation).
 
 ``decode_transactions`` / ``decode_operations`` run the pure-Python XDR
 parser (sources/xdr.py) in one Arrow-batched ``mapInPandas`` pass over the
@@ -11,11 +11,19 @@ bytes with no SDK.
 
 The full ingestion surface is decoded (sources/xdr.py + xdr_ledger.py):
 
+- ``decode_ledgers`` emits one header row per ledger with the ledger's
+  own tx and op counts (the reference's extractCounts over its
+  LedgerCloseMeta), so no transform aggregates the transactions table.
 - ``decode_transactions`` pairs every envelope with its
   TransactionResultMeta BY NETWORK TX HASH and fills successful /
   fee_charged / result_code, the Soroban fee ext, and the four canonical
   base64 blobs (envelope, result pair, meta, fee meta) by re-encoding the
   decoded structures (byte-exactness pinned in tests/test_xdr_golden.py).
+  Each row also carries its ledger's LedgerHeaderHistoryEntry blob, close
+  time and protocol version, as the reference's transaction input carries
+  its header (transaction.go:20-275), so no tx-grain transform joins the
+  ledgers table.  Both decoders take the header blob from one helper and
+  the success rule from another.
 - ``decode_operations`` attaches per-op result codes, claim atoms from
   offer/path-payment results (the trades input) and the op's PAIRED
   ledger-entry changes (stellar/go ingest.Change semantics) from the apply
@@ -49,7 +57,11 @@ from stellar_etl_spark.functions.strkey import (
 )
 from stellar_etl_spark.schemas import OPERATIONS_DDL, TRANSACTIONS_DDL
 from stellar_etl_spark.sources.op_result_codes import trace_code_name
-from stellar_etl_spark.sources.xdr import Writer, parse_ledger_close_meta
+from stellar_etl_spark.sources.xdr import (
+    Writer,
+    _write_header_entry,
+    parse_ledger_close_meta,
+)
 from stellar_etl_spark.sources.xdr_ledger import (
     TX_RESULT_CODE_NAMES as _TX_CODES,
 )
@@ -177,17 +189,27 @@ def _fee_account_refund(changes: list[dict] | None, fee_src: dict) -> int:
     return end - start
 
 
+def _inner_tx(env: dict) -> dict:
+    """The transaction a fee bump wraps, or the envelope's own."""
+    return env["inner"]["tx"] if env["type"] == "fee_bump" else env["tx"]
+
+
+def _successful(proc: dict | None) -> bool:
+    """The success rule of every tx-grain decode: the result's code, and
+    True for an LCM that carries no results."""
+    return _result_successful(proc["result"]["result"]) if proc else True
+
+
 def _tx_row(
     seq: int,
-    closed_at_unix: int,
     idx: int,
     env: dict,
-    proc: dict | None = None,
-    tx_hash: bytes | None = None,
-    ledger_version: int = 21,
+    proc: dict | None,
+    tx_hash: bytes,
+    ledger_version: int,
 ) -> dict:
     is_bump = env["type"] == "fee_bump"
-    inner = env["inner"]["tx"] if is_bump else env["tx"]
+    inner = _inner_tx(env)
     pre = inner.get("preconditions") or {}
     tb = pre.get("time_bounds")
     lb = pre.get("ledger_bounds")
@@ -257,13 +279,13 @@ def _tx_row(
     return dict(
         ledger_sequence=seq,
         tx_index=idx,
-        transaction_hash=tx_hash.hex() if tx_hash else None,
+        transaction_hash=tx_hash.hex(),
         source_account=g,
         source_muxed=m,
         account_sequence=inner["seq_num"],
         max_fee=max_fee,
         fee_charged=fee_charged,
-        successful=_result_successful(result) if result else True,
+        successful=_successful(proc),
         operation_count=len(inner["operations"]),
         memo_type=_MEMO_TYPES[memo["type"]],
         memo=(
@@ -331,8 +353,6 @@ def _tx_row(
         tx_result=blobs.get("tx_result"),
         tx_meta=blobs.get("tx_meta"),
         tx_fee_meta=blobs.get("tx_fee_meta"),
-        tx_ledger_history=None,
-        closed_at_unix=closed_at_unix,
     )
 
 
@@ -625,15 +645,39 @@ def _match_processing(meta: dict, passphrase: str) -> list[tuple]:
     return out
 
 
+def _header_history_b64(meta: dict) -> str:
+    """The ledger's LedgerHeaderHistoryEntry (hash + header + ext) as
+    base64: the ledger row's ledger_header_history and every one of its
+    transaction rows' tx_ledger_history (ledger_transaction.go:37-40)."""
+    w = Writer()
+    _write_header_entry(w, meta["entry_hash"], meta["header"])
+    return base64.b64encode(w.bytes()).decode()
+
+
+def _ledger_counts(meta: dict, passphrase: str) -> tuple[int, int, int, int]:
+    """extractCounts (ledger.go:120-153): successful txs, failed txs, the
+    operations of the successful txs and the operations of all txs, under
+    the success rule decode_transactions applies."""
+    ok = failed = ok_ops = all_ops = 0
+    for env, _th, proc in _match_processing(meta, passphrase):
+        n = len(_inner_tx(env)["operations"])
+        all_ops += n
+        if _successful(proc):
+            ok += 1
+            ok_ops += n
+        else:
+            failed += 1
+    return ok, failed, ok_ops, all_ops
+
+
 def decode_transactions(
     bronze: DataFrame, passphrase: str = "Public Global Stellar Network ; September 2015"
 ) -> DataFrame:
     """One TRANSACTIONS_DDL row per envelope (GetTransactions surface,
     input/transactions.go) from raw LCM bytes — results, fees, soroban fee
-    ext, and the four canonical base64 blobs filled from txProcessing."""
+    ext, and the four canonical base64 blobs filled from txProcessing — with
+    its ledger's header entry blob, close time and protocol version."""
     import pandas as pd
-
-    schema = TRANSACTIONS_DDL + ", closed_at_unix long"
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -641,27 +685,27 @@ def decode_transactions(
             for raw in pdf["lcm_xdr"]:
                 meta = parse_ledger_close_meta(bytes(raw))
                 h = meta["header"]
+                ledger = {
+                    "tx_ledger_history": _header_history_b64(meta),
+                    "closed_at": pd.Timestamp(h.close_time, unit="s"),
+                    "protocol_version": h.ledger_version,
+                }
                 for i, (env, th, proc) in enumerate(
                     _match_processing(meta, passphrase), start=1
                 ):
                     rows.append(
-                        _tx_row(
-                            h.ledger_seq,
-                            h.close_time,
-                            i,
-                            env,
-                            proc,
-                            th,
-                            h.ledger_version,
-                        )
+                        {
+                            **_tx_row(
+                                h.ledger_seq, i, env, proc, th, h.ledger_version
+                            ),
+                            **ledger,
+                        }
                     )
-            yield _exact_int64_frame(
-                rows, _TX_INT64_COLS
-            ) if rows else pd.DataFrame(
-                {c: [] for c in _tx_row(0, 0, 0, _EMPTY_ENV)}
-            )
+            # a batch without transactions yields no frame at all
+            if rows:
+                yield _exact_int64_frame(rows, _TX_INT64_COLS)
 
-    return bronze.mapInPandas(gen, schema=schema)
+    return bronze.mapInPandas(gen, schema=TRANSACTIONS_DDL)
 
 
 # Go union arm names for ScVal (stellar/go xdr ArmForSwitch) — the "type"
@@ -1001,22 +1045,14 @@ def decode_operations(
                 for ti, (env, th, proc) in enumerate(
                     _match_processing(meta, passphrase), start=1
                 ):
-                    tx = (
-                        env["inner"]["tx"]
-                        if env["type"] == "fee_bump"
-                        else env["tx"]
-                    )
+                    tx = _inner_tx(env)
                     tx_source = _muxed(tx["source"])[0]
                     result = proc["result"]["result"] if proc else None
                     if result is not None and result["code"] in (1, -13):
                         result = result["inner_result"]
                     op_results = (result or {}).get("op_results") or []
                     op_metas = proc["meta"]["operations"] if proc else []
-                    successful = (
-                        _result_successful(proc["result"]["result"])
-                        if proc
-                        else True
-                    )
+                    successful = _successful(proc)
                     for oi, op in enumerate(tx["operations"]):
                         g, m = (
                             _muxed(op["source"]) if op["source"] else (None, None)
@@ -1105,20 +1141,6 @@ def decode_operations(
             )
 
     return bronze.mapInPandas(gen, schema=OPERATIONS_DDL)
-
-
-_EMPTY_ENV = {
-    "type": "v1",
-    "tx": {
-        "source": {"ed25519": b"\x00" * 32, "id": None},
-        "fee": 0,
-        "seq_num": 0,
-        "preconditions": {},
-        "memo": {"type": "none"},
-        "operations": [],
-    },
-    "signatures": [],
-}
 
 
 # ---------------------------------------------------------------------------
@@ -1928,20 +1950,20 @@ def decode_contract_events(
     return bronze.mapInPandas(gen, schema=CONTRACT_EVENTS_DDL)
 
 
-def decode_ledgers(bronze: DataFrame) -> DataFrame:
+def decode_ledgers(
+    bronze: DataFrame, passphrase: str = PUBLIC_PASSPHRASE
+) -> DataFrame:
     """One LEDGERS_DDL header row per ledger from raw LCM bytes — the
     GetLedgers surface (input/ledgers.go:14-83) feeding transform_ledger:
     hex hashes, the re-encoded base64 LedgerHeader XDR, close/fee/reserve
-    scalars, and the STELLAR_VALUE_SIGNED node id (G strkey) + signature
-    (ledger.go:17-107, 192-205)."""
+    scalars, the STELLAR_VALUE_SIGNED node id (G strkey) + signature
+    (ledger.go:17-107, 192-205), and the ledger's tx and op counts
+    (extractCounts, ledger.go:120-153), which pair each envelope with its
+    result the way decode_transactions does."""
     import pandas as pd
 
-    from stellar_etl_spark.functions.strkey import VERSION_ACCOUNT, encode_strkey
     from stellar_etl_spark.schemas import LEDGERS_DDL
-    from stellar_etl_spark.sources.xdr import (
-        _write_header_entry,
-        write_ledger_header,
-    )
+    from stellar_etl_spark.sources.xdr import write_ledger_header
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = [
@@ -1950,20 +1972,17 @@ def decode_ledgers(bronze: DataFrame) -> DataFrame:
             "base_fee", "base_reserve", "max_tx_set_size",
             "protocol_version", "soroban_fee_write_1kb",
             "total_byte_size_of_bucket_list", "node_id", "signature",
-            "ledger_header_history",
+            "ledger_header_history", "successful_transaction_count",
+            "failed_transaction_count", "operation_count",
+            "tx_set_operation_count",
         ]
         for pdf in batches:
             rows = []
             for raw in pdf["lcm_xdr"]:
-                meta = parse_ledger_close_meta(bytes(raw), tx_processing=False)
+                meta = parse_ledger_close_meta(bytes(raw))
                 h = meta["header"]
                 w = Writer()
                 write_ledger_header(w, h)
-                # the full LedgerHeaderHistoryEntry (hash + header + ext) —
-                # the ledger_transactions table's tx_ledger_history blob
-                # (ledger_transaction.go:37-40)
-                we = Writer()
-                _write_header_entry(we, meta["entry_hash"], h)
                 node_id = signature = None
                 if h.close_value_signature is not None:
                     nid, sig = h.close_value_signature
@@ -1986,7 +2005,8 @@ def decode_ledgers(bronze: DataFrame) -> DataFrame:
                         None,
                         node_id,
                         signature,
-                        base64.b64encode(we.bytes()).decode(),
+                        _header_history_b64(meta),
+                        *_ledger_counts(meta, passphrase),
                     )
                 )
             yield pd.DataFrame(rows, columns=cols)

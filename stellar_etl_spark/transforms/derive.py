@@ -18,10 +18,12 @@ Conventions:
 - closed_at = 2024-01-01T00:00:00Z + 5 s per sequence.
 - an operation row carries its transaction's hash and source and its
   ledger's close time from the same helpers (``tx_hash_of``,
-  ``tx_source_of``, ``closed_at_of``) that derived_transactions and
-  derived_ledgers use, so the op and tx sides agree by construction.
-- protocol_version = 19 + seq mod 4 (so both pre- and post-21 branches of
-  the fee-bump/soroban fix are exercised).
+  ``tx_source_of``, ``closed_at_of``) that derived_transactions uses, so
+  the op and tx sides agree by construction.
+- a transaction row carries its ledger's close time and protocol version
+  (``closed_at_of``, ``protocol_of``): protocol_version = 19 + seq mod 4,
+  so both pre- and post-21 branches of the fee-bump/soroban fix are
+  exercised.
 
 Reference parity targets are cited per derived field family:
 transaction.go:20-275, operation.go:30-101/584-1173, trade.go:21-162,
@@ -101,19 +103,8 @@ def closed_at_of(seq: Column) -> Column:
     return F.timestamp_seconds(F.lit(EPOCH) + seq * 5)
 
 
-def derived_ledgers(orders: DataFrame) -> DataFrame:
-    """Ledger headers (the 3 columns the transforms read) for every ledger
-    sequence the derived transactions inhabit."""
-    seq = seq_of(F.col("o_orderkey"))
-    return (
-        orders.select(seq.alias("sequence"))
-        .distinct()
-        .select(
-            "sequence",
-            closed_at_of(F.col("sequence")).alias("closed_at"),
-            (F.lit(19) + F.col("sequence") % 4).alias("protocol_version"),
-        )
-    )
+def protocol_of(seq: Column) -> Column:
+    return F.lit(19) + seq % 4
 
 
 def derived_transactions(orders: DataFrame) -> DataFrame:
@@ -202,6 +193,8 @@ def _derived_transactions_cols() -> tuple:
         F.lit("bWV0YQ==").alias("tx_meta"),
         F.lit("ZmVl").alias("tx_fee_meta"),
         F.lit("aGlzdA==").alias("tx_ledger_history"),
+        closed_at_of(seq_of(k)).alias("closed_at"),
+        protocol_of(seq_of(k)).alias("protocol_version"),
     )
 
 
@@ -371,11 +364,6 @@ def _op_frame_cols(type_col: Column, source: Column, body: Column,
             "changes"
         ),
     )
-
-
-def _op_frame(lineitem: DataFrame, type_col: Column, source: Column, body: Column,
-              atoms: Column | None = None, changes: Column | None = None) -> DataFrame:
-    return lineitem.select(*_op_frame_cols(type_col, source, body, atoms, changes))
 
 
 def derived_operations_details(lineitem: DataFrame) -> DataFrame:

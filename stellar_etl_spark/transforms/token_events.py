@@ -96,13 +96,12 @@ def _sac_id(asset: Column, passphrase: str) -> Column:
 def derive_token_transfer_events(
     operations: DataFrame,
     transactions: DataFrame,
-    ledgers: DataFrame | None = None,
     passphrase: str = PUBLIC_PASSPHRASE,
 ) -> DataFrame:
     """Classic-operation events + per-tx fee events, in the contract-events
     shape ``transform_token_transfer`` consumes.  Op events take the tx
-    source, tx hash and close time from the op row; fee events are per tx,
-    and ``ledgers`` gives them their close time (null without it)."""
+    source, tx hash and close time from the op row, fee events take them
+    from the tx row: no join."""
     ops = operations.where(
         F.col("type").isin(*EVENT_OP_TYPES) & F.col("tx_successful")
     )
@@ -233,15 +232,7 @@ def derive_token_transfer_events(
         F.lit(False).alias("sac_amount_clamped"),
     )
 
-    fee_txs = transactions.where(F.col("fee_charged") > 0)
-    if ledgers is not None:
-        hdr = F.broadcast(
-            ledgers.select(F.col("sequence").alias("_hseq"), "closed_at")
-        )
-        fee_txs = fee_txs.join(hdr, fee_txs.ledger_sequence == hdr._hseq, "left")
-    else:
-        fee_txs = fee_txs.withColumn("closed_at", F.lit(None).cast("timestamp"))
-    fee_events = fee_txs.select(
+    fee_events = transactions.where(F.col("fee_charged") > 0).select(
         F.col("ledger_sequence"),
         F.col("closed_at"),
         F.col("tx_index"),

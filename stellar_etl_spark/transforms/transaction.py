@@ -2,8 +2,9 @@
 transaction.go:20-275): memo switch, time/ledger-bounds interval strings,
 fee-bump fields, Soroban fee decomposition, pre-protocol-21 fee-bump fix.
 
-Everything is a single narrow select over the tx row joined (broadcast) to
-its ledger header for closed_at/protocol — no fan-out, no wide shuffle.
+Everything is a single narrow select over the tx row, which carries its
+ledger's close time, protocol and header entry blob from silver — no join,
+no fan-out, no shuffle.
 """
 
 from __future__ import annotations
@@ -20,10 +21,9 @@ def _z(col):
     return F.coalesce(col, F.lit(0)).cast("long")
 
 
-def transform_transaction(
-    transactions: DataFrame, ledgers: DataFrame, strict: bool = False
-) -> DataFrame:
-    """One output row per transaction.
+def transform_transaction(transactions: DataFrame, strict: bool = False) -> DataFrame:
+    """One output row per transaction; close time and protocol come from the
+    tx row itself (the reference's LedgerHeaderHistoryEntry argument).
 
     - id = TOID(ledger, tx_index, 0) (toid/main.go:130-157)
     - memo switch (transaction.go:74-89): memo_type 'none' clears the memo
@@ -35,12 +35,6 @@ def transform_transaction(
       compensates the core bug by recomputing resource_fee − refund
       (transaction.go:185-190)
     """
-    hdr = ledgers.select(
-        F.col("sequence").alias("_seq"),
-        F.col("closed_at").alias("_closed_at"),
-        F.col("protocol_version").alias("_protocol"),
-    )
-
     bad_bounds = (
         F.col("time_bounds_max").isNotNull()
         & (F.col("time_bounds_max") != 0)
@@ -56,12 +50,12 @@ def transform_transaction(
     ).where(~F.col("_bad_bounds"))
 
     soroban_fix = (
-        (F.col("_protocol") < 21)
+        (F.col("protocol_version") < 21)
         & F.col("is_fee_bump")
         & F.col("has_soroban")
     )
 
-    return tx.join(F.broadcast(hdr), tx.ledger_sequence == hdr._seq, "inner").select(
+    return tx.select(
         toid(F.col("ledger_sequence"), F.col("tx_index"), 0).alias("id"),
         F.col("transaction_hash"),
         F.col("ledger_sequence"),
@@ -75,9 +69,9 @@ def transform_transaction(
         .alias("fee_charged"),
         F.col("successful"),
         F.col("operation_count"),
-        F.col("_closed_at").alias("closed_at"),
+        F.col("closed_at"),
         # created_at == the ledger close time (transaction.go:193-197)
-        F.col("_closed_at").alias("created_at"),
+        F.col("closed_at").alias("created_at"),
         # memo_type is the Go enum NAME (memoObject.Type.String(),
         # transaction.go:89) — "MemoTypeMemoText", not "text"
         F.element_at(
@@ -194,33 +188,12 @@ def transform_transaction(
     )
 
 
-def transform_ledger_transaction(
-    transactions: DataFrame, ledgers: DataFrame | None = None
-) -> DataFrame:
+def transform_ledger_transaction(transactions: DataFrame) -> DataFrame:
     """Raw-XDR passthrough table (ledger_transaction.go:13-58) — narrow
     projection, no decode of operations (column pruning does the work).
-    ``closed_at`` and the ``tx_ledger_history`` LedgerHeaderHistoryEntry
-    blob (ledger_transaction.go:37-40) come from the broadcast
-    ledger-header join when ``ledgers`` is given; null otherwise."""
-    hdr_blob = F.lit(None).cast("string")
-    if ledgers is not None:
-        cols = [
-            F.col("sequence").alias("_seq"),
-            F.col("closed_at").alias("closed_at"),
-        ]
-        if "ledger_header_history" in ledgers.columns:
-            cols.append(
-                F.col("ledger_header_history").alias("_hdr_hist")
-            )
-            hdr_blob = F.col("_hdr_hist")
-        hdr = F.broadcast(ledgers.select(*cols))
-        transactions = transactions.join(
-            hdr, transactions.ledger_sequence == hdr._seq, "left"
-        )
-    else:
-        transactions = transactions.withColumn(
-            "closed_at", F.lit(None).cast("timestamp")
-        )
+    ``tx_ledger_history`` is the ledger's LedgerHeaderHistoryEntry blob
+    (ledger_transaction.go:37-40), carried on every tx row with its
+    ``closed_at``."""
     return transactions.select(
         F.col("ledger_sequence"),
         F.col("tx_index").alias("application_order"),
@@ -229,12 +202,6 @@ def transform_ledger_transaction(
         F.col("tx_result"),
         F.col("tx_meta"),
         F.col("tx_fee_meta"),
-        # TxLedgerHistory = MarshalBase64(LedgerHeaderHistoryEntry)
-        # (ledger_transaction.go:37-40) — the ledger's own header entry,
-        # identical for every tx in the ledger; prefers the decoder-supplied
-        # per-tx blob when a source carries one
-        F.coalesce(F.col("tx_ledger_history"), hdr_blob).alias(
-            "tx_ledger_history"
-        ),
+        F.col("tx_ledger_history"),
         F.col("closed_at"),
     )

@@ -26,24 +26,43 @@ USD = ("credit_alphanum4", "USD", ACCOUNT_B)
 EUR = ("credit_alphanum4", "EUR", ACCOUNT_C)
 
 
-def _ledger(seq, protocol=20, total_coins=10**12, fee_pool=100):
+HDR_HIST = "aGRyaGlzdA=="  # b64("hdrhist") — LedgerHeaderHistoryEntry blob
+
+
+def _closed_at(seq):
+    return EPOCH + dt.timedelta(seconds=5 * (seq - 2))
+
+
+def _protocol(seq):
+    return 19 if seq == 4 else 20  # ledger 4 is pre-21 for the fee-bump fix
+
+
+def _ledger(seq, total_coins=10**12, fee_pool=100):
+    """Ledger row; its counts are extractCounts over the fixture's
+    transactions of that ledger, as silver computes them."""
+    txs = [t for t in _tx_rows() if t["ledger_sequence"] == seq]
+    ok = [t for t in txs if t["successful"]]
     return (
         seq,
         f"{seq:064x}",
         f"{seq - 1:064x}",
         "aGVhZGVy",  # b64("header")
-        EPOCH + dt.timedelta(seconds=5 * (seq - 2)),
+        _closed_at(seq),
         total_coins,
         fee_pool,
         100,
         5_000_000,
         1000,
-        protocol,
+        _protocol(seq),
         0,
         0,
         ACCOUNT_A,
         "c2ln",
-        "aGRyaGlzdA==",  # b64("hdrhist") — LedgerHeaderHistoryEntry blob
+        HDR_HIST,
+        len(ok),
+        len(txs) - len(ok),
+        sum(t["operation_count"] for t in ok),
+        sum(t["operation_count"] for t in txs),
     )
 
 
@@ -51,7 +70,7 @@ def ledgers_df(spark):
     rows = [
         _ledger(2),
         _ledger(3),
-        _ledger(4, protocol=19),  # pre-21 for the fee-bump fix branch
+        _ledger(4),
         _ledger(5, total_coins=-1),  # invalid: dropped / strict-error
     ]
     return spark.createDataFrame(rows, LEDGERS_DDL)
@@ -99,14 +118,16 @@ def _tx(seq, idx, successful=True, op_count=1, **kw):
         tx_result="cmVz",
         tx_meta="bWV0YQ==",
         tx_fee_meta="ZmVl",
-        tx_ledger_history=None,
+        tx_ledger_history=HDR_HIST,
+        closed_at=_closed_at(seq),
+        protocol_version=_protocol(seq),
     )
     base.update(kw)
     return base
 
 
-def transactions_df(spark):
-    rows = [
+def _tx_rows():
+    return [
         _tx(2, 1, memo_type="text", memo="hello"),
         _tx(2, 2, successful=False, op_count=2),
         _tx(2, 3, time_bounds_min=10, time_bounds_max=0),  # unbounded max
@@ -121,7 +142,10 @@ def transactions_df(spark):
             soroban_resources_instructions=7, soroban_resources_read_bytes=11,
             soroban_resources_write_bytes=13, fee_charged=999),
     ]
-    return spark.createDataFrame(rows, TRANSACTIONS_DDL)
+
+
+def transactions_df(spark):
+    return spark.createDataFrame(_tx_rows(), TRANSACTIONS_DDL)
 
 
 def _body(**kw):
@@ -149,7 +173,7 @@ def _op(seq, tx, op, type_, body, successful=True, source=None, atoms=None,
         successful,
         f"{seq:04x}{tx:060x}",
         ACCOUNT_A,
-        EPOCH + dt.timedelta(seconds=5 * (seq - 2)),
+        _closed_at(seq),
         "OperationResultCodeOpInner",
         "success",
         result_offer_id,
@@ -266,7 +290,7 @@ def _chrow(seq, entry_type, change_type, idx, key, pre=None, post=None,
            sponsor=None):
     return (
         seq,
-        EPOCH + dt.timedelta(seconds=5 * (seq - 2)),
+        _closed_at(seq),
         entry_type,
         change_type,
         idx,
@@ -514,7 +538,7 @@ def _cev(seq, txi, h, tx_ok, in_ok, event_type, topics, data, kind, frm, to,
          amount, asset, op_index=0, to_muxed=None, to_muxed_id=None):
     return dict(
         ledger_sequence=seq,
-        closed_at=EPOCH + dt.timedelta(seconds=5 * (seq - 2)),
+        closed_at=_closed_at(seq),
         tx_index=txi,
         transaction_hash=h,
         tx_successful=tx_ok,

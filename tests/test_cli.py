@@ -400,12 +400,39 @@ class TestCliOpContext:
             assert t["buying_account_address"] == tx_source[op_id >> 12 << 12]
             assert t["ledger_closed_at"] == closed[op_id >> 32]
 
-    @pytest.mark.parametrize("cmd", ["export_operations", "export_effects",
-                                     "export_trades", "export_assets"])
-    def test_op_grain_export_decodes_once(self, spark, xdr_dir, cmd,
+    def test_tx_rows_carry_ledger_context(self, spark, corpus_dir, tmp_path):
+        """Transactions and ledger_transactions rows carry their ledger's
+        close time, and ledger_transactions rows its header entry blob
+        (ledger_transaction.go:37-40)."""
+        from stellar_etl_spark.sources.silver import decode_ledgers
+
+        closed = {
+            r["sequence"]: r["closed_at"]
+            for r in self._export(spark, corpus_dir, "export_ledgers",
+                                  tmp_path / "l")
+        }
+        history = {
+            r.sequence: r.ledger_header_history
+            for r in decode_ledgers(_cli_bronze(spark, corpus_dir)).collect()
+        }
+        txs = self._export(spark, corpus_dir, "export_transactions",
+                           tmp_path / "t")
+        assert all(t["closed_at"] == closed[t["ledger_sequence"]] for t in txs)
+        ltxs = self._export(spark, corpus_dir, "export_ledger_transactions",
+                            tmp_path / "lt")
+        assert len(ltxs) == len(txs)
+        for t in ltxs:
+            assert t["closed_at"] == closed[t["ledger_sequence"]]
+            assert t["tx_ledger_history"] == history[t["ledger_sequence"]]
+
+    @pytest.mark.parametrize("cmd, decodes", [
+        pytest.param(c, 2 if c == "export_token_transfers" else 1, id=c)
+        for c in _ranged_commands()
+    ])
+    def test_op_grain_export_decodes_once(self, spark, xdr_dir, cmd, decodes,
                                           monkeypatch):
-        """An op-grain export hands its pipeline the operations decode
-        alone: one Python pass over the ledgers."""
+        """Every ranged export hands its pipeline one Python decode of the
+        ledgers; token transfers two (operations and transactions)."""
         from pyspark.sql import DataFrame
 
         from stellar_etl_spark.__main__ import _dispatch_cmd
@@ -415,11 +442,11 @@ class TestCliOpContext:
 
         def capture(*args, **kwargs):
             frames.extend(a for a in args if isinstance(a, DataFrame))
-            return 0
+            return {} if cmd == "export_ledger_entry_changes" else 0
 
         monkeypatch.setitem(EXPORT_PIPELINES, cmd, capture)
         _dispatch_cmd(cmd, _cli_bronze(spark, xdr_dir), spark, _cli_args(),
                       "unused", 0, 0, "json", None, "overwrite")
         plans = [df._jdf.queryExecution().optimizedPlan().toString()
                  for df in frames]
-        assert sum(len(_subtrees(p, "MapInPandas")) for p in plans) == 1
+        assert sum(len(_subtrees(p, "MapInPandas")) for p in plans) == decodes

@@ -118,9 +118,7 @@ class TestTransactionsMainnetParity:
             transform_transaction,
         )
 
-        out = transform_transaction(
-            silver["transactions"], silver["ledgers"]
-        ).collect()
+        out = transform_transaction(silver["transactions"]).collect()
         mine = {int(r["id"]): r.asDict() for r in out}
 
         n = 0
@@ -154,9 +152,7 @@ class TestLedgersMainnetParity:
         zero-value defaults for pre-Soroban fields."""
         from stellar_etl_spark.transforms.ledger import transform_ledger
 
-        out = transform_ledger(
-            silver["ledgers"], silver["transactions"]
-        ).collect()
+        out = transform_ledger(silver["ledgers"]).collect()
         mine = {r["sequence"]: r.asDict() for r in out}
 
         n = 0
@@ -232,9 +228,7 @@ class TestTokenTransfersMainnetParity:
 
         out = transform_token_transfer(
             derive_token_transfer_events(
-                silver["operations"],
-                silver["transactions"],
-                ledgers=silver["ledgers"],
+                silver["operations"], silver["transactions"]
             )
         ).collect()
 
@@ -1295,9 +1289,7 @@ class TestLedgerTransactionsMainnetParity:
             transform_ledger_transaction,
         )
 
-        rows = transform_ledger_transaction(
-            silver["transactions"], ledgers=silver["ledgers"]
-        ).collect()
+        rows = transform_ledger_transaction(silver["transactions"]).collect()
         mine = {}
         for r in rows:
             d = r.asDict()

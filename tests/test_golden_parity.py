@@ -104,9 +104,9 @@ def outputs(spark):
     C = fx.changes_df(spark)
     E = fx.contract_events_df(spark)
     return {
-        "ledgers": transform_ledger(L, T),
-        "transactions": transform_transaction(T, L),
-        "ledger_transactions": transform_ledger_transaction(T, L),
+        "ledgers": transform_ledger(L),
+        "transactions": transform_transaction(T),
+        "ledger_transactions": transform_ledger_transaction(T),
         "operations": transform_operation(O),
         "effects": transform_effects(O),
         "trades": transform_trade(O),

@@ -33,7 +33,6 @@ class TestPipelines:
     def test_export_ledgers_jsonl(self, spark, tmp_path):
         export_ledgers(
             fx.ledgers_df(spark),
-            fx.transactions_df(spark),
             str(tmp_path),
             start=2,
             end=3,

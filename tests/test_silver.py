@@ -102,12 +102,10 @@ def bronze(spark, tmp_path_factory):
 class TestDecodeLedgers:
     def test_header_surface_feeds_transform_ledger(self, spark, bronze):
         """decode_ledgers emits the full LEDGERS_DDL header row (hex
-        hashes, re-encoded base64 header XDR, close/fee scalars) and the
-        production transform_ledger runs on it (ledger.go:17-107)."""
-        from stellar_etl_spark.sources.silver import (
-            decode_ledgers,
-            decode_transactions,
-        )
+        hashes, re-encoded base64 header XDR, close/fee scalars, tx and op
+        counts) and the production transform_ledger runs on it
+        (ledger.go:17-107)."""
+        from stellar_etl_spark.sources.silver import decode_ledgers
         from stellar_etl_spark.transforms.ledger import transform_ledger
 
         ledgers = decode_ledgers(bronze)
@@ -120,15 +118,56 @@ class TestDecodeLedgers:
 
         base64.b64decode(rows[2].ledger_header)  # valid b64 XDR
 
-        out = {
-            r.sequence: r
-            for r in transform_ledger(
-                ledgers, decode_transactions(bronze)
-            ).collect()
-        }
+        out = {r.sequence: r for r in transform_ledger(ledgers).collect()}
         assert out[2].id == (2 << 32)
         assert out[2].transaction_count == 1
         assert out[3].operation_count == 1  # fee-bump inner payment
+
+    @pytest.mark.parametrize("corpus", ["perfbench", "build_ledgers"])
+    def test_counts_equal_transactions_groupby(self, spark, tmp_path, corpus):
+        """decode_ledgers' counts equal the groupBy over decode_transactions
+        that transform_ledger ran before the counts moved into silver (kept
+        here as the reference): the perfbench corpus has failed and
+        fee-bump txs, build_ledgers' LCMs carry no results at all."""
+        from stellar_etl_spark.sources.bronze import read_ledger_files
+        from stellar_etl_spark.sources.silver import decode_ledgers
+
+        if corpus == "perfbench":
+            from perfbench.corpus import build
+
+            build(str(tmp_path), 3, 8)
+        else:
+            from golden_lcm import build_ledgers
+
+            build_ledgers(str(tmp_path), 4)
+        lcms = read_ledger_files(spark, str(tmp_path)).select(
+            "sequence", F.col("content").alias("lcm_xdr")
+        )
+        ok = F.col("successful")
+        want = {
+            r[0]: tuple(r[1:])
+            for r in decode_transactions(lcms)
+            .groupBy("ledger_sequence")
+            .agg(
+                F.count(F.when(ok, 1)),
+                F.count(F.when(~ok, 1)),
+                F.sum(F.when(ok, F.col("operation_count")).otherwise(0)),
+                F.sum("operation_count"),
+            )
+            .collect()
+        }
+        got = {
+            r.sequence: (
+                r.successful_transaction_count,
+                r.failed_transaction_count,
+                r.operation_count,
+                r.tx_set_operation_count,
+            )
+            for r in decode_ledgers(lcms).collect()
+        }
+        assert got == want
+        failed = sum(c[1] for c in got.values())
+        assert failed > 0 if corpus == "perfbench" else failed == 0
 
 
 class TestSilverDecode:
@@ -189,15 +228,9 @@ class TestSilverDecode:
             transform_transaction,
         )
 
-        txs = decode_transactions(bronze)
-        ledgers = bronze.select(
-            F.col("sequence"),
-            F.col("closed_at"),
-            F.col("protocol_version"),
-        )
         out = {
             (r.ledger_sequence, r.application_order): r
-            for r in transform_transaction(txs, ledgers).collect()
+            for r in transform_transaction(decode_transactions(bronze)).collect()
         }
         t = out[(2, 1)]
         assert t.id == (2 << 32) | (1 << 12)
@@ -844,8 +877,6 @@ class TestSorobanFeeRefundAndPreP21:
         """inclusion_fee_charged = (fee-meta start − end) − resource_fee
         (transaction.go:167-169) — NOT reconstructed from the result's
         fee_charged, which the pre-P21 override replaces on P20 bumps."""
-        from pyspark.sql import functions as F
-
         from stellar_etl_spark.transforms.transaction import (
             transform_transaction,
         )
@@ -853,12 +884,7 @@ class TestSorobanFeeRefundAndPreP21:
         bronze = self._bronze(spark, tmp_path, 20, self._refund_pair())
         [srow] = decode_transactions(bronze).collect()
         assert srow.fee_initial_charged == self.INITIAL
-        ledgers = bronze.select(
-            F.col("sequence"), F.col("closed_at"), F.col("protocol_version")
-        )
-        [trow] = transform_transaction(
-            decode_transactions(bronze), ledgers
-        ).collect()
+        [trow] = transform_transaction(decode_transactions(bronze)).collect()
         assert trow.inclusion_fee_charged == self.INITIAL - self.RESOURCE_FEE
         # the override still governs fee_charged itself
         assert trow.fee_charged == self.RESOURCE_FEE - self.REFUND

@@ -55,7 +55,7 @@ class TestLedger:
     def test_counts_and_ids(self, data):
         out = {
             r.sequence: r
-            for r in transform_ledger(data["ledgers"], data["transactions"]).collect()
+            for r in transform_ledger(data["ledgers"]).collect()
         }
         # invalid ledger 5 dropped (negative total_coins)
         assert set(out) == {2, 3, 4}
@@ -71,16 +71,14 @@ class TestLedger:
 
     def test_strict_raises(self, data, spark):
         with pytest.raises(Exception, match="negative"):
-            transform_ledger(data["ledgers"], data["transactions"], strict=True).collect()
+            transform_ledger(data["ledgers"], strict=True).collect()
 
 
 class TestTransaction:
     def test_projection(self, data):
         out = {
             (r.ledger_sequence, r.application_order): r
-            for r in transform_transaction(
-                data["transactions"], data["ledgers"]
-            ).collect()
+            for r in transform_transaction(data["transactions"]).collect()
         }
         # invalid bounds row (3,3) dropped
         assert (3, 3) not in out
@@ -97,9 +95,7 @@ class TestTransaction:
     def test_pre_p21_feebump_soroban_fix(self, data):
         out = {
             (r.ledger_sequence, r.application_order): r
-            for r in transform_transaction(
-                data["transactions"], data["ledgers"]
-            ).collect()
+            for r in transform_transaction(data["transactions"]).collect()
         }
         fb = out[(4, 1)]
         # protocol 19 < 21: fee recomputed as resource_fee - refund, not 999
@@ -111,6 +107,8 @@ class TestTransaction:
     def test_ledger_transaction_passthrough(self, data):
         row = transform_ledger_transaction(data["transactions"]).collect()[0]
         assert row.tx_envelope == "ZW52" and row.tx_meta == "bWV0YQ=="
+        assert row.tx_ledger_history == fx.HDR_HIST
+        assert row.closed_at == fx._closed_at(row.ledger_sequence)
 
 
 class TestOperation:

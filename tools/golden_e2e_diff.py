@@ -111,8 +111,8 @@ def diff_tokens(spark) -> int:
         transform_token_transfer,
     )
 
-    txs, ops, ledgers_bronze = build_silver(spark)
-    ev = derive_token_transfer_events(ops, txs, ledgers=ledgers_bronze)
+    txs, ops, _ = build_silver(spark)
+    ev = derive_token_transfer_events(ops, txs)
     out = transform_token_transfer(ev).collect()
 
     def key(topic, op_id, frm, to, asset, amount_raw):
@@ -209,7 +209,7 @@ def diff_txs(spark) -> int:
     from stellar_etl_spark.transforms.transaction import transform_transaction
 
     txs, ops, ledgers = build_silver(spark)
-    out = transform_transaction(txs, ledgers).collect()
+    out = transform_transaction(txs).collect()
     mine = {int(r["id"]): r.asDict() for r in out}
     seqs = {r["sequence"] for r in ledgers.select("sequence").collect()}
     golden = {
@@ -249,8 +249,8 @@ def diff_txs(spark) -> int:
 def diff_ledgers(spark) -> int:
     from stellar_etl_spark.transforms.ledger import transform_ledger
 
-    txs, ops, bronze_led = build_silver(spark)
-    out = transform_ledger(bronze_led, txs).collect()
+    _, _, ledgers = build_silver(spark)
+    out = transform_ledger(ledgers).collect()
     mine = {r["sequence"]: r.asDict() for r in out}
     golden = {}
     for row in golden_rows("ledgers"):

@@ -35,7 +35,6 @@ def main() -> None:
     from stellar_etl_spark.queries import QUERIES
     from stellar_etl_spark.session import get_spark
     from stellar_etl_spark.transforms.derive import (
-        derived_ledgers,
         derived_token_ops,
         derived_transactions,
     )
@@ -55,12 +54,11 @@ def main() -> None:
         spark, sf_dir, "ops_token", lambda: derived_token_ops(_wide(li))
     )
     txs = derived_transactions(orders)
-    led = derived_ledgers(orders)
 
     stages = {
         "scan_ops": lambda: ops,
         "scan_txs": lambda: txs,
-        "events": lambda: derive_token_transfer_events(ops, txs, ledgers=led),
+        "events": lambda: derive_token_transfer_events(ops, txs),
         "full": lambda: QUERIES["token_transfer_classify"](spark, sf_dir),
     }
 
@@ -77,7 +75,7 @@ def main() -> None:
     for name, runs in results.items():
         print(f"{name:10s} min={min(runs):6.2f}  runs={runs}")
 
-    ev = derive_token_transfer_events(ops, txs, ledgers=led)
+    ev = derive_token_transfer_events(ops, txs)
     n = ev.groupBy("sac_kind").count().collect()
     print("event counts:", sorted((r["sac_kind"], r["count"]) for r in n))
     spark.stop()
