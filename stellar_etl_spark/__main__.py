@@ -166,6 +166,7 @@ def _dispatch_cmd(cmd, bronze, spark, args, out, s, e, fmt, extra, mode):
 
     from stellar_etl_spark.plans.pipelines import EXPORT_PIPELINES, _range
     from stellar_etl_spark.sources import silver
+    from stellar_etl_spark.sources.bronze import decode_ledger_files
 
     if cmd not in UNRANGED:
         # the pipeline keeps only [s, e]: drop the other ledgers on the
@@ -245,7 +246,10 @@ def _dispatch_cmd(cmd, bronze, spark, args, out, s, e, fmt, extra, mode):
     elif cmd == "get_ledger_range_from_times":
         if not (args.start_time and args.end_time):
             raise SystemExit("--start-time/--end-time required")
-        ledgers = silver.decode_ledgers(bronze)
+        # the lookup reads only sequence and closed_at: a header-only parse
+        ledgers = decode_ledger_files(
+            bronze.withColumnRenamed("lcm_xdr", "content")
+        )
         rng = EXPORT_PIPELINES[cmd](
             ledgers,
             F.timestamp_seconds(F.lit(_time_arg(args.start_time))),

@@ -654,20 +654,31 @@ def _header_history_b64(meta: dict) -> str:
     return base64.b64encode(w.bytes()).decode()
 
 
-def _ledger_counts(meta: dict, passphrase: str) -> tuple[int, int, int, int]:
+def _op_results(proc: dict | None) -> list:
+    """The operation results of a tx's result; a fee bump's are its inner
+    transaction's."""
+    result = proc["result"]["result"] if proc else None
+    if result is not None and result["code"] in (1, -13):
+        result = result["inner_result"]
+    return (result or {}).get("op_results") or []
+
+
+def _ledger_counts(meta: dict) -> tuple[int, int, int, int]:
     """extractCounts (ledger.go:120-153): successful txs, failed txs, the
-    operations of the successful txs and the operations of all txs, under
-    the success rule decode_transactions applies."""
-    ok = failed = ok_ops = all_ops = 0
-    for env, _th, proc in _match_processing(meta, passphrase):
-        n = len(_inner_tx(env)["operations"])
-        all_ops += n
-        if _successful(proc):
-            ok += 1
-            ok_ops += n
-        else:
-            failed += 1
-    return ok, failed, ok_ops, all_ops
+    operation results of the successful txs and the operations of the tx
+    set, under decode_transactions' success rule, no-results default
+    included.  Each is a sum, so results need no pairing with envelopes."""
+    all_ops = sum(len(_inner_tx(env)["operations"]) for env in meta["envelopes"])
+    procs = meta["tx_processing"]
+    if not procs:
+        return len(meta["envelopes"]), 0, all_ops, all_ops
+    ok = [proc for proc in procs if _successful(proc)]
+    return (
+        len(ok),
+        len(procs) - len(ok),
+        sum(len(_op_results(proc)) for proc in ok),
+        all_ops,
+    )
 
 
 def decode_transactions(
@@ -1047,10 +1058,7 @@ def decode_operations(
                 ):
                     tx = _inner_tx(env)
                     tx_source = _muxed(tx["source"])[0]
-                    result = proc["result"]["result"] if proc else None
-                    if result is not None and result["code"] in (1, -13):
-                        result = result["inner_result"]
-                    op_results = (result or {}).get("op_results") or []
+                    op_results = _op_results(proc)
                     op_metas = proc["meta"]["operations"] if proc else []
                     successful = _successful(proc)
                     for oi, op in enumerate(tx["operations"]):
@@ -1950,16 +1958,14 @@ def decode_contract_events(
     return bronze.mapInPandas(gen, schema=CONTRACT_EVENTS_DDL)
 
 
-def decode_ledgers(
-    bronze: DataFrame, passphrase: str = PUBLIC_PASSPHRASE
-) -> DataFrame:
+def decode_ledgers(bronze: DataFrame) -> DataFrame:
     """One LEDGERS_DDL header row per ledger from raw LCM bytes — the
     GetLedgers surface (input/ledgers.go:14-83) feeding transform_ledger:
     hex hashes, the re-encoded base64 LedgerHeader XDR, close/fee/reserve
     scalars, the STELLAR_VALUE_SIGNED node id (G strkey) + signature
     (ledger.go:17-107, 192-205), and the ledger's tx and op counts
-    (extractCounts, ledger.go:120-153), which pair each envelope with its
-    result the way decode_transactions does."""
+    (extractCounts, ledger.go:120-153), summed from the tx set and its
+    results."""
     import pandas as pd
 
     from stellar_etl_spark.schemas import LEDGERS_DDL
@@ -2006,7 +2012,7 @@ def decode_ledgers(
                         node_id,
                         signature,
                         _header_history_b64(meta),
-                        *_ledger_counts(meta, passphrase),
+                        *_ledger_counts(meta),
                     )
                 )
             yield pd.DataFrame(rows, columns=cols)

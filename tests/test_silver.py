@@ -169,6 +169,28 @@ class TestDecodeLedgers:
         failed = sum(c[1] for c in got.values())
         assert failed > 0 if corpus == "perfbench" else failed == 0
 
+    def test_counts_need_no_hash_pairing(self):
+        """The counts are sums over the tx set and its results, as in
+        extractCounts: results carry no hash that must match an envelope
+        (any network), and a fee bump's operations are its inner tx's."""
+        from stellar_etl_spark.sources.silver import _ledger_counts
+
+        def env(n_ops, bump=False):
+            tx = {"operations": [None] * n_ops}
+            return {"type": "fee_bump", "inner": {"tx": tx}} if bump else {
+                "type": "tx", "tx": tx}
+
+        def proc(code, n_ops):
+            res = {"code": code, "op_results": [None] * n_ops}
+            if code in (1, -13):  # fee bump: the inner tx's result
+                res = {"code": code, "inner_result": res}
+            return {"result": {"transaction_hash": b"?", "result": res}}
+
+        meta = {"envelopes": [env(2), env(3, bump=True), env(1)]}
+        assert _ledger_counts({**meta, "tx_processing": [
+            proc(-1, 1), proc(1, 3), proc(0, 2)]}) == (2, 1, 5, 6)
+        assert _ledger_counts({**meta, "tx_processing": []}) == (3, 0, 6, 6)
+
 
 class TestSilverDecode:
     def test_transactions_from_wire_bytes(self, bronze):
