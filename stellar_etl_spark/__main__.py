@@ -16,6 +16,18 @@ ledger range, mirroring cmd/get_ledger_range_from_times.go.
 Flag names follow internal/utils/main.go:231-288 where a Spark engine has
 an equivalent; captive-core/GCS-credential flags are intentionally absent
 (SURVEY.md §2.1 — out of scope / direct gs:// URIs instead).
+
+A command overlaps the parts of its run that do not depend on each other,
+as the reference runs its ledger prefetch and its change stream beside the
+consumer (utils/main.go:239-240, export_ledger_entry_changes.go:93-101).
+Right after the session starts, a background job starts one Python worker
+per core and imports the silver decoders into it
+(:func:`_warm_python_workers`), while the driver builds the export's plan;
+Spark reuses idle Python workers, so the first decode task finds one
+ready instead of waiting seconds for the worker daemon and its imports.
+A multi-table export writes its tables as concurrent jobs
+(plans/pipelines.py).  The warm-up thread is joined before the session
+stops, and its error is raised if the export itself succeeded.
 """
 
 from __future__ import annotations
@@ -28,6 +40,8 @@ import sys
 
 # the commands whose pipeline takes no --start-ledger/--end-ledger range
 UNRANGED = ("export_orderbooks", "get_ledger_range_from_times")
+# the job description of the Python worker warm-up
+WARM_UP_JOB = "warm up Python workers"
 
 
 def _parse_extra_fields(pairs: list[str]) -> dict[str, str]:
@@ -47,6 +61,32 @@ def _time_arg(v: str) -> int:
         from datetime import datetime
 
         return int(datetime.fromisoformat(v.replace("Z", "+00:00")).timestamp())
+
+
+def _warm_python_workers(spark):
+    """Start a background job of one no-op ``mapInPandas`` task per core
+    (``silver.warm_up``) and return its thread; ``thread.error`` holds what
+    the job raised, if anything.  The thread inherits the caller's job
+    group; its job carries the description ``WARM_UP_JOB``."""
+    from pyspark import InheritableThread
+
+    from stellar_etl_spark.sources.silver import warm_up
+
+    sc = spark.sparkContext
+    n = sc.defaultParallelism
+
+    def run():
+        sc.setJobDescription(WARM_UP_JOB)
+        try:
+            job = spark.range(n, numPartitions=n).mapInPandas(warm_up, "id long")
+            job.collect()  # bounded-driver-action: warm_up yields no rows
+        except Exception as exc:  # main raises it once the export is done
+            thread.error = exc
+
+    thread = InheritableThread(target=run, daemon=True)
+    thread.error = None
+    thread.start()
+    return thread
 
 
 def main(argv: list[str] | None = None) -> None:
@@ -104,10 +144,7 @@ def main(argv: list[str] | None = None) -> None:
     fmt = "both" if args.both else ("parquet" if args.parquet else "json")
     extra = _parse_extra_fields(args.extra_fields) or None
 
-    from pyspark.sql import functions as F
-
     from stellar_etl_spark.session import get_spark
-    from stellar_etl_spark.sources.bronze import read_ledger_files
 
     # A CLI process lives seconds, so tiered C2's server-grade compiles
     # never pay back: the JIT compiler threads, mostly C2, took ~60% of the
@@ -116,7 +153,28 @@ def main(argv: list[str] | None = None) -> None:
     spark = get_spark("stellar-etl-cli", cpus=args.cpus, extra_conf={
         "spark.driver.extraJavaOptions":
             "-XX:ReservedCodeCacheSize=1g -XX:TieredStopAtLevel=1",
+        # Spark's default, pinned: the warm-up job's Python workers serve
+        # the export's decode tasks only because idle workers are reused
+        "spark.python.worker.reuse": "true",
     })
+    warm_up = _warm_python_workers(spark)
+    try:
+        report = _run(spark, args, fmt, extra)
+    finally:
+        warm_up.join()
+    if warm_up.error is not None:
+        raise warm_up.error
+    if report:
+        print(json.dumps(report))
+    spark.stop()
+
+
+def _run(spark, args, fmt, extra) -> dict | None:
+    """Run the command; returns the report to print, if any."""
+    from pyspark.sql import functions as F
+
+    from stellar_etl_spark.sources.bronze import read_ledger_files
+
     spark.sparkContext.setLogLevel("WARN")
     # silver parses the raw LedgerCloseMeta bytes itself (a superset of the
     # bronze header parse, so corrupt files still fail the job): hand it the
@@ -147,16 +205,14 @@ def main(argv: list[str] | None = None) -> None:
             .start()
         )
         q.awaitTermination()
-        print(json.dumps({"streamed": True, "command": cmd, "output": out}))
-        spark.stop()
-        return
+        return {"streamed": True, "command": cmd, "output": out}
 
     rows = _dispatch(bronze)
-    if rows is not None:
-        # PrintTransformStats parity (cmd/command_utils.go:90-103), counted
-        # by the write job
-        print(json.dumps({"command": cmd, "rows": rows, "output": out, "fmt": fmt}))
-    spark.stop()
+    if rows is None:
+        return None
+    # PrintTransformStats parity (cmd/command_utils.go:90-103), counted by
+    # the write job
+    return {"command": cmd, "rows": rows, "output": out, "fmt": fmt}
 
 
 def _dispatch_cmd(cmd, bronze, spark, args, out, s, e, fmt, extra, mode):

@@ -10,8 +10,12 @@ observed sink, ``sources.sinks.export``.  Each returns the rows it wrote,
 counted by the write job itself: an int for a single-table export,
 ``{name: rows}`` for the multi-table ones.
 
-Shape notes: every pipeline is one Spark job; only the aggregation/explode
-steps shuffle (see tests/test_plans.py).  Each export takes one frame and
+Shape notes: a single-table pipeline is one Spark write job; a
+multi-table one (orderbooks, ledger entry changes) persists its input and
+then writes every table as its own job, all at once (:func:`_write_all`),
+so one table's driver-side planning and codegen and the scheduling gaps
+between jobs overlap the others' work.  Only the aggregation/explode steps
+shuffle (see tests/test_plans.py).  Each export takes one frame and
 joins no other: a silver ledger row carries its own tx and op counts, a
 transaction row its ledger's close time, protocol and header entry blob,
 and an operation row its transaction's hash and source and its ledger's
@@ -23,7 +27,10 @@ never parsed in Python.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -72,6 +79,23 @@ def _sink(
     formats = ("json", "parquet") if fmt == "both" else (fmt,)
     rows = [export(df, path + _SUFFIX[f], f, extra_fields, mode) for f in formats]
     return rows[0]
+
+
+def _write_all(
+    frames: dict[str, DataFrame], write: Callable[[str, DataFrame], int]
+) -> dict[str, int]:
+    """``write(name, df)`` every frame in its own thread, all at once, and
+    return ``{name: rows}`` in ``frames`` order.  Each thread inherits the
+    caller's Spark local properties, so its jobs keep the caller's job
+    group and description (under ``--stream``, the query's own).  Every
+    write ends before this returns; a failed one's error is then raised."""
+    spark = next(iter(frames.values())).sparkSession
+    with ThreadPoolExecutor(max_workers=len(frames)) as pool:
+        futures = {
+            name: pool.submit(inheritable_thread_target(spark)(write), name, df)
+            for name, df in frames.items()
+        }
+    return {name: f.result() for name, f in futures.items()}
 
 
 def export_ledgers(ledgers, out_dir, start=0, end=0, fmt="json",
@@ -133,10 +157,17 @@ def export_token_transfers(events, out_dir, start=0, end=0, fmt="json",
 
 def export_orderbooks(offers, out_dir, fmt="parquet",
                       mode="overwrite") -> dict[str, int]:
-    """cmd/export_orderbooks.go equivalent: the FNV star schema snapshot."""
-    star = transform_offer_normalized(offers)
-    return {name: _sink(df, out_dir, name, fmt, mode=mode)
-            for name, df in star.items()}
+    """cmd/export_orderbooks.go equivalent: the FNV star schema snapshot.
+    The offers are persisted for the duration of the export, so the four
+    tables' writes decode each ledger once between them."""
+    offers = offers.persist()
+    try:
+        return _write_all(
+            transform_offer_normalized(offers),
+            lambda name, df: _sink(df, out_dir, name, fmt, mode=mode),
+        )
+    finally:
+        offers.unpersist()
 
 
 # The 9 per-entity export-type flags (utils/main.go:278-288, default all).
@@ -162,8 +193,9 @@ def export_ledger_entry_changes(
 
     The whole fan-out is ONE logical plan per entity over a shared compacted
     change log; Spark writes each entity's every batch in a single job
-    (partitionBy batch), unlike the reference's sequential per-batch loop.
-    The silver change rows are persisted for the duration of the export, so
+    (partitionBy batch), unlike the reference's sequential per-batch loop,
+    and the entities' jobs run concurrently (:func:`_write_all`).  The
+    silver change rows are persisted for the duration of the export, so
     the ledgers are decoded once, not once per entity.  Each entity is one
     ``<out_dir>/<entity>`` directory, so ``fmt`` is "json" or "parquet",
     not "both".
@@ -182,10 +214,10 @@ def export_ledger_entry_changes(
             "change_type", F.col("effective_change_type")
         )
         routed = route_changes(compacted, names)
-        return {
-            name: export(routed[name], os.path.join(out_dir, name), fmt, mode=mode)
-            for name in names
-        }
+        return _write_all(
+            {name: routed[name] for name in names},
+            lambda name, df: export(df, os.path.join(out_dir, name), fmt, mode=mode),
+        )
     finally:
         ranged.unpersist()
 

@@ -681,6 +681,17 @@ def _ledger_counts(meta: dict) -> tuple[int, int, int, int]:
     )
 
 
+def warm_up(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    """A ``mapInPandas`` function that yields nothing.  It lives at module
+    level so that a worker unpickles it by reference: running it imports
+    this module, the XDR parser, pandas and pyarrow, the imports every
+    decode needs, into a Python worker that later tasks reuse (the CLI's
+    warm-up job, ``__main__._warm_python_workers``)."""
+    for _ in batches:
+        pass
+    return iter(())
+
+
 def decode_transactions(
     bronze: DataFrame, passphrase: str = "Public Global Stellar Network ; September 2015"
 ) -> DataFrame:

@@ -5,7 +5,8 @@ Test tiers (round-10, VERDICT r9 item 2): the full 1000+-test suite runs
 certified.  A plain ``pytest tests/`` now runs the FAST tier (everything
 not marked ``slow``; target < 15 min) which still covers the entry
 contract and every operator family; ``SPARK_GRAFT_FULL_TESTS=1`` restores
-the complete suite (the builder's pre-commit gate).  Slow-marked tests are
+the complete suite (the pre-commit gate).  ``make test`` runs the fast
+tier and ``make test-full`` the complete suite.  Slow-marked tests are
 deep sweeps whose subject matter is covered by a faster sibling in the
 fast tier (exhaustive fuzz corpora, multi-config soaks, whole-registry
 plan audits).

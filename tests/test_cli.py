@@ -269,6 +269,35 @@ class TestCliSession:
         opts = seen["extra_conf"]["spark.driver.extraJavaOptions"].split()
         assert "-XX:TieredStopAtLevel=1" in opts
         assert "-XX:ReservedCodeCacheSize=1g" in opts
+        # the warm-up job's Python workers serve the export only if reused
+        assert seen["extra_conf"]["spark.python.worker.reuse"] == "true"
+
+    def test_warm_up_job_ends_before_main_returns(self, spark, xdr_dir,
+                                                  tmp_path, monkeypatch):
+        """main runs the Python worker warm-up job beside the export and
+        joins it: the job completes, and none is left running."""
+        from stellar_etl_spark import session
+        from stellar_etl_spark.__main__ import WARM_UP_JOB, main
+
+        sc = spark.sparkContext
+        monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
+        monkeypatch.setattr(spark, "stop", lambda: None)
+        try:
+            main(["export_ledgers", "--ledgers-dir", xdr_dir,
+                  "--output", str(tmp_path)])
+        finally:
+            sc.setLogLevel("ERROR")
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert list(sc.statusTracker().getActiveJobsIds()) == []
+        jobs = sc._jvm.scala.jdk.javaapi.CollectionConverters.asJava(
+            sc._jsc.sc().statusStore().jobsList(None)
+        )
+        warm = [
+            j.status().toString() for j in jobs
+            if j.description().isDefined()
+            and j.description().get() == WARM_UP_JOB
+        ]
+        assert warm and set(warm) == {"SUCCEEDED"}
 
     def test_library_session_keeps_tiered_c2(self, spark):
         conf = spark.sparkContext.getConf()

@@ -7,6 +7,8 @@ import glob
 import json
 
 import fixtures as fx
+import pytest
+
 from stellar_etl_spark.plans import (
     EXPORT_PIPELINES,
     export_effects,
@@ -134,6 +136,44 @@ class TestPipelines:
         with open(log) as fh:
             assert sorted(int(line) for line in fh) == [2, 3, 4, 5]
 
+    def test_orderbooks_decode_each_ledger_once(self, spark, tmp_path):
+        """The four star tables of an orderbooks export share one silver
+        decode: each ledger reaches Python once, not once per table."""
+        import argparse
+
+        from golden_lcm import build_ledgers
+        from pyspark.sql import functions as F
+
+        from stellar_etl_spark.__main__ import _dispatch_cmd
+        from stellar_etl_spark.sources.bronze import read_ledger_files
+
+        ledgers_dir = tmp_path / "xdr"
+        ledgers_dir.mkdir()
+        build_ledgers(str(ledgers_dir), 4)
+        log = str(tmp_path / "decoded.log")
+
+        def tap(batches):
+            for pdf in batches:
+                with open(log, "a") as fh:
+                    fh.writelines(f"{seq}\n" for seq in pdf["sequence"])
+                yield pdf
+
+        bronze = read_ledger_files(spark, str(ledgers_dir)).select(
+            "sequence", F.col("content").alias("lcm_xdr")
+        )
+        _dispatch_cmd(
+            "export_orderbooks", bronze.mapInPandas(tap, schema=bronze.schema),
+            spark, argparse.Namespace(export_types=None),
+            str(tmp_path / "out"), 0, 0, "parquet", None, "overwrite",
+        )
+        assert sorted(glob.glob(str(tmp_path / "out" / "*"))) == [
+            str(tmp_path / "out" / f"{t}.parquet")
+            for t in ("dim_accounts", "dim_markets", "dim_offers",
+                      "fact_offer_events")
+        ]
+        with open(log) as fh:
+            assert sorted(int(line) for line in fh) == [2, 3, 4, 5]
+
     def test_effects_decode_operations_once(self, spark, tmp_path):
         """export_effects builds its expression without a pass over the
         input: the operations decode runs once per ledger, in the write."""
@@ -173,3 +213,69 @@ class TestPipelines:
             fx.EPOCH + dt.timedelta(seconds=7),
         ).collect()[0]
         assert (r.start_seq, r.end_seq) == (2, 3)
+
+
+class TestConcurrentWrites:
+    """A multi-table export writes its tables as concurrent jobs that act
+    as the caller's own: same job group, errors raised, order kept."""
+
+    TYPES = ["trustlines", "accounts", "offers", "liquidity_pools"]
+
+    def test_entity_jobs_keep_the_callers_job_group(self, spark, tmp_path):
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+        group = "changes-export"
+
+        def ungrouped() -> set[int]:
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            return set(tracker.getJobIdsForGroup(None))
+
+        before = ungrouped()
+        sc.setJobGroup(group, "export_ledger_entry_changes")
+        try:
+            export_ledger_entry_changes(
+                fx.changes_df(spark), str(tmp_path), export_types=self.TYPES
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert ungrouped() - before == set()
+        assert len(tracker.getJobIdsForGroup(group)) >= len(self.TYPES)
+
+    def test_failed_entity_write_raises_and_unpersists(self, spark, tmp_path,
+                                                       monkeypatch):
+        from pyspark import StorageLevel
+
+        from stellar_etl_spark.plans import pipelines
+
+        persisted = []
+        compact, export = pipelines.compact_changes, pipelines.export
+
+        def capture(ranged):
+            persisted.append(ranged)
+            return compact(ranged)
+
+        def failing(df, path, *args, **kwargs):
+            if path.endswith("offers"):
+                raise RuntimeError("offers write failed")
+            return export(df, path, *args, **kwargs)
+
+        monkeypatch.setattr(pipelines, "compact_changes", capture)
+        monkeypatch.setattr(pipelines, "export", failing)
+        with pytest.raises(RuntimeError, match="offers write failed"):
+            export_ledger_entry_changes(
+                fx.changes_df(spark), str(tmp_path), export_types=self.TYPES
+            )
+        [ranged] = persisted
+        assert ranged.storageLevel == StorageLevel.NONE
+
+    def test_counts_keep_the_requested_order(self, spark, tmp_path):
+        out = export_ledger_entry_changes(
+            fx.changes_df(spark), str(tmp_path), export_types=self.TYPES
+        )
+        assert list(out.items()) == [
+            ("trustlines", 2), ("accounts", 2), ("offers", 1),
+            ("liquidity_pools", 1),
+        ]
+        for name, rows in out.items():
+            assert len(_read_jsonl(str(tmp_path / name / "part-*"))) == rows
