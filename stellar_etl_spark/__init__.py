@@ -12,7 +12,8 @@ Architecture (Spark-first, not a port):
   - ``sources``    : readers/sinks (parquet, jsonl, binary ledger files,
                      bucketed layouts)
   - ``plans``      : the reference's export commands as end-to-end pipelines
-  - ``streaming``  : micro-batch + stateful structured-streaming pipelines
+                     (the CLI's ``--stream`` runs the same ones per
+                     micro-batch)
   - ``queries``    : the query registry exported through __spark_entry__
   - ``oracles``    : DuckDB ANSI-SQL twins for the correctness gate
 """

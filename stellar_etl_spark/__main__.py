@@ -122,10 +122,12 @@ def main(argv: list[str] | None = None) -> None:
                          "tailed; --start-ledger/--end-ledger still apply): "
                          "drains every file landed since the last run's "
                          "checkpoint, then stops (availableNow); works for "
-                         "every export_* subcommand, but "
-                         "export_ledger_entry_changes compacts each "
-                         "micro-batch on its own, so a 64-ledger window "
-                         "whose files land across two runs is written twice")
+                         "every export_* subcommand. "
+                         "export_ledger_entry_changes re-exports every "
+                         "--batch-size window a micro-batch touches from "
+                         "all of that window's landed files, so a window "
+                         "whose files land across runs is compacted whole, "
+                         "as in batch")
     ap.add_argument("--start-time", default=None,
                     help="get_ledger_range_from_times lower bound")
     ap.add_argument("--end-time", default=None,
@@ -157,6 +159,7 @@ def main(argv: list[str] | None = None) -> None:
         # the export's decode tasks only because idle workers are reused
         "spark.python.worker.reuse": "true",
     })
+    spark.sparkContext.setLogLevel("WARN")
     warm_up = _warm_python_workers(spark)
     try:
         report = _run(spark, args, fmt, extra)
@@ -175,14 +178,16 @@ def _run(spark, args, fmt, extra) -> dict | None:
 
     from stellar_etl_spark.sources.bronze import read_ledger_files
 
-    spark.sparkContext.setLogLevel("WARN")
     # silver parses the raw LedgerCloseMeta bytes itself (a superset of the
     # bronze header parse, so corrupt files still fail the job): hand it the
     # scan directly, with no Python decode in between; --stream tails the
     # same scan
-    bronze = read_ledger_files(
-        spark, args.ledgers_dir, stream=args.stream
-    ).select("sequence", F.col("content").alias("lcm_xdr"))
+    def scan(path, stream=False):
+        return read_ledger_files(spark, path, stream=stream).select(
+            "sequence", F.col("content").alias("lcm_xdr")
+        )
+
+    bronze = scan(args.ledgers_dir, stream=args.stream)
 
     cmd, out = args.command, args.output
     s, e = args.start_ledger, args.end_ledger
@@ -196,6 +201,10 @@ def _run(spark, args, fmt, extra) -> dict | None:
 
     if args.stream:
         def process(batch_df, epoch_id):
+            if cmd == "export_ledger_entry_changes":
+                # a window is compacted whole: re-export every window the
+                # micro-batch touches, replacing its earlier output
+                batch_df = scan(_window_paths(spark, args, batch_df))
             _dispatch(batch_df, mode="append")
 
         q = (
@@ -215,7 +224,26 @@ def _run(spark, args, fmt, extra) -> dict | None:
     return {"command": cmd, "rows": rows, "output": out, "fmt": fmt}
 
 
+def _window_paths(spark, args, micro_batch) -> list[str]:
+    """The path of every landed ledger file of the ``--batch-size`` windows
+    that ``micro_batch``'s in-range files fall in.  Neither step selects
+    ``content``, so no file body is read: the micro-batch gives its
+    windows, a listing of ``--ledgers-dir`` their files."""
+    from stellar_etl_spark.plans.pipelines import _range, batch_id_col
+    from stellar_etl_spark.sources.bronze import read_ledger_files
+
+    window = batch_id_col("sequence", args.batch_size)
+    in_range = _range(micro_batch, args.start_ledger, args.end_ledger, "sequence")
+    windows = in_range.select(window).distinct()
+    touched = [r[0] for r in windows.collect()]  # bounded-driver-action: windows/batch
+    files = read_ledger_files(spark, args.ledgers_dir).where(window.isin(touched))
+    return [r.path for r in files.select("path").collect()]  # bounded-driver-action: ≤ batch_size paths/window
+
+
 def _dispatch_cmd(cmd, bronze, spark, args, out, s, e, fmt, extra, mode):
+    """One export pass over ``bronze``.  ``mode="append"`` marks a stream
+    micro-batch: every export appends it, except the changes export, which
+    always replaces the windows it writes."""
     import json
 
     from pyspark.sql import functions as F
@@ -294,7 +322,6 @@ def _dispatch_cmd(cmd, bronze, spark, args, out, s, e, fmt, extra, mode):
         routed = EXPORT_PIPELINES[cmd](
             silver.decode_changes(bronze), out, s, e,
             batch_size=args.batch_size, export_types=types, fmt=fmt,
-            mode=mode,
         )
         if mode != "append":
             print(json.dumps({"entities": sorted(routed)}))

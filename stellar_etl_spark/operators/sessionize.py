@@ -4,9 +4,7 @@ reference's 64-ledger batching (which is fixed-width; sessions are
 data-driven widths).
 
 Shape: one shuffle on the user key; per-user windows are bounded (a user's
-events), so the lag + running-sum pattern scales to any corpus. The
-streaming twin is ``applyInPandasWithState`` with session timeouts — batch
-semantics here are the backfill-exact reference.
+events), so the lag + running-sum pattern scales to any corpus.
 """
 
 from __future__ import annotations

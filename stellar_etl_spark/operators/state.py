@@ -12,9 +12,6 @@ Scale formulation (no per-key iteration, no driver state):
      snapshot table size, never quadratic
   4. tombstones (last change = remove) participate in the fill, masking the
      key until it reappears, then drop out of the final filter
-
-The streaming twin keeps step 1 per micro-batch and the carry-forward in
-``applyInPandasWithState``; the batch shape here is the backfill path.
 """
 
 from __future__ import annotations

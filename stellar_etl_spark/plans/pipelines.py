@@ -10,6 +10,15 @@ observed sink, ``sources.sinks.export``.  Each returns the rows it wrote,
 counted by the write job itself: an int for a single-table export,
 ``{name: rows}`` for the multi-table ones.
 
+Ledger entry changes are compacted per ``batch_size``-ledger window (64 by
+default), as the reference
+compacts one ChangeBatch at a time (input/changes.go:61-64), and each
+entity is written as one ``batch_id=<window>`` directory per window, the
+reference's one ``{start}-{end}-{type}`` output per batch
+(command_utils.go:105-111).  A write replaces only the windows it holds,
+so re-exporting a window is idempotent; ``--stream`` relies on that when it
+re-exports every window a micro-batch touches.
+
 Shape notes: a single-table pipeline is one Spark write job; a
 multi-table one (orderbooks, ledger entry changes) persists its input and
 then writes every table as its own job, all at once (:func:`_write_all`),
@@ -31,13 +40,12 @@ from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark import inheritable_thread_target
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from stellar_etl_spark.operators.compaction import compact_changes
 from stellar_etl_spark.operators.ranges import ledger_range_for_times
 from stellar_etl_spark.sources.sinks import export
-from stellar_etl_spark.streaming.micro_batch import DEFAULT_BATCH_LEDGERS, batch_id_col
 from stellar_etl_spark.transforms import (
     transform_asset,
     transform_contract_events,
@@ -170,6 +178,17 @@ def export_orderbooks(offers, out_dir, fmt="parquet",
         offers.unpersist()
 
 
+# Reference default --batch-size (utils/main.go:269): 64 ledgers ≈ 5 min.
+DEFAULT_BATCH_LEDGERS = 64
+
+
+def batch_id_col(
+    seq_col: str = "ledger_sequence", batch_size: int = DEFAULT_BATCH_LEDGERS
+) -> Column:
+    """The ``batch_size``-ledger window a ledger sequence falls in."""
+    return (F.col(seq_col) / batch_size).cast("long")
+
+
 # The 9 per-entity export-type flags (utils/main.go:278-288, default all).
 DEFAULT_EXPORT_TYPES = (
     "accounts account_signers trustlines offers liquidity_pools "
@@ -185,20 +204,24 @@ def export_ledger_entry_changes(
     batch_size: int = DEFAULT_BATCH_LEDGERS,
     export_types: list[str] | None = None,
     fmt: str = "json",
-    mode: str = "overwrite",
 ) -> dict[str, int]:
     """cmd/export_ledger_entry_changes.go equivalent (SURVEY.md §3.3):
-    range → 64-ledger batches → per-(batch, key) compaction → per-entity
-    routing → one batch-partitioned output dir per entity.
+    range → ``batch_size``-ledger windows → per-(window, key) compaction →
+    per-entity routing → ``<out_dir>/<entity>/batch_id=<window>/part-*``.
 
     The whole fan-out is ONE logical plan per entity over a shared compacted
-    change log; Spark writes each entity's every batch in a single job
-    (partitionBy batch), unlike the reference's sequential per-batch loop,
-    and the entities' jobs run concurrently (:func:`_write_all`).  The
-    silver change rows are persisted for the duration of the export, so
-    the ledgers are decoded once, not once per entity.  Each entity is one
-    ``<out_dir>/<entity>`` directory, so ``fmt`` is "json" or "parquet",
-    not "both".
+    change log; Spark writes each entity's every window in a single job,
+    unlike the reference's sequential per-batch loop, and the entities'
+    jobs run concurrently (:func:`_write_all`).  The silver change rows are
+    persisted for the duration of the export, so the ledgers are decoded
+    once, not once per entity.  ``batch_id`` names the directory and is not
+    a column of the rows.  A write replaces only the windows it holds and
+    keeps every other window's directory, so exporting a window again
+    (``--stream`` re-exports every window a micro-batch touches, from all
+    of that window's ledgers) replaces its earlier output; an entity left
+    with no rows in that window keeps its earlier directory there.  Each
+    entity is one ``<out_dir>/<entity>`` tree, so ``fmt`` is "json" or
+    "parquet", not "both".
     """
     names = export_types or DEFAULT_EXPORT_TYPES
     # cached BEFORE the compaction shuffle: AQE does not re-coalesce a
@@ -214,9 +237,18 @@ def export_ledger_entry_changes(
             "change_type", F.col("effective_change_type")
         )
         routed = route_changes(compacted, names)
+        # a compacted row keeps its window's last change, so its sequence
+        # lies inside that window
         return _write_all(
-            {name: routed[name] for name in names},
-            lambda name, df: export(df, os.path.join(out_dir, name), fmt, mode=mode),
+            {
+                name: routed[name].withColumn(
+                    "batch_id", batch_id_col(batch_size=batch_size)
+                )
+                for name in names
+            },
+            lambda name, df: export(
+                df, os.path.join(out_dir, name), fmt, partition_by="batch_id"
+            ),
         )
     finally:
         ranged.unpersist()

@@ -1,22 +1,16 @@
 """Sources & sinks: bronze ledger-file ingestion and the reference's export
-surface (JSONL / Parquet / batch-partitioned files)."""
+surface (JSONL / Parquet, optionally one directory per partition value)."""
 
 from stellar_etl_spark.sources.bronze import (
     decode_ledger_files,
     read_ledger_files,
     write_bronze,
 )
-from stellar_etl_spark.sources.sinks import (
-    batch_dir_name,
-    export,
-    export_batches,
-)
+from stellar_etl_spark.sources.sinks import export
 
 __all__ = [
-    "batch_dir_name",
     "decode_ledger_files",
     "export",
-    "export_batches",
     "read_ledger_files",
     "write_bronze",
 ]

@@ -40,22 +40,32 @@ BINARY_FILE_SCHEMA = (
     "path string, modificationTime timestamp, length long, content binary"
 )
 
+# How far a landed file's modification time may lie behind the newest file
+# the stream has already seen and still be delivered.  Spark's default, 7
+# days, silently skips a backfill copied with its original times; a century
+# skips none.
+MAX_FILE_AGE = "36500d"
+
 
 def read_ledger_files(
-    spark: SparkSession, path: str, stream: bool = False
+    spark: SparkSession, path: str | list[str], stream: bool = False
 ) -> DataFrame:
-    """List + read one-ledger-per-file objects; the sequence is parsed from
-    the file name (the datastore names files by ledger sequence).  A pure
-    metadata/scan stage — no decode yet, so column pruning can drop
-    ``content`` for listing-only queries.  ``stream=True`` tails the same
-    directory as a streaming source instead of scanning it once.  A
-    missing ``path`` fails in both modes."""
+    """List + read one-ledger-per-file objects (a directory or a list of
+    files); the sequence is parsed from the file name (the datastore names
+    files by ledger sequence).  A pure metadata/scan stage — no decode yet,
+    so a query that selects no ``content`` lists the files without reading
+    their bodies.  ``stream=True`` tails the same directory as a streaming
+    source instead of scanning it once.  A missing ``path`` fails in both
+    modes."""
     reader = (
-        spark.readStream.format("binaryFile").schema(BINARY_FILE_SCHEMA)
+        spark.readStream.format("binaryFile")
+        .schema(BINARY_FILE_SCHEMA)
+        .option("maxFileAge", MAX_FILE_AGE)
         if stream
         else spark.read.format("binaryFile")
     )
     return reader.load(path).select(
+        F.col("path"),
         F.regexp_extract(F.col("path"), r"(\d+)\.[a-z.]+$", 1)
         .cast("long")
         .alias("sequence"),

@@ -11,14 +11,12 @@ by reading the output a second time.
   ``--extra-fields`` literals
 - Parquet (``WriteParquet``, command_utils.go:162-180): the widening
   conversions live in the transforms' schemas, not here
-- batch naming ``{start}-{end}-{type}`` (command_utils.go:105-111) as
-  partitioned output directories (:func:`export_batches`, the streaming
-  change sink)
+- the reference's one output per change batch, ``{start}-{end}-{type}``
+  (command_utils.go:105-111), as one ``<col>=<value>`` directory per
+  partition value (``partition_by``), each replaced on its own
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
@@ -30,6 +28,7 @@ def export(
     fmt: str,
     extra_fields: dict[str, object] | None = None,
     mode: str = "overwrite",
+    partition_by: str | None = None,
 ) -> int:
     """Write ``df`` to ``path`` as ``fmt`` ("json" or "parquet") and return
     the rows written, observed on the write job itself.
@@ -38,50 +37,25 @@ def export(
     ignoreNullFields=False to match the reference's explicit nulls
     (command_utils.go:56-66 keeps int64-safe values; Spark writes longs as
     JSON numbers losslessly).  ``extra_fields`` become literal columns on
-    every row.  ``mode="append"`` is the streaming micro-batch contract."""
+    every row.  ``mode="append"`` is the streaming micro-batch contract.
+
+    ``partition_by`` writes one ``<path>/<col>=<value>`` directory per
+    value of that column and leaves the column out of the rows.  An
+    overwrite then replaces only the directories of the values ``df``
+    holds (dynamic partition overwrite) and keeps every other one, so
+    re-running one partition is idempotent."""
     if fmt not in ("json", "parquet"):
         raise ValueError(f"export fmt must be 'json' or 'parquet', got {fmt!r}")
     obs = Observation()
     for k, v in (extra_fields or {}).items():
         df = df.withColumn(k, F.lit(v))
     writer = df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(mode)
+    if partition_by:
+        writer = writer.option("partitionOverwriteMode", "dynamic").partitionBy(
+            partition_by
+        )
     if fmt == "json":
         writer.option("ignoreNullFields", "false").json(path)
     else:
         writer.parquet(path)
     return obs.get["rows"]
-
-
-def batch_dir_name(start: int, end: int, entity: str) -> str:
-    """"{start}-{end}-{type}" batch naming (command_utils.go:105-111 uses
-    the closed range end = last ledger in batch)."""
-    return f"{start}-{end}-{entity}"
-
-
-def export_batches(
-    df: DataFrame,
-    out_dir: str,
-    entity: str,
-    batch_col: str = "batch_id",
-    fmt: str = "json",
-) -> None:
-    """One output directory per batch id, all written in ONE distributed job
-    via ``partitionBy`` (no driver-side loop over batches).
-
-    DYNAMIC partition overwrite: only the batch ids present in ``df`` are
-    replaced — static overwrite would wipe every previously written batch
-    dir, which silently destroys prior epochs when this is the
-    ``foreachBatch`` sink of ``stream_compacted_changes``.  Per-window
-    overwrite is also exactly the idempotency the streaming path's
-    fingerprint guard assumes: a whole-window re-delivery after crash
-    recovery rewrites that window's dir with identical deterministic
-    content instead of duplicating it."""
-    writer = (
-        df.withColumn("_batch", F.col(batch_col))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_batch")
-    )
-    path = os.path.join(out_dir, entity)
-    writer.json(path) if fmt == "json" else writer.parquet(path)
-

@@ -40,6 +40,21 @@ def _run(args: list[str]) -> str:
     return res.stdout
 
 
+# the six change entities the perfbench corpus fills
+CHANGE_ENTITIES = ("accounts", "account_signers", "trustlines", "offers",
+                   "liquidity_pools", "claimable_balances")
+
+
+def _entity_rows(base: str, entity: str) -> list[dict]:
+    """Every row under ``<base>/<entity>``, in a canonical order."""
+    rows = []
+    for f in glob.glob(os.path.join(base, entity, "**", "part-*"),
+                       recursive=True):
+        with open(f) as fh:
+            rows += [json.loads(line) for line in fh if line.strip()]
+    return sorted(rows, key=lambda r: json.dumps(r, sort_keys=True))
+
+
 class TestCli:
     def test_export_ledgers_range_and_extra_fields(self, xdr_dir, tmp_path):
         out = _run([
@@ -155,7 +170,8 @@ class TestCli:
 
         def rows(base, entity):
             out = []
-            for f in glob.glob(os.path.join(base, entity, "part-*")):
+            for f in glob.glob(os.path.join(base, entity, "**", "part-*"),
+                               recursive=True):
                 with open(f) as fh:
                     out += [json.loads(l) for l in fh if l.strip()]
             return sorted(out, key=lambda r: json.dumps(r, sort_keys=True))
@@ -164,6 +180,38 @@ class TestCli:
             batch = rows(batch_out, entity)
             assert batch, entity
             assert batch == rows(stream_out, entity), entity
+
+    def test_split_window_landing_streams_batch_rows(self, tmp_path):
+        """A 64-ledger window whose files land across two ``--stream`` runs
+        is re-exported whole by the second run, from all of its landed
+        files, and replaces the first run's output: every entity equals
+        the batch export row for row.  Compacting each run's files on its
+        own would write the window's keys twice (accounts 51 rows against
+        batch's 36 on this corpus)."""
+        from perfbench.corpus import build
+
+        corpus, ledgers = tmp_path / "corpus", tmp_path / "ledgers"
+        build(str(corpus), 3, 8)
+        ledgers.mkdir()
+        batch_out, stream_out = str(tmp_path / "b"), str(tmp_path / "s")
+        types = ",".join(CHANGE_ENTITIES)
+        _run([
+            "export_ledger_entry_changes", "--ledgers-dir", str(corpus),
+            "--output", batch_out, "--export-types", types,
+        ])
+        names = sorted(os.listdir(corpus))
+        for landing in (names[:4], names[4:]):
+            for name in landing:
+                shutil.copy(corpus / name, ledgers / name)
+            out = _run([
+                "export_ledger_entry_changes", "--stream", "--ledgers-dir",
+                str(ledgers), "--output", stream_out, "--export-types", types,
+            ])
+            assert '"entities"' not in out
+        for entity in CHANGE_ENTITIES:
+            batch = _entity_rows(batch_out, entity)
+            assert batch, entity
+            assert _entity_rows(stream_out, entity) == batch, entity
 
     @pytest.mark.slow
     def test_get_ledger_range_from_times(self, xdr_dir):

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import glob
 import json
+import os
 
 import fixtures as fx
 import pytest
@@ -98,12 +99,85 @@ class TestPipelines:
             "claimable_balances contract_code contract_data config_settings "
             "ttls".split()
         )
-        accounts = _read_jsonl(str(tmp_path / "accounts" / "part-*"))
+        accounts = _read_jsonl(str(tmp_path / "accounts" / "batch_id=*" / "part-*"))
         assert {a["account_id"] for a in accounts} == {fx.ACCOUNT_A, fx.ACCOUNT_B}
         assert out["accounts"] == len(accounts)
         # nonce contract-data entry dropped by the transform
-        cd = _read_jsonl(str(tmp_path / "contract_data" / "part-*"))
+        cd = _read_jsonl(str(tmp_path / "contract_data" / "batch_id=*" / "part-*"))
         assert len(cd) == 1
+
+    def test_changes_overwrite_is_per_window(self, spark, tmp_path):
+        """Exporting one window's range again replaces that window's
+        directory of every entity and leaves every other window's files
+        byte for byte: a re-exported window rewrites its rows, never adds
+        to them, and no other window is lost."""
+        def files() -> dict[str, bytes]:
+            return {
+                os.path.relpath(f, tmp_path): open(f, "rb").read()
+                for f in glob.glob(str(tmp_path / "*" / "*" / "part-*"))
+            }
+
+        def window(rel: str) -> str:
+            return rel.split(os.sep)[1]
+
+        def rows_of(fs: dict[str, bytes], w: str) -> list[str]:
+            return sorted(line for rel, body in fs.items() if window(rel) == w
+                          for line in body.decode().splitlines())
+
+        # one ledger per window: the fixture's changes fill windows 2, 3, 4
+        export_ledger_entry_changes(fx.changes_df(spark), str(tmp_path),
+                                    batch_size=1)
+        before = files()
+        assert {window(rel) for rel in before} == {
+            "batch_id=2", "batch_id=3", "batch_id=4"}
+        stale = tmp_path / "accounts" / "batch_id=3" / "part-stale.json"
+        stale.write_text('{"account_id": "stale"}\n')
+        export_ledger_entry_changes(fx.changes_df(spark), str(tmp_path),
+                                    start=3, end=3, batch_size=1)
+        after = files()
+        assert not stale.exists()
+        for w in ("batch_id=2", "batch_id=4"):
+            kept = {rel: body for rel, body in before.items() if window(rel) == w}
+            assert kept == {rel: body for rel, body in after.items()
+                            if window(rel) == w}
+        assert rows_of(after, "batch_id=3") == rows_of(before, "batch_id=3")
+        assert rows_of(before, "batch_id=3")
+
+    def test_stream_hands_over_only_touched_windows(self, spark, tmp_path,
+                                                    monkeypatch):
+        """A ``--stream`` micro-batch of the changes export hands
+        ``_dispatch_cmd`` every landed file of the windows it touches and
+        no other file."""
+        import argparse
+
+        from stellar_etl_spark import __main__ as cli
+
+        store = tmp_path / "ledgers"
+        store.mkdir()
+
+        def land(seqs):
+            for seq in seqs:
+                (store / f"{seq}.xdr").write_bytes(b"lcm")
+
+        handed = []
+
+        def capture(cmd, bronze, *args):
+            handed.append(sorted(os.path.basename(f) for f in bronze.inputFiles()))
+
+        monkeypatch.setattr(cli, "_dispatch_cmd", capture)
+        args = argparse.Namespace(
+            command="export_ledger_entry_changes", ledgers_dir=str(store),
+            output=str(tmp_path / "out"), start_ledger=0, end_ledger=0,
+            batch_size=4, stream=True,
+        )
+        land(range(6))  # windows 0 (ledgers 0-3) and 1 (ledgers 4, 5)
+        cli._run(spark, args, "json", None)
+        land([6])  # window 1 again
+        cli._run(spark, args, "json", None)
+        assert handed == [
+            [f"{seq}.xdr" for seq in range(6)],
+            ["4.xdr", "5.xdr", "6.xdr"],
+        ]
 
     def test_changes_decode_each_ledger_once(self, spark, tmp_path):
         """One silver decode serves every entity of a changes export: each
@@ -278,4 +352,4 @@ class TestConcurrentWrites:
             ("liquidity_pools", 1),
         ]
         for name, rows in out.items():
-            assert len(_read_jsonl(str(tmp_path / name / "part-*"))) == rows
+            assert len(_read_jsonl(str(tmp_path / name / "*" / "part-*"))) == rows

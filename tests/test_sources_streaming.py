@@ -1,49 +1,23 @@
-"""Tests for bronze ingestion, export sinks, and the streaming change path
-(streaming output must equal the batch compaction of the same data)."""
+"""Tests for bronze ingestion (batch and streamed ledger-file reads), the
+export sink, and the bucketed and z-ordered layouts."""
 
 from __future__ import annotations
-
-import pytest
 
 import glob
 import json
 import os
+import time
 
 from golden_lcm import build_ledgers
 from pyspark.sql import functions as F
 
-from stellar_etl_spark.operators.compaction import compact_changes
 from stellar_etl_spark.sources import (
-    batch_dir_name,
     decode_ledger_files,
     export,
-    export_batches,
     read_ledger_files,
     write_bronze,
 )
 from stellar_etl_spark.sources.bronze import read_bronze
-from stellar_etl_spark.streaming import (
-    read_change_stream,
-    stream_compacted_changes,
-)
-
-CHANGE_DDL = (
-    "ledger_sequence long, change_index long, ledger_key string, "
-    "change_type int, value long"
-)
-
-
-def _change_rows():
-    # keys k1..k3 across two 64-ledger batches; k2 is created+removed in
-    # batch 0 (annihilates); k1 spans both batches
-    return [
-        (10, 0, "k1", 0, 1),
-        (11, 0, "k1", 1, 2),
-        (12, 0, "k2", 0, 3),
-        (13, 0, "k2", 2, 3),
-        (70, 0, "k1", 1, 5),
-        (71, 0, "k3", 1, 6),
-    ]
 
 
 class TestBronze:
@@ -86,605 +60,6 @@ class TestSinks:
         # explicit nulls preserved (ExportEntry parity)
         assert any("v" in line and line["v"] is None for line in lines)
 
-    def test_batch_dir_name(self):
-        assert batch_dir_name(64, 127, "accounts") == "64-127-accounts"
-
-    def test_export_batches_partitions(self, spark, tmp_path):
-        df = spark.createDataFrame(
-            [(0, "a"), (0, "b"), (1, "c")], "batch_id long, v string"
-        )
-        export_batches(df, str(tmp_path), "accounts")
-        dirs = {
-            os.path.basename(p)
-            for p in glob.glob(str(tmp_path / "accounts" / "_batch=*"))
-        }
-        assert dirs == {"_batch=0", "_batch=1"}
-
-    def test_export_batches_overwrite_is_per_batch(self, spark, tmp_path):
-        """Dynamic partition overwrite: a later epoch's export must only
-        replace ITS batch dirs — static overwrite would delete every
-        previously exported batch when export_batches is the foreachBatch
-        sink, and a re-delivered batch must rewrite (not duplicate) its
-        own dir."""
-        df1 = spark.createDataFrame(
-            [(0, "a"), (1, "b")], "batch_id long, v string"
-        )
-        export_batches(df1, str(tmp_path), "accounts")
-        # next epoch: new batch 2 + re-delivery of batch 1 with the same
-        # deterministic content
-        df2 = spark.createDataFrame(
-            [(1, "b"), (2, "c")], "batch_id long, v string"
-        )
-        export_batches(df2, str(tmp_path), "accounts")
-        got = spark.read.json(str(tmp_path / "accounts"))
-        rows = {(r["_batch"], r["v"]) for r in got.collect()}
-        assert rows == {(0, "a"), (1, "b"), (2, "c")}  # 0 kept, 1 not doubled
-
-
-class TestStreaming:
-    def test_stream_equals_batch(self, spark, tmp_path):
-        src = str(tmp_path / "landing")
-        changes = spark.createDataFrame(_change_rows(), CHANGE_DDL)
-        changes.write.mode("overwrite").parquet(src)
-
-        out_dir = str(tmp_path / "out")
-
-        def sink(df, epoch_id):
-            df.write.mode("append").parquet(out_dir)
-
-        q = stream_compacted_changes(
-            read_change_stream(spark, src, CHANGE_DDL),
-            sink,
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            available_now=True,
-        )
-        q.awaitTermination(120)
-
-        streamed = spark.read.parquet(out_dir)
-        batch = compact_changes(
-            changes.withColumn(
-                "batch_id", F.expr("cast(ledger_sequence / 64 as long)")
-            )
-        )
-        key = lambda r: (r["batch_id"], r["ledger_key"])  # noqa: E731
-        s_rows = {key(r): r for r in streamed.collect()}
-        b_rows = {key(r): r for r in batch.collect()}
-        assert set(s_rows) == set(b_rows)
-        # k2 annihilated; k1 present in both batches with last values
-        assert (0, "k2") not in s_rows
-        assert s_rows[(0, "k1")].value == 2 and s_rows[(1, "k1")].value == 5
-        for k in b_rows:
-            assert s_rows[k].effective_change_type == b_rows[k].effective_change_type
-            assert s_rows[k].deleted == b_rows[k].deleted
-
-
-@pytest.mark.slow
-class TestStreamingHostileChanges:
-    """Round-9 verdict item 4: the hostile differential program reaches the
-    streaming path.  The batch compaction of the same rows is the oracle
-    (one code path — stream_compacted_changes runs compact_changes inside
-    foreachBatch — but the STREAM adds file-source batching, checkpointing
-    and per-epoch sinks, which is exactly where hostile rows could diverge).
-
-    Hostile classes (reference semantics internal/input/changes.go:104-151):
-      - NULL ledger keys (group-by-NULL rows must compact, not crash);
-      - duplicate (seq, change_index) order keys as FULL-ROW duplicates
-        (the round-8 at-least-once contract: identical payloads, so the
-        max_by tie is value-identical on both paths);
-      - a NULL change_index (NULL order key — max_by skips NULL ordering
-        on both paths);
-      - create→remove chains SPLIT ACROSS WINDOW boundaries (seq 63 / 64):
-        no annihilation — the create survives in window 0 and the remove
-        surfaces deleted=true in window 1;
-      - create→update→remove inside one window (annihilates entirely);
-      - remove→create re-creation inside one window.
-    """
-
-    def _hostile_rows(self):
-        return [
-            # NULL keys, two windows, multiple changes per window
-            (10, 0, None, 0, 1),
-            (11, 0, None, 1, 2),
-            (70, 0, None, 1, 9),
-            # full-row duplicate order keys (at-least-once delivery)
-            (12, 0, "dup", 1, 4),
-            (12, 0, "dup", 1, 4),
-            # NULL change_index on a key that also has a real change
-            (13, None, "nullidx", 1, 5),
-            (14, 0, "nullidx", 1, 6),
-            # create→remove split across the 64-ledger window boundary
-            (63, 0, "xwin", 0, 7),
-            (64, 0, "xwin", 2, 7),
-            # create→update→remove inside one window: annihilates
-            (20, 0, "gone", 0, 1),
-            (21, 0, "gone", 1, 2),
-            (22, 0, "gone", 2, 2),
-            # remove→create re-creation inside one window
-            (30, 0, "reborn", 2, 0),
-            (31, 0, "reborn", 0, 8),
-        ]
-
-    def test_hostile_stream_equals_batch(self, spark, tmp_path):
-        src = str(tmp_path / "landing")
-        changes = spark.createDataFrame(self._hostile_rows(), CHANGE_DDL)
-        # two landing files, windows kept whole per file (the reference's
-        # sequential-64-ledger contract: a window never splits across
-        # ChangeBatches) — maxFilesPerTrigger=1 forces two micro-batches
-        changes.where("ledger_sequence < 64").coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        changes.where("ledger_sequence >= 64").coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-        out_dir = str(tmp_path / "out")
-
-        def sink(df, epoch_id):
-            df.write.mode("append").parquet(out_dir)
-
-        q = stream_compacted_changes(
-            read_change_stream(spark, src, CHANGE_DDL, max_files_per_trigger=1),
-            sink,
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            available_now=True,
-        )
-        q.awaitTermination(120)
-
-        streamed = spark.read.parquet(out_dir)
-        batch = compact_changes(
-            changes.withColumn(
-                "batch_id", F.expr("cast(ledger_sequence / 64 as long)")
-            )
-        )
-        key = lambda r: (r["batch_id"], r["ledger_key"])  # noqa: E731
-        s_rows = {key(r): r.asDict() for r in streamed.collect()}
-        b_rows = {key(r): r.asDict() for r in batch.collect()}
-        assert s_rows == b_rows  # full-row parity, hostile classes included
-
-        # and the hostile semantics themselves (pinned on the batch oracle):
-        assert (0, "gone") not in b_rows          # in-window annihilation
-        assert b_rows[(0, "xwin")]["deleted"] is False   # create survives
-        assert b_rows[(1, "xwin")]["deleted"] is True    # remove surfaces
-        assert b_rows[(0, None)]["value"] == 2           # NULL key compacts
-        assert b_rows[(1, None)]["value"] == 9
-        assert b_rows[(0, "dup")]["value"] == 4          # dup rows collapse
-        assert b_rows[(0, "reborn")]["effective_change_type"] == 0
-        assert b_rows[(0, "nullidx")]["value"] == 6      # NULL ord skipped
-
-    def test_split_window_landing_fails_loudly(self, spark, tmp_path):
-        """A landing layout that scatters one window's ledgers across
-        trigger boundaries would silently emit two partial compactions of
-        the same (window, key) — at-least-once-per-window duplication the
-        downstream reader cannot detect.  The round-9 kill/restart soak
-        caught exactly this (781,930 duplicate rows from a hash-scattered
-        landing).  The window-alignment guard must fail the stream loudly
-        instead (reference contract: strictly sequential ChangeBatches,
-        input/changes.go:61-64)."""
-        import pytest
-
-        src = str(tmp_path / "landing")
-        rows = [(10, 0, "k1", 1, 1), (11, 0, "k1", 1, 2),
-                (12, 0, "k2", 1, 3)]
-        changes = spark.createDataFrame(rows, CHANGE_DDL)
-        # window 0 deliberately split across two files → two triggers
-        changes.where("ledger_sequence <= 10").coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        changes.where("ledger_sequence > 10").coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-        out_dir = str(tmp_path / "out")
-
-        def sink(df, epoch_id):
-            df.write.mode("append").parquet(out_dir)
-
-        q = stream_compacted_changes(
-            read_change_stream(spark, src, CHANGE_DDL, max_files_per_trigger=1),
-            sink,
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            available_now=True,
-        )
-        with pytest.raises(Exception, match="window-alignment violation"):
-            q.awaitTermination(120)
-            if q.exception():
-                raise q.exception()
-
-        # opt-out keeps the old behavior for callers that re-compact
-        # downstream: both partial rows emit, no error
-        out_dir2 = str(tmp_path / "out2")
-
-        def sink2(df, epoch_id):
-            df.write.mode("append").parquet(out_dir2)
-
-        q2 = stream_compacted_changes(
-            read_change_stream(spark, src, CHANGE_DDL, max_files_per_trigger=1),
-            sink2,
-            checkpoint_dir=str(tmp_path / "ckpt2"),
-            available_now=True,
-            enforce_window_alignment=False,
-        )
-        q2.awaitTermination(120)
-        got = spark.read.parquet(out_dir2).where("ledger_key = 'k1'")
-        assert got.count() == 2  # two partials — why the default guards
-
-    def test_export_batches_is_a_correct_streaming_sink(self, spark, tmp_path):
-        """The docstring-recommended production wiring, end to end:
-        stream_compacted_changes → export_batches (dynamic partition
-        overwrite on batch_id) over multiple micro-batches AND a
-        restart-with-nothing-new.  Output dirs must hold exactly the batch
-        compaction of all landed rows — no window doubled by the second
-        drain, no prior window wiped by a later epoch's overwrite."""
-        import glob
-        import os
-
-        src = str(tmp_path / "landing")
-        out = str(tmp_path / "export")
-        ckpt = str(tmp_path / "ckpt")
-        changes = spark.createDataFrame(
-            [
-                (10, 0, "k1", 0, 1), (11, 0, "k1", 1, 2),
-                (70, 0, "k2", 1, 5), (130, 0, "k1", 1, 7),
-            ],
-            CHANGE_DDL,
-        )
-        for lo, hi in ((0, 64), (64, 128), (128, 192)):
-            changes.where(
-                f"ledger_sequence >= {lo} AND ledger_sequence < {hi}"
-            ).coalesce(1).write.mode("append").parquet(src)
-
-        def sink(df, epoch_id):
-            export_batches(df, out, "changes", fmt="parquet")
-
-        def drain():
-            q = stream_compacted_changes(
-                read_change_stream(spark, src, CHANGE_DDL,
-                                   max_files_per_trigger=1),
-                sink,
-                checkpoint_dir=ckpt,
-                available_now=True,
-            )
-            q.awaitTermination(120)
-
-        drain()
-        drain()  # restart with nothing new — must change nothing
-
-        dirs = sorted(
-            os.path.basename(p)
-            for p in glob.glob(out + "/changes/_batch=*")
-        )
-        assert dirs == ["_batch=0", "_batch=1", "_batch=2"]
-        got = spark.read.parquet(out + "/changes")
-        batch = compact_changes(
-            changes.withColumn(
-                "batch_id", F.expr("cast(ledger_sequence / 64 as long)")
-            )
-        )
-        # the data files keep batch_id; _batch is only the partition dir
-        aligned = got.select(*batch.columns)
-        assert aligned.exceptAll(batch).isEmpty()
-        assert batch.exceptAll(aligned).isEmpty()
-
-    def test_fingerprint_guard_survives_restart(self, spark, tmp_path):
-        """The per-window fingerprint log persists under the checkpoint, so
-        a LATE partial arrival for an already-emitted window is rejected
-        even across a query restart (where the in-memory tracker resets) —
-        and a whole-window re-delivery with a MATCHING fingerprint is
-        accepted as an idempotent replay, not an error."""
-        import pytest
-
-        src = str(tmp_path / "landing")
-        out_dir = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-
-        def sink(df, epoch_id):
-            (
-                df.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(out_dir)
-            )
-
-        def drain():
-            q = stream_compacted_changes(
-                read_change_stream(spark, src, CHANGE_DDL),
-                sink,
-                checkpoint_dir=ckpt,
-                available_now=True,
-            )
-            q.awaitTermination(120)
-
-        # run 1: window 0 lands whole and is emitted + fingerprinted
-        spark.createDataFrame(
-            [(10, 0, "k1", 1, 1), (11, 0, "k1", 1, 2)], CHANGE_DDL
-        ).coalesce(1).write.mode("append").parquet(src)
-        drain()
-
-        # run 2 (restart): a late file adds MORE rows to window 0 — a
-        # split the reset in-memory set could not catch; the durable log
-        # must
-        spark.createDataFrame(
-            [(12, 0, "k1", 1, 3)], CHANGE_DDL
-        ).coalesce(1).write.mode("append").parquet(src)
-        with pytest.raises(Exception, match="window-alignment violation"):
-            drain()
-
-        # the window's output is untouched by the rejected partial
-        got = spark.read.parquet(out_dir).collect()
-        assert len(got) == 1 and got[0].value == 2
-
-
-@pytest.mark.slow
-class TestUnboundedChangeExportSoak:
-    """Round-6 verdict item 6: LONG-RUN soak of the unbounded (``end=0``)
-    change export — 1,024 64-ledger batch windows (65,536 ledgers of
-    synthetic changes) landed in waves and drained by repeated
-    availableNow restarts of ONE checkpoint (exactly how the unbounded
-    follow loop advances), including restart-with-nothing-new cycles
-    mid-soak.  Final audit in one pass: exactly-once (one row per
-    (batch_id, key) — duplicates break the count), gap-free (all 1,024
-    windows present), and value-correct (last change per key per window
-    wins)."""
-
-    N_BATCH_WINDOWS = 1024  # 64-ledger windows → 65,536 ledgers
-    N_KEYS = 4
-    N_WAVES = 8
-
-    def test_thousand_batch_windows_exactly_once_gap_free(
-        self, spark, tmp_path
-    ):
-        src = str(tmp_path / "landing")
-        out_dir = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-        total_ledgers = self.N_BATCH_WINDOWS * 64
-
-        def sink(df, epoch_id):
-            df.write.mode("append").parquet(out_dir)
-
-        def drain():
-            q = stream_compacted_changes(
-                read_change_stream(
-                    spark, src, CHANGE_DDL, max_files_per_trigger=2
-                ),
-                sink,
-                checkpoint_dir=ckpt,
-                available_now=True,
-            )
-            q.awaitTermination(300)
-
-        # land in waves; every ledger emits one change for key k{seq%4}
-        # with value=seq, change_type updated (no annihilation)
-        per_wave = total_ledgers // self.N_WAVES
-        for w in range(self.N_WAVES):
-            lo = w * per_wave
-            spark.range(lo, lo + per_wave).selectExpr(
-                "id as ledger_sequence",
-                "cast(0 as long) as change_index",
-                f"concat('k', id % {self.N_KEYS}) as ledger_key",
-                "cast(1 as int) as change_type",
-                "id as value",
-            ).coalesce(4).write.mode("append").parquet(src)
-            drain()
-            if w in (2, 5):
-                drain()  # restart with nothing new — must deliver nothing
-
-        audit = (
-            spark.read.parquet(out_dir)
-            .groupBy("batch_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.countDistinct("ledger_key").alias("n_keys"),
-                F.sum("value").alias("value_sum"),
-            )
-            .collect()
-        )
-        got = {r.batch_id: r for r in audit}
-        # gap-free: every one of the 1,024 windows present
-        assert sorted(got) == list(range(self.N_BATCH_WINDOWS))
-        for b, r in got.items():
-            # exactly-once: one compacted row per key per window
-            assert r.n_rows == self.N_KEYS and r.n_keys == self.N_KEYS
-            # last-wins: key k{i} last appears at seq b*64 + 60 + i
-            assert r.value_sum == sum(
-                b * 64 + 60 + i for i in range(self.N_KEYS)
-            )
-
-
-class TestStatefulStreaming:
-    def test_running_state_across_microbatches(self, spark, tmp_path):
-        import time
-
-        from stellar_etl_spark.streaming.stateful import stream_running_state
-
-        ddl = (
-            "ledger_key string, ledger_sequence long, change_index long, "
-            "change_type int, payload string"
-        )
-        src = str(tmp_path / "landing")
-        # two files → with maxFilesPerTrigger=1, two sequential micro-batches
-        spark.createDataFrame(
-            [("k1", 10, 0, 1, "a"), ("k2", 11, 0, 1, "x")], ddl
-        ).coalesce(1).write.mode("overwrite").parquet(src)
-        spark.createDataFrame(
-            [("k1", 20, 0, 1, "b"), ("k2", 21, 0, 2, "x")], ddl
-        ).coalesce(1).write.mode("append").parquet(src)
-
-        stream = (
-            spark.readStream.schema(ddl)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        out = stream_running_state(stream)
-        q = (
-            out.writeStream.format("memory")
-            .queryName("running_state")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        time.sleep(0.5)
-
-        rows = spark.sql(
-            "SELECT * FROM running_state ORDER BY ledger_sequence"
-        ).collect()
-        # state carried across micro-batches: latest per key wins
-        last = {}
-        for r in rows:
-            last[r.ledger_key] = r
-        assert last["k1"].payload == "b" and not last["k1"].deleted
-        assert last["k2"].deleted  # removed in the second batch
-
-
-class TestStatefulStreamingHostile:
-    """Hostile rows through the applyInPandasWithState running-state path
-    (round-9 extension of the streaming hostile program): NULL order-key
-    components crashed the Arrow fold with a non-finite astype before the
-    fix; the contract is the batch twin's max_by semantics — NULL
-    (sequence, change_index) order keys are SKIPPED, a key with only
-    NULL-order rows emits nothing, NULL keys and NULL payloads flow, and
-    full-row duplicates collapse."""
-
-    DDL = (
-        "ledger_key string, ledger_sequence long, change_index long, "
-        "change_type int, payload string"
-    )
-
-    def test_hostile_running_state_matches_maxby_oracle(self, spark, tmp_path):
-        import time
-
-        from stellar_etl_spark.streaming.stateful import stream_running_state
-
-        rows_b1 = [
-            ("k1", 10, 0, 1, "a"),
-            ("k2", 11, None, 1, "y"),     # NULL idx: skipped
-            ("k3", None, None, 1, None),  # only NULL ords: no emission
-            (None, 13, 0, 1, "p"),        # NULL key: its own state
-            ("k4", 14, 0, 1, "q"),
-            ("k4", 14, 0, 1, "q"),        # full-row duplicate
-        ]
-        rows_b2 = [
-            ("k1", None, 0, 2, "x"),      # NULL seq: must NOT remove k1
-            ("k2", 12, 0, 1, "z"),
-            ("k5", 15, 0, 2, "r"),        # tombstone state
-            ("k5", 15, 1, 2, None),       # NULL payload on the winner
-        ]
-        src = str(tmp_path / "landing")
-        spark.createDataFrame(rows_b1, self.DDL).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        spark.createDataFrame(rows_b2, self.DDL).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-        stream = (
-            spark.readStream.schema(self.DDL)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            stream_running_state(stream)
-            .writeStream.format("memory")
-            .queryName("hostile_running_state")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        time.sleep(0.5)
-
-        last = {}
-        for r in spark.sql(
-            "SELECT * FROM hostile_running_state ORDER BY ledger_sequence"
-        ).collect():
-            last[r.ledger_key] = r
-
-        # batch max_by oracle over the same rows: skip NULL ords, last wins
-        batch = spark.createDataFrame(rows_b1 + rows_b2, self.DDL)
-        oracle = {
-            r.ledger_key: r
-            for r in batch.selectExpr(
-                "*",
-                "shiftleft(ledger_sequence, 20) + change_index as _ord",
-            )
-            .groupBy("ledger_key")
-            .agg(
-                F.max_by(F.struct("ledger_sequence", "change_index",
-                                  "change_type", "payload"), F.col("_ord"))
-                .alias("s"),
-                F.max("_ord").alias("_m"),
-            )
-            .where(F.col("_m").isNotNull())
-            .select("ledger_key", "s.*")
-            .collect()
-        }
-        assert set(last) == set(oracle)  # k3 absent from BOTH
-        for k, o in oracle.items():
-            s = last[k]
-            assert (s.ledger_sequence, s.change_index, s.change_type,
-                    s.payload) == (o.ledger_sequence, o.change_index,
-                                   o.change_type, o.payload), k
-            assert s.deleted == (o.change_type == 2)
-        # the NULL-seq removal did not clobber k1's real state
-        assert last["k1"].payload == "a" and not last["k1"].deleted
-        assert last[None].payload == "p"
-        assert last["k5"].deleted and last["k5"].payload is None
-
-    def test_hostile_sessionize_null_user_and_null_ts(self, spark, tmp_path):
-        """stream_sessionize hostiles: a NULL event time must be dropped
-        (pre-fix: NaT became int64-min in the Arrow fold, poisoning the
-        session end and making setTimeoutTimestamp reject the negative
-        value — a hard crash), a NULL user_id sessionizes as its own key,
-        exact duplicate events fold without error, and a key whose batch
-        holds ONLY null-time rows keeps no state."""
-        import datetime as dt
-        import time
-
-        from stellar_etl_spark.streaming.stateful import stream_sessionize
-
-        DDL = "user_id long, event_id long, ts timestamp"
-        t = lambda h, m: dt.datetime(2024, 1, 1, h, m, 0)  # noqa: E731
-        rows = [
-            (1, 1, t(10, 0)), (1, 2, t(10, 5)),
-            (1, 2, t(10, 5)),            # exact duplicate event
-            (None, 3, t(10, 1)),         # NULL user key
-            (2, 4, None),                # NULL event time: dropped
-            (3, 5, t(15, 0)),            # advances watermark to 14:30
-        ]
-        src = str(tmp_path / "landing")
-        spark.createDataFrame(rows, DDL).coalesce(1).write.parquet(src)
-        stream = spark.readStream.schema(DDL).parquet(src)
-        q = (
-            stream_sessionize(stream, gap_seconds=1800,
-                              watermark="30 minutes")
-            .writeStream.format("memory")
-            .queryName("hostile_sessions")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        time.sleep(0.5)
-
-        def us(dtv):
-            return int(
-                dtv.replace(tzinfo=dt.timezone.utc).timestamp() * 1_000_000
-            )
-
-        got = {
-            (r.user_id, r.session_start_us, r.session_end_us, r.n_events)
-            for r in spark.sql("SELECT * FROM hostile_sessions").collect()
-        }
-        # watermark 14:30 finalizes user 1 (10:00-10:05, 3 events incl. the
-        # duplicate — at-least-once folds per delivered row) and the NULL
-        # user's singleton; user 2 contributed nothing; user 3 stays open
-        assert got == {
-            (1, us(t(10, 0)), us(t(10, 5)), 3),
-            (None, us(t(10, 1)), us(t(10, 1)), 1),
-        }
 
 
 class TestBucketedLayout:
@@ -727,220 +102,6 @@ class TestBucketedLayout:
             spark.sql("DROP TABLE IF EXISTS t_lineitem_b")
             spark.sql("DROP TABLE IF EXISTS t_orders_b")
 
-
-class TestWatermarkedWindows:
-    """Event-time windows + watermark late-data semantics
-    (streaming/windowed.py): late-but-in-watermark events merge, too-late
-    events drop, windows emit exactly once when the watermark passes."""
-
-    DDL = "event_id long, ts timestamp, event_type string, value double"
-
-    @staticmethod
-    def _t(hh, mm, ss=0):
-        import datetime as dt
-
-        return dt.datetime(2024, 1, 1, hh, mm, ss)
-
-    def _land(self, spark, landing, rows):
-        spark.createDataFrame(rows, self.DDL).coalesce(1).write.mode(
-            "append"
-        ).parquet(landing)
-
-    def _run(self, spark, landing, out, ckpt):
-        from stellar_etl_spark.streaming.windowed import watermarked_window_agg
-
-        stream = spark.readStream.schema(self.DDL).parquet(landing)
-        q = (
-            watermarked_window_agg(stream)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    def test_late_data_semantics(self, spark, tmp_path):
-        landing = str(tmp_path / "landing")
-        out = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-        t = self._t
-
-        # batch 1: two open 5-min windows; watermark ends at 09:56
-        self._land(spark, landing, [
-            (1, t(10, 0, 30), "a", 1.0),
-            (2, t(10, 4, 0), "a", 2.0),
-            (3, t(10, 6, 0), "b", 3.0),
-        ])
-        self._run(spark, landing, out, ckpt)
-        import os
-
-        emitted = (
-            spark.read.schema(
-                "window_start timestamp, window_end timestamp, "
-                "event_type string, n_events long, total_value double"
-            ).parquet(out).collect()
-            if any(f.endswith(".parquet") for f in os.listdir(out))
-            else []
-        )
-        assert emitted == []  # nothing finalized yet
-
-        # batch 2: a late-but-within-watermark event merges into the open
-        # 10:00 window; 10:30 advances the watermark to 10:20 → both early
-        # windows finalize and emit exactly once
-        self._land(spark, landing, [
-            (4, t(10, 2, 30), "a", 10.0),   # late, within watermark
-            (5, t(10, 30, 0), "b", 1.0),    # advances watermark
-        ])
-        self._run(spark, landing, out, ckpt)
-        rows = {
-            (r.window_start, r.event_type): r
-            for r in spark.read.parquet(out).collect()
-        }
-        assert set(rows) == {(t(10, 0), "a"), (t(10, 5), "b")}
-        w1 = rows[(t(10, 0), "a")]
-        assert w1.n_events == 3 and w1.total_value == 13.0  # late e4 merged
-        assert rows[(t(10, 5), "b")].n_events == 1
-
-        # batch 3: an event behind the 10:20 watermark is dropped; the 10:30
-        # window stays open (watermark 10:21 < 10:35) → nothing new emits
-        self._land(spark, landing, [
-            (6, t(10, 3, 0), "a", 99.0),    # too late → dropped
-            (7, t(10, 31, 0), "b", 1.0),
-        ])
-        self._run(spark, landing, out, ckpt)
-        final = spark.read.parquet(out).collect()
-        assert len(final) == 2  # unchanged: no re-emit, no late merge
-        assert {r.n_events for r in final} == {3, 1}
-
-    def test_batch_twin_parity(self, spark):
-        """The same operator on a batch DataFrame is the oracle for the
-        streamed, finalized windows."""
-        from stellar_etl_spark.streaming.windowed import watermarked_window_agg
-
-        t = self._t
-        batch = spark.createDataFrame(
-            [
-                (1, t(10, 0, 30), "a", 1.0),
-                (2, t(10, 4, 0), "a", 2.0),
-                (4, t(10, 2, 30), "a", 10.0),
-                (3, t(10, 6, 0), "b", 3.0),
-            ],
-            self.DDL,
-        )
-        rows = {
-            (r.window_start, r.event_type): (r.n_events, r.total_value)
-            for r in watermarked_window_agg(batch).collect()
-        }
-        assert rows[(t(10, 0), "a")] == (3, 13.0)
-        assert rows[(t(10, 5), "b")] == (1, 3.0)
-
-    def test_dedup_within_watermark(self, spark, tmp_path):
-        from stellar_etl_spark.streaming.windowed import dedup_within_watermark
-
-        landing = str(tmp_path / "landing")
-        out = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-        t = self._t
-
-        def run():
-            stream = spark.readStream.schema(self.DDL).parquet(landing)
-            q = (
-                dedup_within_watermark(stream)
-                .writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-
-        # in-batch duplicate collapses
-        self._land(spark, landing, [
-            (1, t(10, 0, 0), "a", 1.0),
-            (1, t(10, 0, 10), "a", 1.0),
-            (2, t(10, 1, 0), "a", 1.0),
-        ])
-        run()
-        assert sorted(r.event_id for r in spark.read.parquet(out).collect()) == [1, 2]
-
-        # cross-batch re-delivery within the watermark drops; new id passes
-        self._land(spark, landing, [
-            (1, t(10, 2, 0), "a", 1.0),
-            (3, t(10, 3, 0), "a", 1.0),
-        ])
-        run()
-        assert sorted(r.event_id for r in spark.read.parquet(out).collect()) == [1, 2, 3]
-
-
-class TestStreamStreamJoin:
-    """Time-bounded stream-stream join (streaming/windowed.py
-    timebound_stream_join): streaming result equals the batch twin, and the
-    time bound excludes touches outside the attribution window."""
-
-    DDL = "event_id long, ts timestamp, user_id long, event_type string"
-
-    @staticmethod
-    def _t(hh, mm, ss=0):
-        import datetime as dt
-
-        return dt.datetime(2024, 1, 1, hh, mm, ss)
-
-    def test_stream_equals_batch(self, spark, tmp_path):
-        from stellar_etl_spark.streaming.windowed import timebound_stream_join
-
-        t = self._t
-        purchases = [
-            (100, t(10, 0), 1, "purchase"),
-            (101, t(11, 0), 1, "purchase"),
-            (102, t(10, 5), 2, "purchase"),
-        ]
-        touches = [
-            (1, t(9, 40), 1, "click"),   # within 30 min of 100
-            (2, t(9, 20), 1, "view"),    # too early for 100 (40 min)
-            (3, t(10, 50), 1, "click"),  # within 30 min of 101
-            (4, t(10, 6), 2, "view"),    # AFTER purchase 102 -> excluded
-            (5, t(10, 0), 2, "click"),   # equal-to-lag boundary for 102
-        ]
-        p_dir, t_dir = str(tmp_path / "p"), str(tmp_path / "t")
-        out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-        spark.createDataFrame(purchases, self.DDL).write.parquet(p_dir)
-        spark.createDataFrame(touches, self.DDL).write.parquet(t_dir)
-
-        def join(l, r):
-            return timebound_stream_join(
-                l, r, on="user_id", watermark="10 minutes",
-                max_lag_seconds=1800,
-            ).select("event_id", "user_id", "right_event_id")
-
-        batch = sorted(
-            (r.event_id, r.user_id, r.right_event_id)
-            for r in join(
-                spark.read.parquet(p_dir), spark.read.parquet(t_dir)
-            ).collect()
-        )
-        assert batch == [(100, 1, 1), (101, 1, 3), (102, 2, 5)]
-
-        q = (
-            join(
-                spark.readStream.schema(self.DDL).parquet(p_dir),
-                spark.readStream.schema(self.DDL).parquet(t_dir),
-            )
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        streamed = sorted(
-            (r.event_id, r.user_id, r.right_event_id)
-            for r in spark.read.parquet(out).collect()
-        )
-        assert streamed == batch
 
 
 class TestSessionWindowParity:
@@ -1002,138 +163,6 @@ class TestSessionWindowParity:
         assert native == ours_set
         assert len(native) == 3
 
-
-class TestStreamSessionize:
-    """Streaming gap-sessionization with event-time timeout
-    (streaming/stateful.py stream_sessionize): in-batch gaps close sessions
-    immediately; open sessions finalize when the watermark passes
-    last_event + gap; emitted rows match the batch sessionizer."""
-
-    DDL = "user_id long, event_id long, ts timestamp"
-
-    @staticmethod
-    def _t(hh, mm):
-        import datetime as dt
-
-        return dt.datetime(2024, 1, 1, hh, mm, 0)
-
-    def test_sessions_finalize_in_batch_and_by_timeout(self, spark, tmp_path):
-        from stellar_etl_spark.streaming.stateful import stream_sessionize
-
-        landing = str(tmp_path / "landing")
-        out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-        t = self._t
-
-        def run():
-            stream = spark.readStream.schema(self.DDL).parquet(landing)
-            q = (
-                stream_sessionize(stream, gap_seconds=1800,
-                                  watermark="30 minutes")
-                .writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(180)
-
-        def us(dtv):
-            import datetime as dt
-
-            return int(dtv.replace(tzinfo=dt.timezone.utc).timestamp() * 1_000_000)
-
-        # batch 1: user 1 has a 2-event session then an 85-min gap (closes
-        # in-batch) then a 1-event open session; user 2's event advances the
-        # watermark later
-        spark.createDataFrame(
-            [
-                (1, 1, t(10, 0)),
-                (1, 2, t(10, 5)),
-                (1, 3, t(11, 30)),
-                (2, 4, t(13, 0)),
-            ],
-            self.DDL,
-        ).coalesce(1).write.mode("append").parquet(landing)
-        run()
-        got1 = {
-            (r.user_id, r.session_start_us, r.session_end_us, r.n_events)
-            for r in spark.read.parquet(out).collect()
-        }
-        # the 85-min gap closes session 1 in-batch; availableNow's final
-        # batch advances the watermark to 13:00-30m=12:30, past the open
-        # session's timeout (11:30+30m=12:00) -> finalized by timeout too.
-        # user 2's session (13:00) stays open.
-        assert got1 == {
-            (1, us(t(10, 0)), us(t(10, 5)), 2),
-            (1, us(t(11, 30)), us(t(11, 30)), 1),
-        }
-
-        # batch 2: 13:05 extends user 2's open session; the 15:00 clock
-        # event lifts the watermark to 14:30, past 13:05+30m -> finalized
-        spark.createDataFrame(
-            [(2, 5, t(13, 5)), (3, 6, t(15, 0))], self.DDL
-        ).coalesce(1).write.mode("append").parquet(landing)
-        run()
-        got2 = {
-            (r.user_id, r.session_start_us, r.session_end_us, r.n_events)
-            for r in spark.read.parquet(out).collect()
-        }
-        assert got2 == got1 | {(2, us(t(13, 0)), us(t(13, 5)), 2)}
-
-    def test_late_in_gap_event_does_not_regress_session_end(
-        self, spark, tmp_path
-    ):
-        """A late-but-within-watermark event older than the stored session
-        end must not move `last` backwards: pre-fix, the fold assigned
-        last=ts, so a later event within gap of the REAL end closed the
-        session early and the timeout fired prematurely."""
-        from stellar_etl_spark.streaming.stateful import stream_sessionize
-
-        landing = str(tmp_path / "landing")
-        out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-        t = self._t
-
-        def run():
-            stream = spark.readStream.schema(self.DDL).parquet(landing)
-            q = (
-                stream_sessionize(stream, gap_seconds=1800,
-                                  watermark="300 minutes")
-                .writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(180)
-
-        def us(dtv):
-            import datetime as dt
-
-            return int(
-                dtv.replace(tzinfo=dt.timezone.utc).timestamp() * 1_000_000
-            )
-
-        # batch 1: one session spanning 10:00..10:20 (within the 30m gap)
-        spark.createDataFrame(
-            [(1, 1, t(10, 0)), (1, 2, t(10, 20))], self.DDL
-        ).coalesce(1).write.mode("append").parquet(landing)
-        run()
-        # batch 2: a LATE event at 10:10 (inside the session, within the
-        # generous watermark), then 10:45 — within 30m of the TRUE end
-        # 10:20, so the session must CONTINUE.  Pre-fix the fold regressed
-        # last to 10:10, making 10:45 look 35m away and closing the
-        # session early at 10:10.
-        spark.createDataFrame(
-            [(1, 3, t(10, 10)), (1, 4, t(10, 45))], self.DDL
-        ).coalesce(1).write.mode("append").parquet(landing)
-        run()
-        closed = {
-            (r.user_id, r.session_start_us, r.session_end_us, r.n_events)
-            for r in spark.read.parquet(out).collect()
-        }
-        assert closed == set()  # the single session is still open
 
 
 class TestZorderLayout:
@@ -1226,40 +255,6 @@ class TestZorderLayout:
         assert zc == n
 
 
-class TestStreamStaticEnrichment:
-    def test_stream_enriched_with_batch_dim(self, spark, tmp_path):
-        from stellar_etl_spark.streaming.windowed import enrich_with_dim
-
-        src = tmp_path / "facts"
-        src.mkdir()
-        import json as _json
-
-        with open(src / "b0.json", "w") as fh:
-            for i, u in [(1, 10), (2, 20), (3, 99)]:
-                fh.write(_json.dumps({"event_id": i, "user_id": u}) + "\n")
-        stream = (
-            spark.readStream.schema("event_id long, user_id long")
-            .json(str(src))
-        )
-        dim = spark.createDataFrame(
-            [(10, "gold"), (20, "silver")], "user_id long, tier string"
-        )
-        q = (
-            enrich_with_dim(stream, dim, ["user_id"])
-            .writeStream.format("memory")
-            .queryName("enriched")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(60)
-        got = {
-            r.event_id: r.tier
-            for r in spark.sql("select * from enriched").collect()
-        }
-        # left join: unmatched user keeps the row with null tier
-        assert got == {1: "gold", 2: "silver", 3: None}
-
-
 class TestStreamCrashRecovery:
     """Checkpointed restart of the ledger-file stream
     (sources/bronze.py ``read_ledger_files(stream=True)``): a stopped query
@@ -1310,372 +305,30 @@ class TestStreamCrashRecovery:
         run_until_drained()
         assert delivered() == [1, 2, 3, 4, 5, 6]
 
+    def test_backfill_with_old_mtime_is_delivered(self, spark, tmp_path):
+        """A ledger copied with its original modification time, a month
+        behind the newest file already delivered, is still delivered:
+        Spark's default ``maxFileAge`` of 7 days would skip it silently."""
+        path = self._mk_files(tmp_path, [2, 3, 4])
+        ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
 
-class TestStreamingIngest:
-    def test_stream_ingest_equals_batch_replay(self, spark, tmp_path):
-        import os
-        import time as _time
-
-        from stellar_etl_spark.streaming.ingest import (
-            ingest_batch,
-            stream_ingest_corpus,
-        )
-
-        docs = (
-            spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-            .select("doc_id", "text")
-            .orderBy("doc_id")
-            .limit(60)
-            .collect()
-        )
-        # 3 landing files = 3 micro-batches; batch 2 re-lands 5 exact
-        # copies of batch-1 docs (new ids) that the screen must reject
-        batches = [docs[0:20], docs[20:40], docs[40:60]]
-        batches[2] = batches[2] + [
-            type(r)(doc_id=r.doc_id + 100000, text=r.text)
-            for r in docs[0:5]
-        ]
-        landing = tmp_path / "landing"
-        landing.mkdir()
-        for i, rows in enumerate(batches):
-            spark.createDataFrame(
-                [(r.doc_id, r.text) for r in rows], "doc_id long, text string"
-            ).coalesce(1).write.parquet(str(landing / f"b{i}"))
-            _time.sleep(1.1)  # distinct mtimes -> deterministic file order
-
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(landing / "b*"))
-        )
-        index_dir = str(tmp_path / "corpus")
-        q = stream_ingest_corpus(
-            stream, index_dir, checkpoint_dir=str(tmp_path / "ckpt")
-        )
-        q.awaitTermination(180)
-        streamed = {
-            r.doc_id for r in spark.read.parquet(index_dir).collect()
-        }
-
-        # batch replay: same operators, same batch boundaries
-        index = None
-        admitted_all = set()
-        for rows in batches:
-            bdf = spark.createDataFrame(
-                [(r.doc_id, r.text) for r in rows], "doc_id long, text string"
-            )
-            adm = ingest_batch(bdf, index)
-            admitted_all |= {r.doc_id for r in adm.collect()}
-            index = spark.createDataFrame(
-                [(d, t) for d, t in [
-                    (r.doc_id, r.text)
-                    for rs in batches for r in rs
-                    if r.doc_id in admitted_all
-                ]],
-                "doc_id long, text string",
-            )
-        assert streamed == admitted_all
-        # the re-landed exact copies were rejected
-        assert not {d for d in streamed if d >= 100000}
-
-    @pytest.mark.slow
-    def test_hostile_docs_stream_equals_loop_replay(self, spark, tmp_path):
-        """Round-9 hostile extension for the ingestion stream: NULL /
-        empty / whitespace / unicode / one-word texts and re-landed exact
-        duplicates flow through stream_ingest_corpus without crashing, and
-        the admitted set equals the batch loop-replay twin's (the
-        streaming layer adds no semantics to the hostile classes the batch
-        operators already contract)."""
-        import time as _time
-
-        from stellar_etl_spark.streaming.ingest import (
-            ingest_batch,
-            stream_ingest_corpus,
-        )
-
-        base = [
-            (1, None),                      # NULL text
-            (2, ""),                        # empty
-            (3, "   "),                     # whitespace
-            (4, "émoji 🎉 ünïcode tëxt wörds " * 4),
-            (5, "one"),                     # single word
-            (6, "a perfectly ordinary document with plenty of words "
-                "to score and shingle for the near dup screen"),
-        ]
-        batches = [
-            base,
-            # re-land the unicode and ordinary docs verbatim (new ids):
-            # the screen must reject them as near-dups
-            [(104, base[3][1]), (106, base[5][1]),
-             # scores keep=true under the deterministic weight table AND
-             # shares no shingles with the corpus -> must be admitted
-             (107, "data pipelines transform raw records into curated "
-                   "tables for downstream training")],
-        ]
-        landing = tmp_path / "landing"
-        landing.mkdir()
-        for i, rows in enumerate(batches):
-            spark.createDataFrame(
-                rows, "doc_id long, text string"
-            ).coalesce(1).write.parquet(str(landing / f"b{i}"))
-            _time.sleep(1.1)  # distinct mtimes -> deterministic order
-
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(landing / "b*"))
-        )
-        index_dir = str(tmp_path / "corpus")
-        q = stream_ingest_corpus(
-            stream, index_dir, checkpoint_dir=str(tmp_path / "ckpt")
-        )
-        q.awaitTermination(180)
-        streamed = {
-            r.doc_id for r in spark.read.parquet(index_dir).collect()
-        }
-
-        # loop-replay twin over the same batch boundaries
-        index = None
-        admitted: set[int] = set()
-        all_rows = {r[0]: r[1] for rows in batches for r in rows}
-        for rows in batches:
-            bdf = spark.createDataFrame(rows, "doc_id long, text string")
-            adm = ingest_batch(bdf, index)
-            admitted |= {r.doc_id for r in adm.collect()}
-            index = spark.createDataFrame(
-                [(d, all_rows[d]) for d in admitted],
-                "doc_id long, text string",
-            )
-        assert streamed == admitted
-        assert 104 not in streamed and 106 not in streamed  # dups rejected
-        assert 107 in streamed                              # fresh admitted
-
-    def test_checkpoint_reset_does_not_clobber_prior_admissions(
-        self, spark, tmp_path
-    ):
-        """A reset checkpoint restarts epoch ids at 0; the run=<queryId>
-        namespace must keep the new epoch-0 overwrite away from the old
-        run's epoch-0 data (the old layout silently DELETED it)."""
-        from stellar_etl_spark.streaming.ingest import stream_ingest_corpus
-
-        docs = (
-            spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-            .select("doc_id", "text")
-            .orderBy("doc_id")
-            .limit(20)
-            .collect()
-        )
-        landing = tmp_path / "landing"
-        landing.mkdir()
-        spark.createDataFrame(
-            [(r.doc_id, r.text) for r in docs], "doc_id long, text string"
-        ).coalesce(1).write.parquet(str(landing / "b0"))
-
-        def run(ckpt: str):
-            stream = (
-                spark.readStream.schema("doc_id long, text string")
-                .parquet(str(landing / "b*"))
-            )
-            q = stream_ingest_corpus(
-                stream, index_dir, checkpoint_dir=str(tmp_path / ckpt)
-            )
-            q.awaitTermination(120)
-
-        index_dir = str(tmp_path / "corpus")
-        run("ckpt1")
-        first = {r.doc_id for r in spark.read.parquet(index_dir).collect()}
-        assert first  # something was admitted
-
-        # fresh checkpoint over the same landing files: epoch ids restart
-        # at 0, every doc is an exact dup of the existing corpus
-        run("ckpt2")
-        after = {r.doc_id for r in spark.read.parquet(index_dir).collect()}
-        assert after == first  # nothing deleted, nothing re-admitted
-        runs = {
-            r["run"]
-            for r in spark.read.parquet(index_dir).select("run").collect()
-        }
-        assert len(runs) == 1  # second run admitted zero rows
-
-    def test_crash_replay_does_not_empty_its_own_epoch(self, spark, tmp_path):
-        """Crash AFTER the epoch's parquet write but BEFORE the checkpoint
-        commit: the replayed epoch used to see its own crashed write in the
-        index, flag every row a self-dup, and overwrite the epoch dir EMPTY
-        (permanent loss).  The screen must exclude this run's >= epochs."""
-        import os
-
-        from stellar_etl_spark.streaming.ingest import stream_ingest_corpus
-
-        docs = (
-            spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-            .select("doc_id", "text")
-            .orderBy("doc_id")
-            .limit(20)
-            .collect()
-        )
-        landing = tmp_path / "landing"
-        landing.mkdir()
-        spark.createDataFrame(
-            [(r.doc_id, r.text) for r in docs], "doc_id long, text string"
-        ).coalesce(1).write.parquet(str(landing / "b0"))
-        index_dir = str(tmp_path / "corpus")
-        ckpt = tmp_path / "ckpt"
-
-        def run():
-            stream = (
-                spark.readStream.schema("doc_id long, text string")
-                .parquet(str(landing / "b*"))
-            )
-            q = stream_ingest_corpus(stream, index_dir, checkpoint_dir=str(ckpt))
-            q.awaitTermination(120)
-
-        run()
-        first = {r.doc_id for r in spark.read.parquet(index_dir).collect()}
-        assert first
-
-        # simulate crash-before-commit: drop the commit marker so the same
-        # epoch replays against an index that already holds its own write
-        commit0 = ckpt / "commits" / "0"
-        assert commit0.exists()
-        os.remove(commit0)
-        crc = ckpt / "commits" / ".0.crc"
-        if crc.exists():  # local-fs checksum twin must go with the marker
-            os.remove(crc)
-        run()
-        after = {r.doc_id for r in spark.read.parquet(index_dir).collect()}
-        assert after == first  # replay rewrote the SAME rows, not zero rows
-
-    def test_refuses_foreign_index_layout(self, spark, tmp_path):
-        """index_dir holding non-run= entries (flat corpus files or the
-        pre-namespace epoch= layout) must fail at start(), not silently
-        skip dedup mid-stream."""
-        import pytest
-
-        from stellar_etl_spark.streaming.ingest import stream_ingest_corpus
-
-        index_dir = str(tmp_path / "corpus")
-        spark.createDataFrame(
-            [(1, "legacy")], "doc_id long, text string"
-        ).write.parquet(index_dir)  # flat layout
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .parquet(str(tmp_path / "nothing*"))
-        )
-        with pytest.raises(ValueError, match="non-run= entries"):
-            stream_ingest_corpus(
-                stream, index_dir, checkpoint_dir=str(tmp_path / "ckpt")
+        def drain():
+            (
+                read_ledger_files(spark, path, stream=True)
+                .select("sequence")
+                .writeStream.format("parquet")
+                .option("path", out)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+                .awaitTermination(120)
             )
 
-
-class TestStreamAggMaintenance:
-    def test_streamed_state_equals_full_aggregate(self, spark, tmp_path):
-        """Streaming partial states merged across epochs == one-shot batch
-        aggregate; maxFilesPerTrigger forces multiple epochs so the merge
-        actually exercises cross-epoch associativity."""
-        from stellar_etl_spark.streaming.agg_maintenance import (
-            merge_states,
-            partial_state,
-            read_merged_state,
-            stream_maintain_aggregate,
-        )
-
-        src = str(tmp_path / "landing")
-        rows = [
-            ("a", i % 7 - 3) for i in range(50)
-        ] + [("b", i % 11) for i in range(30)]
-        df = spark.createDataFrame(rows, "event_type string, cents long")
-        # several input files -> several micro-batches
-        df.repartition(4).write.mode("overwrite").parquet(src)
-
-        stream = (
-            spark.readStream.schema("event_type string, cents long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = stream_maintain_aggregate(
-            stream,
-            state_dir=str(tmp_path / "state"),
-            checkpoint_dir=str(tmp_path / "ckpt"),
-        )
-        q.awaitTermination(120)
-
-        merged = {
-            r.event_type: r
-            for r in read_merged_state(spark, str(tmp_path / "state")).collect()
-        }
-        full = {
-            r.event_type: r
-            for r in merge_states(
-                partial_state(df, "event_type", "cents"), "event_type"
-            ).collect()
-        }
-        assert set(merged) == {"a", "b"} == set(full)
-        for t in full:
-            m, f = merged[t], full[t]
-            assert (m.n_events, m.total_cents, m.min_cents, m.max_cents) == (
-                f.n_events, f.total_cents, f.min_cents, f.max_cents
-            )
-        # multiple epochs actually happened
-        import os
-
-        [run_dir] = [
-            d for d in os.listdir(str(tmp_path / "state"))
-            if d.startswith("run=")
-        ]
-        epochs = [
-            d
-            for d in os.listdir(str(tmp_path / "state" / run_dir))
-            if d.startswith("epoch=")
-        ]
-        assert len(epochs) >= 2
-
-    def test_foreign_state_dir_is_refused(self, spark, tmp_path):
-        """Additive partial states tolerate no foreign epochs: a reset
-        checkpoint replaying the source into a state_dir holding another
-        run's partials would double-count on merge — the stream must fail
-        at the first batch instead."""
-        from stellar_etl_spark.streaming.agg_maintenance import (
-            stream_maintain_aggregate,
-        )
-
-        state = tmp_path / "state"
-        (state / "run=deadbeef" / "epoch=0").mkdir(parents=True)
-        src_dir = tmp_path / "landing"
-        src_dir.mkdir()
-        spark.createDataFrame(
-            [("a", 100)], "event_type string, cents long"
-        ).write.parquet(str(src_dir / "b0"))
-        stream = (
-            spark.readStream.schema("event_type string, cents long")
-            .parquet(str(src_dir / "b*"))
-        )
-        q = stream_maintain_aggregate(
-            stream, str(state), checkpoint_dir=str(tmp_path / "ckpt")
-        )
-        import pytest
-
-        with pytest.raises(Exception, match="another run|double-count"):
-            q.awaitTermination(120)
-
-    def test_epoch_replay_is_idempotent(self, spark, tmp_path):
-        """Rewriting an epoch directory with the same batch (the replay
-        path after a crash between sink write and offset commit) leaves the
-        merged state unchanged."""
-        from stellar_etl_spark.streaming.agg_maintenance import (
-            partial_state,
-            read_merged_state,
-        )
-
-        state = str(tmp_path / "state")
-        df = spark.createDataFrame(
-            [("a", 1), ("a", 5), ("b", -2)], "event_type string, cents long"
-        )
-        ps = partial_state(df, "event_type", "cents")
-        ps.write.mode("overwrite").parquet(state + "/epoch=0")
-        before = {r.event_type: r for r in read_merged_state(spark, state).collect()}
-        # replay: same epoch, same deterministic rows, overwrite
-        ps.write.mode("overwrite").parquet(state + "/epoch=0")
-        after = {r.event_type: r for r in read_merged_state(spark, state).collect()}
-        assert before.keys() == after.keys()
-        for t in before:
-            assert before[t] == after[t]
+        drain()
+        # a ledger of the next 64-ledger window lands 30 days old
+        self._mk_files(tmp_path, [70])
+        month_ago = time.time() - 30 * 86400
+        os.utime(os.path.join(path, "00000070.xdr.zst"), (month_ago, month_ago))
+        drain()
+        got = sorted(r.sequence for r in spark.read.parquet(out).collect())
+        assert got == [2, 3, 4, 70]
