@@ -11,13 +11,13 @@ counted by the write job itself: an int for a single-table export,
 ``{name: rows}`` for the multi-table ones.
 
 Ledger entry changes are compacted per ``batch_size``-ledger window (64 by
-default), as the reference
-compacts one ChangeBatch at a time (input/changes.go:61-64), and each
-entity is written as one ``batch_id=<window>`` directory per window, the
-reference's one ``{start}-{end}-{type}`` output per batch
-(command_utils.go:105-111).  A write replaces only the windows it holds,
-so re-exporting a window is idempotent; ``--stream`` relies on that when it
-re-exports every window a micro-batch touches.
+default), as the reference compacts one ChangeBatch at a time
+(input/changes.go:61-64), and each entity is written as one
+``batch_id=<window>`` directory per window, the reference's one
+``{start}-{end}-{type}`` output per batch (command_utils.go:105-111).  A
+write replaces only the windows it holds, so re-exporting a window is
+idempotent; ``--stream`` relies on that when it re-exports every window a
+micro-batch touches.
 
 Shape notes: a single-table pipeline is one Spark write job; a
 multi-table one (orderbooks, ledger entry changes) persists its input and
